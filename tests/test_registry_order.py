@@ -18,36 +18,23 @@ def test_priority_is_the_registry_prefix():
     assert tuple(order[: len(registry._PRIORITY)]) == registry._PRIORITY
 
 
-# queries whose CODE or published artifacts changed in round 9 (advisor
-# fixes to seeding/self-exclusion/router guard; interactive serving
-# kernel; serve rounds 10->6; SQL front-door grammar extension; syn300
-# ladder families re-proven) — each needs a fresh driver row
-_R9_CHANGED: tuple[str, ...] = (
-    "sql_routed_search_hydrated",  # new in round 9
-    "recursive_cte_knn_bfs",
-    "graph_ann_topk_search",
-    "sql_routed_graph_topk",
-    "sql_routed_topk",
-    "sql_routed_topk_multi",
-    "graph_ann_recall_bound",
-    "graph_ann_build_bound",
-    "graph_ann_ivf_entries",
-    "graph_ann_incremental",
-    "graph_ann_delete_serve",
-    "graph_ann_compact_serve",
-    "graph_ann_beam_curve",
+# queries whose CODE changed since the last correctness-gate sample (the MinHash
+# kernel's vectorized min step and single evaluation per candidate call)
+# — each needs a fresh gate row
+_CHANGED: tuple[str, ...] = (
+    "dedup_minhash_lsh",
     "dedup_minhash_capped",
-    "dedup_simhash_capped",
-    "knn_graph_blocked",
+    "dedup_minhash_incremental",
+    "minhash_quality_audit",
 )
 
 
-def test_first_window_is_round9_rotation():
-    """Round-9 rotation contract: cumulative driver coverage closed at
-    261/261 in round 8, so the sampled prefix holds the sentinels, then
-    every query whose code or serving artifacts CHANGED this round
-    (fresh rows against the changed implementation), then a refresh
-    block of the stalest evidence (r3/r4-era latest samples)."""
+def test_first_window_stages_changed_queries():
+    """Rotation contract: cumulative gate coverage is closed, so the
+    sampled prefix holds the sentinels, then every query whose code
+    CHANGED since the last gate sample (fresh rows against the changed
+    implementation), then a refresh block of evidence the latest ledger
+    did not re-prove."""
     import json
     import os
 
@@ -56,27 +43,27 @@ def test_first_window_is_round9_rotation():
     assert sentinels <= set(window[:2])
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # pinned, not globbed: a ledger added after this window was staged
+    # samples the window itself and would read it as fresh
+    ledgers = [f"CORRECTNESS_r{n:02d}.json" for n in range(1, 11)]
     sampled: set[str] = set()
-    for n in range(1, 9):
-        with open(os.path.join(repo, f"CORRECTNESS_r0{n}.json")) as fh:
+    for f in ledgers:
+        with open(os.path.join(repo, f)) as fh:
             sampled.update(json.load(fh))
 
-    head = window[2 : 2 + len(_R9_CHANGED)]
-    assert set(head) == set(_R9_CHANGED), head
-    # refresh entries must be genuinely stale: nothing round-8-fresh may
-    # burn a refresh slot
-    with open(os.path.join(repo, "CORRECTNESS_r08.json")) as fh:
-        r8 = set(json.load(fh))
+    head = window[2 : 2 + len(_CHANGED)]
+    assert set(head) == set(_CHANGED), head
+    # refresh entries must be genuinely stale: nothing the latest ledger
+    # sampled may burn a refresh slot
+    with open(os.path.join(repo, ledgers[-1])) as fh:
+        latest = set(json.load(fh))
     fresh_refreshers = [
-        n
-        for n in window[2 + len(_R9_CHANGED) :]
-        if n in r8 and n not in _R9_CHANGED
+        n for n in window[2 + len(_CHANGED) :] if n in latest and n not in _CHANGED
     ]
     assert not fresh_refreshers, (
-        f"round-8-fresh queries burn refresh slots: {fresh_refreshers}"
+        f"{ledgers[-1]}-fresh queries burn refresh slots: {fresh_refreshers}"
     )
-    # every never-sampled query (only round-9 additions can be) must be
-    # inside the window
+    # every never-sampled query must be inside the window
     never = [n for n in registry.queries() if n not in sampled]
     missing = [n for n in never if n not in window]
     assert not missing, f"never-sampled queries outside the window: {missing}"

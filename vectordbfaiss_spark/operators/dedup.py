@@ -28,7 +28,7 @@ O(n^2) risk lives only inside a bucket, which is the point of LSH banding.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from vectordbfaiss_spark.session import fan_out
 
@@ -389,15 +389,15 @@ def minhash_signatures(
     and the DuckDB oracle implement identically; computing one digest per
     GROUP instead of per hash makes the signature aggregate ~4x cheaper).
     PURE MAP form (round 9): the signature is computed per document row
-    with array expressions — digest arrays over the distinct-shingle
-    array, then ``array_min`` of each 8-hex-char chunk — so there is NO
-    shingle explode and NO exchange anywhere in signature computation.
-    The previous explode + groupBy(min) form shuffled one row PER
-    (doc, shingle, 4 digests) — corpus x ~shingles-per-doc wide rows —
-    which is pure overhead when the minima are per-document reductions;
-    at the syn300 rung that stage was the failing straggler. Values are
-    identical: min over exploded rows == array_min over the same array
-    (hex-string minima are totally ordered; lexicographic either way).
+    from its distinct-shingle array (an Arrow kernel since round 10, see
+    below) — so there is NO shingle explode and NO exchange anywhere in
+    signature computation. The previous explode + groupBy(min) form
+    shuffled one row PER (doc, shingle, 4 digests) — corpus x
+    ~shingles-per-doc wide rows — which is pure overhead when the minima
+    are per-document reductions; at the syn300 rung that stage was the
+    failing straggler. Values are identical: min over exploded rows ==
+    the per-document min over the same array. The id column keeps its
+    input type.
 
     Preconditions / NULL semantics: rows with NULL ``text_col`` produce
     NO signature row — a deliberate (round-9 advisor) behavior change vs
@@ -430,48 +430,88 @@ def minhash_signatures(
     # groupBy(min) 812 s (the partial agg buffers ~corpus-many groups
     # per task and spills) — while this kernel runs the same math
     # through hashlib's C md5 in one streamed pass over Arrow batches.
-    # Output values are bit-identical: md5 hex lowercase == Spark/DuckDB
-    # md5; python str comparison on ASCII hex == UTF8String ordering.
-    _nh, _ng, _id = num_hashes, n_groups, id_col
+    #
+    # Min step: Python touches each shingle only for its ceil(H/4) raw
+    # md5 digests; everything after is numpy over one buffer per batch.
+    # The digests are viewed as big-endian uint32 (``>u4``), 4 per
+    # digest, and ``np.minimum.reduceat`` over the list offsets takes
+    # each document's per-hash minimum. The oracle's hash j of group g
+    # is the 8-hex-char substring j of md5('g:' || shingle), i.e. digest
+    # bytes 4j..4j+3 written most-significant nibble first; fixed-width
+    # lowercase hex compares in byte order exactly as the number it
+    # spells ('0'-'9' < 'a'-'f' in ASCII), so the ``>u4`` minimum IS the
+    # string minimum, and formatting it back as %08x is bit-identical to
+    # the Spark/DuckDB ``min(substr(md5(...), 8j+1, 8))``. A document
+    # with an empty shingle array gets a NULL signature, as the
+    # aggregate forms do. The id column passes through untouched, so the
+    # output id type is the input's.
+    _nh, _ng = num_hashes, n_groups
+    names = [id_col] + [f"mh{s}" for s in range(num_hashes)]
 
     def _sig(batches):
-        import pyarrow as pa
         from hashlib import md5
 
-        prefixes = [f"{g}:".encode() for g in range(_ng)]
-        nch = [min(4, _nh - g * 4) for g in range(_ng)]
-        names = [_id] + [f"mh{s}" for s in range(_nh)]
-        for b in batches:
-            t = pa.Table.from_batches([b])
-            ids = t.column(0).to_pylist()
-            shl = t.column(1).to_pylist()
-            cols: list = [[] for _ in range(_nh + 1)]
-            for rid, sh_ in zip(ids, shl):
-                mins = [None] * _nh
-                for s_ in sh_:
-                    sb = s_.encode()
-                    for g in range(_ng):
-                        h = md5(prefixes[g] + sb).hexdigest()
-                        base = g * 4
-                        for j in range(nch[g]):
-                            c = h[j * 8 : j * 8 + 8]
-                            k = base + j
-                            if mins[k] is None or c < mins[k]:
-                                mins[k] = c
-                cols[0].append(rid)
-                for k in range(_nh):
-                    cols[k + 1].append(mins[k])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.int64())]
-                + [pa.array(cols[k + 1], pa.string()) for k in range(_nh)],
-                names,
-            )
+        import numpy as np
+        import pyarrow as pa
 
-    out_schema = ", ".join(
-        [f"{id_col} long"] + [f"mh{s} string" for s in range(num_hashes)]
+        prefixes = [f"{g}:".encode() for g in range(_ng)]
+        for b in batches:
+            sh = b.column(1)
+            offs = np.asarray(sh.offsets, dtype=np.int64)
+            vals = sh.values.slice(offs[0], offs[-1] - offs[0]).to_pylist()
+            digests = b"".join(
+                [md5(p + s.encode()).digest() for s in vals for p in prefixes]
+            )
+            words = np.frombuffer(digests, dtype=">u4").reshape(len(vals), 4 * _ng)
+            nonempty = np.diff(offs) > 0
+            mins = np.zeros((len(offs) - 1, _nh), dtype=">u4")
+            mins[nonempty] = np.minimum.reduceat(
+                words[:, :_nh], offs[:-1][nonempty] - offs[0], axis=0
+            )
+            # %08x of every minimum, column-major: hash k's strings are
+            # the k-th run of 8 * rows hex chars in one buffer. Each
+            # column gets its own zero-based slice (Arrow IPC assumes
+            # offsets start at 0 for an unsliced array)
+            n = len(mins)
+            hexed = pa.py_buffer(mins.T.tobytes().hex().encode())
+            offsets = pa.py_buffer(np.arange(0, 8 * n + 1, 8, dtype=np.int32))
+            valid = None if nonempty.all() else pa.array(nonempty).buffers()[1]
+            cols = [
+                pa.StringArray.from_buffers(
+                    n, offsets, hexed.slice(8 * n * k, 8 * n), valid
+                )
+                for k in range(_nh)
+            ]
+            yield pa.RecordBatch.from_arrays([b.column(0)] + cols, names)
+
+    out_schema = T.StructType(
+        [shingled.schema[id_col]]
+        + [T.StructField(f"mh{s}", T.StringType()) for s in range(num_hashes)]
     )
     return shingled.select(F.col(id_col), F.col("_sh")).mapInArrow(
         _sig, out_schema
+    )
+
+
+def _band_keys(
+    sig: DataFrame, id_col: str, num_hashes: int, rows_per_band: int
+) -> DataFrame:
+    """(id, band, key) rows of a :func:`minhash_signatures` frame: band b's
+    key is its ``rows_per_band`` min-hashes joined by '|'."""
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat_ws(
+                    "|",
+                    *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)],
+                ).alias("key"),
+            )
+            for b in range(num_hashes // rows_per_band)
+        ]
+    )
+    return sig.select(F.col(id_col), F.explode(bands).alias("bk")).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
 
 
@@ -518,21 +558,14 @@ def minhash_band_candidates(
         # consumer (~4x the uncapped wall time at sf0.1). The checkpoint is
         # |docs| x num_hashes hex strings — corpus-linear and narrow.
         sig = sig.localCheckpoint(eager=True)
-    n_bands = num_hashes // rows_per_band
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|",
-                    *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)],
-                ).alias("key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    banded = sig.select(F.col(id_col), F.explode(bands).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    # hash-partitioned on the join key HERE, once: both self-join sides
+    # (and the guard's aggregate) then sit on one identical exchange,
+    # which exchange reuse shares — so the signature kernel runs once per
+    # call. Without it the planner may broadcast one side and give each
+    # side its own round-robin -> shingle -> kernel subtree (two kernel
+    # stages per uncapped call).
+    banded = _band_keys(sig, id_col, num_hashes, rows_per_band).repartition(
+        "band", "key"
     )
     if max_bucket is not None:
         # bucket size via AGGREGATE + SEMI-JOIN, deliberately NOT a window
@@ -664,30 +697,12 @@ def minhash_lsh_incremental(
         else minhash_signatures(existing, id_col, text_col, n, num_hashes)
     )
     sig_n = minhash_signatures(new, id_col, text_col, n, num_hashes)
-    n_bands = num_hashes // rows_per_band
-
-    def banded(sig):
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    ).alias("key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return sig.select(F.col(id_col), F.explode(bands).alias("bk")).select(
-            id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-        )
-
-    be = banded(sig_e).select(F.col(id_col).alias("existing_id"), "band", "key")
-    bn = banded(sig_n).select(F.col(id_col).alias("new_id"), "band", "key")
+    be = _band_keys(sig_e, id_col, num_hashes, rows_per_band).select(
+        F.col(id_col).alias("existing_id"), "band", "key"
+    )
+    bn = _band_keys(sig_n, id_col, num_hashes, rows_per_band).select(
+        F.col(id_col).alias("new_id"), "band", "key"
+    )
     candidates = (
         be.join(bn, ["band", "key"]).select("existing_id", "new_id").distinct()
     )

@@ -75,69 +75,71 @@ _loaded = False
 #   closing cumulative coverage at 255/255;
 #   round 7 rotated to: sentinels + round-7 additions + the stalest
 #   round-1/round-2 evidence (cumulative coverage stayed closed);
-#   round 8 (this order): sentinels + every query whose CODE changed
-#   this round (the whole graph-ANN audit family — shared published
-#   traversals + hardened delete/insert witnesses — plus the
-#   re-aggregated quality_prune_tradeoff and the memoized-embedder
-#   checksum), then the stalest evidence: the 18 queries whose latest
-#   driver sample is round 2, then the oldest round-3 block, in their
+#   round 8: sentinels + every query whose CODE changed that round
+#   (the graph-ANN audit family, quality_prune_tradeoff, the memoized-
+#   embedder checksum), then the stalest evidence;
+#   round 9 staged its changed queries the same way, and round 10 kept
+#   that window;
+#   this order: sentinels + every query whose code changed with the
+#   vectorized MinHash kernel (one kernel evaluation per candidate call),
+#   then the stalest hash-verified evidence: the 38 queries whose latest
+#   gate sample is round 4, then the oldest round-5 block, each in its
 #   historical sample order.
 _PRIORITY: tuple[str, ...] = (
     # sentinels: flagship operators re-proven every round
     "topk_search",
     "ingest_index_build",
-    # ---- round-9 changed queries (need fresh driver rows) ----
-    "sql_routed_search_hydrated",  # NEW: embed() + hydration front door
-    "recursive_cte_knn_bfs",       # frontier broadcast hint
-    "graph_ann_topk_search",       # interactive kernel, rounds 6
-    "sql_routed_graph_topk",       # interactive kernel via router
-    "sql_routed_topk",             # router code touched (grammar ext)
-    "sql_routed_topk_multi",
-    "graph_ann_recall_bound",      # artifacts rebuilt: rounds 10->6,
-    "graph_ann_build_bound",       # seed anti-join order
-    "graph_ann_ivf_entries",
-    "graph_ann_incremental",
-    "graph_ann_delete_serve",
-    "graph_ann_compact_serve",
-    "graph_ann_beam_curve",
-    "dedup_minhash_capped",        # syn300 ladder families re-proven
-    "dedup_simhash_capped",
-    "knn_graph_blocked",
-    # refresh block: stalest evidence (latest sample round 3)
-    "schema_evolution_read",
-    "entity_resolution_golden",
-    "entity_resolution_incremental",
-    "join_size_estimate",
-    "ivf_nprobe_curve",
-    "maxsim_late_interaction",
-    "snapshot_vacuum_audit",
-    "corpus_health_report",
-    "mixture_sampling_plan",
+    # ---- changed queries (need fresh gate rows) ----
+    "dedup_minhash_lsh",           # MinHash kernel: vectorized min step,
+    "dedup_minhash_capped",        # one evaluation per candidate call
     "dedup_minhash_incremental",
-    "dedup_survivors",
-    "leakage_safe_split_assign",
-    "q13_customer_distribution",
-    "q16_supplier_relationship",
-    "q6_forecast_revenue",
-    "q12_shipping_priority_split",
-    "q4_order_priority_checking",
-    "q10_returned_item_revenue",
-    "q14_promo_revenue_pct",
-    "q18_large_volume_orders",
-    "range_join_orders_events",
-    "approx_percentiles_order_value",
-    "sessionize_events_batch",
-    "interval_join_click_purchase",
-    "session_window_builtin",
-    "skew_salted_event_totals",
-    "window_nth_value_events",
-    # refresh block: next-oldest (latest sample round 4)
-    "ivf_tombstone_search",
-    "pq_recall_bound",
-    "ivfpq_recall_bound",
-    "bpe_fertility_by_lang",
-    "dp_noised_event_counts",
+    "minhash_quality_audit",
+    # refresh block: stalest evidence (latest sample round 4)
     "scd2_event_intervals",
+    "funnel_view_click_purchase",
+    "retention_cohorts_weekly",
+    "daily_gapfill_event_counts",
+    "latest_event_per_user",
+    "null_safe_join_status",
+    "embedding_norm_health",
+    "exists_not_exists_customers",
+    "ntile_percent_rank_orders",
+    "grouping_sets_lineitem",
+    "stats_summary_lineitem",
+    "regexp_extract_all_docs",
+    "median_mode_orders",
+    "min_max_by_orders",
+    "datetime_functions_orders",
+    "null_handling_suppliers",
+    "array_set_functions",
+    "higher_order_array_funcs",
+    "unpivot_lineitem_measures",
+    "bitwise_agg_lineitem",
+    "trending_types_daily_top2",
+    "map_functions_events",
+    "decimal_exact_revenue",
+    "fuzzy_name_match",
+    "explode_outer_long_words",
+    "zscore_outlier_events",
+    "incremental_daily_agg",
+    "histogram_order_values",
+    "profile_orders_table",
+    "variant_json_extract_events",
+    "ewma_daily_counts",
+    "bool_aggregates_orders",
+    "fk_integrity_audit",
+    "hll_distinct_users_daily_merge",
+    "sql_lateral_view_tokens",
+    "cms_heavy_hitters",
+    "orc_roundtrip_supplier",
+    "ivf_recall_bound",
+    # refresh block: next-oldest (latest sample round 5)
+    "sqlite_roundtrip_docs",
+    "snapshot_pinned_read_docs",
+    "text_repetition_filter",
+    "crossdoc_span_dedup",
+    "winnowing_fingerprints",
+    "q7_volume_shipping",
 )
 
 
