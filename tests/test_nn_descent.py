@@ -103,3 +103,50 @@ def test_init_edges_are_included_as_candidates(spark):
     got = nn_descent(emb, k=4, rounds=1, init_edges=init)
     hits = {(r.src, r.dst) for r in got.select("src", "dst").collect()} & exact
     assert len(hits) / len(exact) >= 0.95
+
+
+def test_self_pairs_in_init_edges_never_become_edges(spark):
+    emb = _clustered_corpus(spark, n=40)
+    init = emb.select(F.col("vec_id").alias("src"), F.col("vec_id").alias("dst"))
+    for rounds in (0, 1):
+        rows = nn_descent(emb, k=3, rounds=rounds, init_edges=init).collect()
+        assert rows and all(r.src != r.dst for r in rows), rounds
+
+
+def test_one_round_scores_each_pair_once(spark, monkeypatch):
+    """The mirror step plans no distinct aggregate (canonical pairs are
+    unique and src < dst, so a pair and its mirror never coincide), and
+    the scoring joins see only canonical src < dst rows, once each."""
+    from vectordbfaiss_spark.operators import nn_descent as nd
+
+    scored_inputs, mirrored = [], []
+    score_edges, top_k_mirrored = nd._score_edges, nd._top_k_mirrored
+
+    def spy_score(pairs, *a):
+        scored_inputs.append(pairs)
+        return score_edges(pairs, *a)
+
+    def spy_mirror(*a):
+        out = top_k_mirrored(*a)
+        mirrored.append(out)
+        return out
+
+    monkeypatch.setattr(nd, "_score_edges", spy_score)
+    monkeypatch.setattr(nd, "_top_k_mirrored", spy_mirror)
+    emb = _clustered_corpus(spark, n=60)
+    nd.nn_descent(emb, k=4, rounds=1)
+    assert len(scored_inputs) == len(mirrored) == 2  # init + one round
+
+    for pairs in scored_inputs:
+        rows = [(r.src, r.dst) for r in pairs.collect()]
+        assert rows and all(s < d for s, d in rows)
+        assert len(rows) == len(set(rows))
+    for out in mirrored:
+        # from the top-k output down to the first multi-input node: that
+        # node is the mirror union, with no aggregate above it
+        node, above = out._jdf.queryExecution().optimizedPlan(), []
+        while node.children().size() == 1:
+            above.append(node.nodeName())
+            node = node.children().apply(0)
+        assert node.nodeName() == "Union", node.nodeName()
+        assert "Aggregate" not in above, above

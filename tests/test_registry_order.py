@@ -18,10 +18,26 @@ def test_priority_is_the_registry_prefix():
     assert tuple(order[: len(registry._PRIORITY)]) == registry._PRIORITY
 
 
-# queries whose CODE changed since the last correctness-gate sample (the MinHash
-# kernel's vectorized min step and single evaluation per candidate call)
-# — each needs a fresh gate row
+# queries whose CODE changed since the last correctness-gate sample (the
+# O(d) l2_normalize, the interactive graph kernel's own scores, NN-Descent's
+# one score per pair, the SQL router's one-partition query block; the
+# MinHash kernel's vectorized min step and single evaluation per candidate
+# call) — each needs a fresh gate row
 _CHANGED: tuple[str, ...] = (
+    "ivf_topk_search",
+    "ivf_disk_search",
+    "pq_rerank_topk",
+    "ivfpq_topk_search",
+    "label_centroids",
+    "ivf_nprobe_curve",
+    "graph_ann_topk_search",
+    "sql_routed_graph_topk",
+    "sql_routed_topk",
+    "sql_routed_topk_multi",
+    "sql_routed_search_hydrated",
+    "sql_routed_pq_filtered",
+    "sql_routed_score_projection",
+    "graph_ann_build_bound",
     "dedup_minhash_lsh",
     "dedup_minhash_capped",
     "dedup_minhash_incremental",

@@ -63,6 +63,20 @@ def test_low_nprobe_prunes_partitions(spark, tmp_path):
     assert routed.count() == 5
 
 
+def test_routed_query_block_is_one_jvm_row(spark, tmp_path):
+    """The statement's query vector enters the plan as one JVM-side row in
+    one partition, not as a Python-RDD scan: each task of such a scan
+    starts a Python worker ahead of the routing kernel."""
+    name = _ivf(spark, tmp_path, "t_router_qblock")
+    sql = (
+        f"SELECT * FROM {name} ORDER BY "
+        f"cosine_similarity(embedding, array({_LITS})) DESC LIMIT 5"
+    )
+    plan = route_topk_sql(spark, sql, nprobe=1)._jdf.queryExecution().executedPlan()
+    assert "ExistingRDD" not in plan.toString()
+    assert "Range (0, 1, step=1, splits=1)" in plan.toString()
+
+
 def test_unmatched_sql_falls_back_verbatim(spark, tmp_path):
     _ivf(spark, tmp_path, "t_router_fb")
     out = route_topk_sql(spark, "SELECT 1 + 1 AS two")

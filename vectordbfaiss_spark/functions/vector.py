@@ -1,4 +1,4 @@
-"""Vector math as pure column expressions (JVM-side, codegen-friendly).
+"""Vector math as pure column expressions (JVM-side, no Python UDF).
 
 Reference semantics: cosine similarity composed from dot product and L2
 norms — ``/root/reference/server.js:45-61`` (`cosineSimilarity` at
@@ -14,6 +14,14 @@ Scale note (SURVEY §4.3): at index-build time call :func:`l2_normalize`
 once and store normalized vectors; then cosine degenerates to :func:`dot`,
 saving two norms per scored pair — the reference recomputes norms per pair.
 No Python UDF anywhere in the hot scoring path.
+
+Cost model: ``zip_with``/``transform``/``aggregate`` are ``CodegenFallback``
+expressions — they run INTERPRETED, element by element, with no common-
+subexpression elimination. A higher-order function's ARGUMENTS evaluate
+once per row, but an outer expression referenced inside its lambda BODY
+re-evaluates once per element. So every per-row scalar (a norm) is passed
+in as an argument, never closed over: one :func:`dot` is O(d) per row, and
+a dot inside a lambda body would make the row O(d^2).
 """
 
 from __future__ import annotations
@@ -25,7 +33,8 @@ def dot(a: Column | str, b: Column | str) -> Column:
     """Dot product of two float arrays (reference server.js:47).
 
     ``aggregate(zip_with(a, b, *), 0.0, +)`` — element-wise multiply then
-    left-to-right double accumulation; stays inside whole-stage codegen.
+    left-to-right double accumulation, evaluated interpreted (see the
+    module's cost model).
     """
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
@@ -52,8 +61,18 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
 
 def l2_normalize(a: Column | str) -> Column:
     """Scale an array to unit L2 norm (index-build normalize-once,
-    SURVEY §4.3). Returns DOUBLE array; zero vectors map to NULL elements.
+    SURVEY §4.3). Returns a DOUBLE array: each element divided by the
+    row's norm. The norm is computed ONCE per row and handed to the
+    per-element lambda as a repeated array argument, so a row costs O(d).
+
+    NULL stays NULL and ``[]`` stays ``[]``; a NaN element makes every
+    element NaN. A zero vector divides by zero: under ANSI mode (the
+    session default) that raises ``DIVIDE_BY_ZERO``, with ANSI off its
+    elements are NULL. Filter zero-norm rows upstream.
     """
     a = F.col(a) if isinstance(a, str) else a
-    n = l2_norm(a)
-    return F.transform(a.cast("array<double>"), lambda x: x / n)
+    return F.zip_with(
+        a.cast("array<double>"),
+        F.array_repeat(l2_norm(a), F.size(a)),
+        lambda x, n: x / n,
+    )

@@ -347,11 +347,10 @@ def _list_col_to_mat(col):
     return flat.reshape(n, len(flat) // n) if n else flat.reshape(0, 0)
 
 
-def _beam_search_visited_pairs(
-    ids, mat, src, dst, q_ids, q_mat, beam, rounds, n_entries
-):
+def _beam_search_visited(ids, mat, src, dst, q_ids, q_mat, beam, rounds, n_entries):
     """The full hash-entry beam traversal over in-memory arrays:
-    returns the visited (query_id, vec_id) pairs as two int64 arrays.
+    returns the visited (query_id, vec_id, score) rows as two int64
+    arrays and one float64 array.
 
     Exact replay of the BSP operator's selection semantics: seed =
     first ``n_entries`` ids by (xxhash64(id), id); each round expands
@@ -360,8 +359,8 @@ def _beam_search_visited_pairs(
     Scores used for the comparisons are bit-identical to the JVM
     expression cosine: float64 products in array index order,
     left-to-right accumulation, IEEE sqrt/divide, HALF_UP 6dp rounding
-    (see the helpers above) — membership of the visited set is
-    therefore the same set the per-round JVM jobs produced."""
+    (see the helpers above) — so the visited set AND its scores are the
+    ones the per-round JVM jobs produce."""
     import numpy as np
 
     ids = np.asarray(ids, dtype=np.int64)
@@ -393,6 +392,7 @@ def _beam_search_visited_pairs(
 
     out_q: list = []
     out_v: list = []
+    out_s: list = []
     for qi in range(len(q_ids)):
         qid = int(q_ids[qi])
         qv = np.ascontiguousarray(q_mat[qi])
@@ -423,10 +423,15 @@ def _beam_search_visited_pairs(
                 visited[int(ids[r])] = float(sc)
         out_q.extend([qid] * len(visited))
         out_v.extend(visited.keys())
+        out_s.extend(visited.values())
     return (
         np.asarray(out_q, dtype=np.int64),
         np.asarray(out_v, dtype=np.int64),
+        np.asarray(out_s, dtype=np.float64),
     )
+
+
+_VISITED_SCHEMA = "query_id long, vec_id long, score double"
 
 
 def graph_beam_search_interactive(
@@ -455,13 +460,13 @@ def graph_beam_search_interactive(
     the Q-bounded query block that reads the published edge artifact
     and the vector store (``edges_path`` / ``emb_path``, the traversal
     columns only) straight from storage, replays all rounds in-kernel,
-    and emits the visited (query_id, vec_id) pairs. Scores in-kernel
-    are bit-identical doubles to the JVM expression cosine (see
-    ``_beam_search_visited_pairs``), and the RETURNED scores are then
-    computed by the same ``_score_against_queries`` join the BSP path
-    uses — output values are JVM-derived by construction, the kernel
-    only decides set membership. At 100 TB the index shard must fit the
-    serving node, which is the standard graph-ANN serving contract; for
+    and emits the visited (query_id, vec_id, score) rows directly. The
+    kernel's scores are the doubles the BSP path's rounded JVM cosine
+    gives: it replays the same float64 operations in the same order (see
+    ``_beam_search_visited``), and tests/test_graph_ann.py compares the
+    two paths' full tuples, scores included. So no re-scoring join
+    follows the kernel. At 100 TB the index shard must fit the serving
+    node, which is the standard graph-ANN serving contract; for
     corpus-sized query sets use :func:`graph_beam_search`, whose state
     stays distributed.
 
@@ -505,24 +510,21 @@ def graph_beam_search_interactive(
             src = gt.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
             dst = gt.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
             ne = _ne if _ne is not None else max(16, len(ids) // 32)
-            qarr, varr = _beam_search_visited_pairs(
+            qarr, varr, sarr = _beam_search_visited(
                 ids, mat, src, dst, q_ids, q_mat, _beam, _rounds, ne
             )
             yield pa.RecordBatch.from_arrays(
-                [pa.array(qarr, pa.int64()), pa.array(varr, pa.int64())],
-                ["query_id", "vec_id"],
+                [
+                    pa.array(qarr, pa.int64()),
+                    pa.array(varr, pa.int64()),
+                    pa.array(sarr, pa.float64()),
+                ],
+                ["query_id", "vec_id", "score"],
             )
 
         # single-partition 1-row driver: exactly ONE kernel task (a
         # multi-partition input would run the closure once per task)
-        pairs = spark.range(0, 1, 1, 1).mapInArrow(
-            _run, "query_id long, vec_id long"
-        )
-        # re-score from the already-collected block — broadcasting the
-        # original `queries` subtree would re-run its scan a second time
-        queries = spark.createDataFrame(
-            q_rows, queries.select("query_id", "query_vec").schema
-        )
+        return spark.range(0, 1, 1, 1).mapInArrow(_run, _VISITED_SCHEMA)
     else:
         import numpy as np
 
@@ -535,7 +537,7 @@ def graph_beam_search_interactive(
         ids = epdf["vec_id"].to_numpy(np.int64)
         mat = np.stack([np.asarray(v, np.float64) for v in epdf["embedding"]])
         ne = n_entries if n_entries is not None else max(16, len(ids) // 32)
-        qarr, varr = _beam_search_visited_pairs(
+        qarr, varr, sarr = _beam_search_visited(
             ids,
             mat,
             gpdf["src"].to_numpy(np.int64),
@@ -550,11 +552,7 @@ def graph_beam_search_interactive(
         )
         import pandas as pd
 
-        pairs = spark.createDataFrame(
-            pd.DataFrame({"query_id": qarr, "vec_id": varr}),
-            "query_id long, vec_id long",
+        return spark.createDataFrame(
+            pd.DataFrame({"query_id": qarr, "vec_id": varr, "score": sarr}),
+            _VISITED_SCHEMA,
         )
-    emb_named = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    return _score_against_queries(F.broadcast(pairs), queries, emb_named)

@@ -20,15 +20,16 @@ rounds whose total work is O(N * k^2) per round:
    candidate set for each node is its neighbors' neighbors (forward and
    reverse edges both contribute, exactly as in the paper), generated by
    ONE self-equi-join of the symmetrized edge list; candidates are
-   scored with the expression cosine and each node keeps its top-k.
-   Reverse-degree is CAPPED at ``2k`` per node (the paper's reverse
-   sampling) so a hub node cannot make its join group quadratic.
+   folded to unordered pairs, each pair is scored ONCE with the
+   expression cosine and applied to both endpoints, and each node keeps
+   its top-k. Reverse-degree is CAPPED at ``2k`` per node (the paper's
+   reverse sampling) so a hub node cannot make its join group quadratic.
 
 Spark-first shape: every step is an equi-join or a per-key window — no
-crossJoin, no driver collect, no UDF in the hot path (scoring is the
-codegen'd expression cosine). Per-round lineage is cut with an eager
-``localCheckpoint`` (the pagerank/BPE loop discipline). All shuffles key
-on node ids, so AQE handles residual skew.
+crossJoin, no driver collect, no UDF in the hot path (scoring is one
+JVM ``dot`` per pair over per-node norms). Per-round lineage is cut
+with an eager ``localCheckpoint`` (the pagerank/BPE loop discipline).
+All shuffles key on node ids, so AQE handles residual skew.
 
 Determinism: bucket assignment and reverse-cap ranks use ``xxhash64``
 (seeded by column content only), scores are rounded to 6dp BEFORE
@@ -40,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from vectordbfaiss_spark.functions.vector import cosine_similarity
+from vectordbfaiss_spark.functions.vector import dot, l2_norm
 
 _REV_CAP_MULT = 2  # reverse-degree cap = _REV_CAP_MULT * k (paper: sample)
 
@@ -87,21 +88,34 @@ def clique_init_edges(
 
 
 def _score_edges(
-    cand: DataFrame, emb: DataFrame, id_col: str, vec_col: str
+    pairs: DataFrame, emb: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """(src, dst) -> + score: two shuffle-hash lookup joins into the
     embedding store (corpus-grain sides are NEVER broadcast — that is
-    the OOM class the 100x audit eliminated), then the expression
-    cosine rounded to the registry's 6dp convention."""
-    a = emb.select(F.col(id_col).alias("src"), F.col(vec_col).alias("_va"))
-    b = emb.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("_vb"))
+    the OOM class the 100x audit eliminated), then the cosine rounded to
+    the registry's 6dp convention. Each node's norm rides next to its
+    vector, computed once per node per join side, so a pair costs one
+    :func:`dot` — the same ``dot / (|a| * |b|)`` value
+    :func:`cosine_similarity` gives, without its two per-pair norms."""
+    a = emb.select(
+        F.col(id_col).alias("src"),
+        F.col(vec_col).alias("_va"),
+        l2_norm(vec_col).alias("_na"),
+    )
+    b = emb.select(
+        F.col(id_col).alias("dst"),
+        F.col(vec_col).alias("_vb"),
+        l2_norm(vec_col).alias("_nb"),
+    )
     return (
-        cand.join(a.hint("SHUFFLE_HASH"), "src")
+        pairs.join(a.hint("SHUFFLE_HASH"), "src")
         .join(b.hint("SHUFFLE_HASH"), "dst")
         .select(
             "src",
             "dst",
-            F.round(cosine_similarity("_va", "_vb"), 6).alias("score"),
+            F.round(dot("_va", "_vb") / (F.col("_na") * F.col("_nb")), 6).alias(
+                "score"
+            ),
         )
     )
 
@@ -118,18 +132,33 @@ def _top_k_per_src(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _canonical_pairs(cand: DataFrame) -> DataFrame:
+    """Directed candidates -> unordered pairs, one row each as
+    (least, greatest). Self pairs are dropped: a node is never its own
+    neighbor, whatever the caller's ``init_edges`` hold."""
+    return (
+        cand.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+        )
+        .distinct()
+    )
+
+
 def _top_k_mirrored(
     cand: DataFrame, emb: DataFrame, k: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Score candidates once, then let every comparison update BOTH
-    endpoints' lists (cosine is symmetric — the paper applies each
-    computed distance to both sides) before the per-node top-k."""
-    scored = _score_edges(cand, emb, id_col, vec_col)
+    """Score each unordered candidate pair ONCE, then let the comparison
+    update BOTH endpoints' lists (cosine is symmetric — the paper applies
+    each computed distance to both sides) before the per-node top-k.
+    Canonical pairs have src < dst, so the pair and its mirror never
+    coincide and the union needs no de-duplication."""
+    scored = _score_edges(_canonical_pairs(cand), emb, id_col, vec_col)
     both = scored.unionByName(
         scored.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "score"
         )
-    ).distinct()
+    )
     return _top_k_per_src(both, k)
 
 
@@ -172,7 +201,7 @@ def nn_descent(
         cliques
         if init_edges is None
         else cliques.unionByName(init_edges.select("src", "dst"))
-    ).distinct()
+    )
     edges = _top_k_mirrored(cand, emb, k, id_col, vec_col)
     edges = edges.localCheckpoint(eager=True)
 
@@ -212,18 +241,12 @@ def nn_descent(
         # linear in N
         left = samp.select(F.col("src").alias("h_src"), F.col("dst").alias("h_mid"))
         right = samp.select(F.col("src").alias("h_mid"), F.col("dst").alias("h_dst"))
-        hops = (
-            left.join(right, "h_mid")
-            .select(F.col("h_src").alias("src"), F.col("h_dst").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
+        hops = left.join(right, "h_mid").select(
+            F.col("h_src").alias("src"), F.col("h_dst").alias("dst")
         )
-        cand = (
-            hops.unionByName(fwd)
+        cand = hops.unionByName(fwd).unionByName(
             # fresh exploration pairs every round (paper's rho-sampling)
-            .unionByName(
-                clique_init_edges(emb, m=m_init, salt=1000 + r, id_col=id_col, n=n)
-            )
-            .distinct()
+            clique_init_edges(emb, m=m_init, salt=1000 + r, id_col=id_col, n=n)
         )
         edges = _top_k_mirrored(cand, emb, k, id_col, vec_col)
         edges = edges.localCheckpoint(eager=True)

@@ -548,8 +548,12 @@ def route_topk_sql(spark: SparkSession, sql: str, nprobe: int = 4) -> DataFrame:
         return spark.sql(sql)
     qvec = _resolve_qvec(m.group("vec"), m.group("qt"))
     k = int(m.group("k"))
-    queries = spark.createDataFrame(
-        [(0, qvec)], "query_id LONG, query_vec ARRAY<FLOAT>"
+    # one JVM-side row in one partition: a createDataFrame list is a
+    # Python-RDD scan over every default partition, and each of those
+    # tasks must start a Python worker before the routing kernel runs
+    queries = spark.range(0, 1, 1, 1).select(
+        F.lit(0).cast("long").alias("query_id"),
+        F.array(*[F.lit(x) for x in qvec]).cast("array<float>").alias("query_vec"),
     )
     if g_tbl is not None:
         # graph-ANN route: beam search over the published edge artifact,

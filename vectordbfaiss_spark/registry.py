@@ -90,6 +90,20 @@ _PRIORITY: tuple[str, ...] = (
     "topk_search",
     "ingest_index_build",
     # ---- changed queries (need fresh gate rows) ----
+    "ivf_topk_search",             # l2_normalize: one norm per row
+    "ivf_disk_search",
+    "pq_rerank_topk",
+    "ivfpq_topk_search",
+    "label_centroids",
+    "ivf_nprobe_curve",
+    "graph_ann_topk_search",       # interactive graph kernel emits its
+    "sql_routed_graph_topk",       # own scores (no re-scoring join);
+    "sql_routed_topk",             # router: one-partition JVM query block
+    "sql_routed_topk_multi",
+    "sql_routed_search_hydrated",
+    "sql_routed_pq_filtered",
+    "sql_routed_score_projection",
+    "graph_ann_build_bound",       # NN-Descent: one score per pair
     "dedup_minhash_lsh",           # MinHash kernel: vectorized min step,
     "dedup_minhash_capped",        # one evaluation per candidate call
     "dedup_minhash_incremental",
@@ -124,22 +138,7 @@ _PRIORITY: tuple[str, ...] = (
     "incremental_daily_agg",
     "histogram_order_values",
     "profile_orders_table",
-    "variant_json_extract_events",
-    "ewma_daily_counts",
-    "bool_aggregates_orders",
-    "fk_integrity_audit",
-    "hll_distinct_users_daily_merge",
-    "sql_lateral_view_tokens",
-    "cms_heavy_hitters",
-    "orc_roundtrip_supplier",
     "ivf_recall_bound",
-    # refresh block: next-oldest (latest sample round 5)
-    "sqlite_roundtrip_docs",
-    "snapshot_pinned_read_docs",
-    "text_repetition_filter",
-    "crossdoc_span_dedup",
-    "winnowing_fingerprints",
-    "q7_volume_shipping",
 )
 
 

@@ -8,8 +8,13 @@ cluster manager there).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # numpy >= 1.22 madvises MADV_HUGEPAGE for every allocation past ~4 MB.
@@ -38,6 +43,61 @@ def _disable_numpy_hugepage_madvise() -> None:
 
 
 _disable_numpy_hugepage_madvise()
+
+# Local-mode file system whose setPermission stays in the JVM. Hadoop's
+# default (no native library) spawns `chmod` for every file and directory
+# a DataFrame write creates: dozens of process spawns per index build,
+# each briefly mirroring the JVM's whole resident set. The class is
+# compiled once per source hash next to its source; without javac the
+# session keeps Hadoop's default.
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_LOCAL_FS_CLASS = "vectordbfaiss.NioLocalFileSystem"
+
+
+def _local_fs_classes() -> str | None:
+    """Directory holding the compiled local file system, or None."""
+    src = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+    with open(src, "rb") as fh:
+        digest = hashlib.sha1(fh.read()).hexdigest()[:12]
+    out = os.path.join(_JVM_DIR, "build", digest)
+    if os.path.isdir(out):
+        return out
+    java_home = os.environ.get("JAVA_HOME")
+    javac = os.path.join(java_home, "bin", "javac") if java_home else shutil.which("javac")
+    if not javac or not os.path.exists(javac):
+        return None
+    from pyspark.find_spark_home import _find_spark_home
+
+    cp = os.path.join(_find_spark_home(), "jars", "*")
+    tmp = None
+    try:
+        os.makedirs(os.path.dirname(out), exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=os.path.dirname(out))
+        cmd = [javac, "--release", "8", "-Xlint:-options", "-cp", cp, "-d", tmp, src]
+        if subprocess.run(cmd, capture_output=True, timeout=300).returncode == 0:
+            os.rename(tmp, out)  # atomic; a concurrent build may win the race
+    except (OSError, subprocess.TimeoutExpired):
+        pass
+    if tmp is not None:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _local_fs_config(builder, master: str):
+    """Put the local file system on the builder when the JVM can load it:
+    this call launches the JVM (class path set here) or the running JVM
+    already has the class."""
+    if not master.startswith("local"):
+        return builder
+    jvm = SparkContext._jvm
+    if jvm is None:
+        classes = _local_fs_classes()
+        if classes is None:
+            return builder
+        builder = builder.config("spark.driver.extraClassPath", classes)
+    elif not jvm.org.apache.spark.util.Utils.classIsLoadable(_LOCAL_FS_CLASS):
+        return builder
+    return builder.config("spark.hadoop.fs.file.impl", _LOCAL_FS_CLASS)
 
 
 def get_spark(
@@ -90,6 +150,7 @@ def get_spark(
     )
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)
+    builder = _local_fs_config(builder, master)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
