@@ -1,41 +1,13 @@
-"""Bucketed co-located joins (no Exchange) and salted skew mitigation
-(exact results)."""
+"""Salted skew mitigation gives exact results."""
 
 from __future__ import annotations
 
-import pathlib
-
 from pyspark.sql import functions as F
 
-from vectordbfaiss_spark.operators.skew import salted_join, salted_sum
-from vectordbfaiss_spark.plans.bucketing import bucketed_join, write_bucketed
+from vectordbfaiss_spark.operators.skew import salted_sum
 from vectordbfaiss_spark.session import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path: pathlib.Path):
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    ).withColumnRenamed("l_orderkey", "okey")
-    o = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_totalprice"
-    ).withColumnRenamed("o_orderkey", "okey")
-    write_bucketed(li, "b_lineitem", "okey", 8, str(tmp_path / "bli"))
-    write_bucketed(o, "b_orders", "okey", 8, str(tmp_path / "bor"))
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketed_join(spark, "b_lineitem", "b_orders", "okey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan  # co-located: zero shuffles
-        # and the result is the plain join's result
-        expected = li.join(o, "okey").count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
 
 
 def test_salted_sum_is_exact(spark):
@@ -46,17 +18,4 @@ def test_salted_sum_is_exact(spark):
     )
     a = {(r[0], round(r[1], 6), r[2]) for r in salted.collect()}
     b = {(r[0], round(r[1], 6), r[2]) for r in plain.collect()}
-    assert a == b
-
-
-def test_salted_join_is_exact(spark):
-    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    salted = salted_join(li, o, "l_orderkey", n_salts=4, salt_source="l_quantity")
-    plain = li.join(o, "l_orderkey")
-    assert salted.count() == plain.count()
-    a = sorted(map(tuple, salted.collect()))
-    b = sorted(map(tuple, plain.collect()))
     assert a == b

@@ -1,24 +1,23 @@
-"""Streaming graph-ANN delta-segment maintenance
-(streaming/graph_index_stream): two-microbatch ingest produces one
-segment per batch, inserted nodes are reachable through the serving
-view, and compaction re-applies the degree cap without losing
-reachability."""
+"""Graph-ANN delta-segment maintenance
+(operators/graph_ann_incremental): two appended batches produce one
+segment each, inserted nodes are reachable through the serving view, and
+compaction re-applies the degree cap without losing reachability."""
 
 from __future__ import annotations
 
 import pathlib
 
 import numpy as np
-from pyspark.sql import Window as W, functions as F
+from pyspark.sql import functions as F
 
 from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
 from vectordbfaiss_spark.operators.graph_ann_incremental import (
     compact_graph,
+    graph_index_append,
+    list_segments,
     read_graph,
 )
 from vectordbfaiss_spark.operators.nn_descent import nn_descent
-from vectordbfaiss_spark.streaming.graph_index_stream import start_graph_index_ingest
-from vectordbfaiss_spark.streaming.vector_index_stream import list_segments
 
 
 def _corpus(spark, n=90, dim=12, seed=5):
@@ -42,35 +41,14 @@ def test_stream_insert_serves_new_nodes_and_compacts(spark, tmp_path: pathlib.Pa
         base_path
     )
 
-    src = tmp_path / "incoming"
-    src.mkdir()
     segroot = str(tmp_path / "segments")
-    ckpt = str(tmp_path / "ckpt")
-
-    new1.coalesce(1).write.mode("overwrite").parquet(str(src / "b1"))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    start_graph_index_ingest(
-        stream, base_path, base_emb, segroot, ckpt, k=6, beam=12, rounds=4
-    ).awaitTermination(180)
-    assert len(list_segments(segroot)) == 1
-
-    new2.coalesce(1).write.mode("overwrite").parquet(str(src / "b2"))
-    stream2 = (
-        spark.readStream.schema(emb.schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    # checkpoint skips b1: exactly one NEW segment appears
-    start_graph_index_ingest(
-        stream2, base_path, base_emb, segroot, ckpt, k=6, beam=12, rounds=4
-    ).awaitTermination(180)
-    assert len(list_segments(segroot)) == 2
+    base_edges = spark.read.parquet(base_path).select("src", "dst")
+    for i, batch in enumerate([new1, new2]):
+        graph_index_append(
+            batch, base_edges, base_emb, f"{segroot}/delta_{i:05d}",
+            k=6, beam=12, rounds=4,
+        )
+        assert len(list_segments(segroot)) == i + 1
 
     # every inserted node is reachable through the serving view: search
     # with the inserted vectors as queries and require self-discovery

@@ -42,31 +42,6 @@ def test_empty_chunk_is_identity(spark):
     assert _rows(finalize(merge_states(state, empty))) == _rows(finalize(state))
 
 
-def test_streaming_mv_matches_batch_aggregate(spark, tmp_path):
-    from vectordbfaiss_spark.streaming.incremental_mv import start_incremental_mv
-
-    ev = load_table(spark, SF_DIR, "events").select("ts", "event_type", "value")
-    src = tmp_path / "mv_src"
-    for i in range(3):
-        ev.filter(F.col("ts").cast("long") % 3 == i).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = start_incremental_mv(
-        stream, str(tmp_path / "mv_state"), str(tmp_path / "mv_ckpt")
-    )
-    q.awaitTermination(300)
-    assert len(q.recentProgress) >= 3  # state folded across >1 microbatch
-
-    got = finalize(spark.read.parquet(str(tmp_path / "mv_state")))
-    want = finalize(partial_daily_state(ev))
-    assert _rows(got) == _rows(want)
-
-
 def test_ewma_matches_pandas_adjusted(spark):
     """The window-cumsum EWMA must equal pandas ewm(adjust=True).mean()."""
     from vectordbfaiss_spark.registry import queries

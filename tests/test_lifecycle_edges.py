@@ -19,8 +19,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_append_empty_delta_publishes_readable_segment(spark, tmp_path: pathlib.Path):
     """An empty ingest batch must still publish a well-formed (empty)
-    segment — the streaming path guards with take(1), but the batch API
-    must not corrupt the layout if handed zero rows."""
+    segment — the append API must not corrupt the layout if handed zero
+    rows."""
     emb = load_table(spark, SF_DIR, "embeddings")
     base = str(tmp_path / "base")
     centroids = build_ivf_index(emb, base, n_clusters=4, seed=42)
@@ -60,12 +60,12 @@ def test_vacuum_keeps_everything_when_keep_last_exceeds_versions(spark, tmp_path
 
 
 def test_vacuum_never_removes_current_even_if_old(spark, tmp_path):
-    """After a rollback, the CURRENT version may be among the oldest —
-    retention must still never delete it."""
+    """A writer that crashed after its data landed but before the pointer
+    swap leaves a published version NEWER than the current one — retention
+    must still never delete the current version."""
     from vectordbfaiss_spark.sources.snapshots import (
         _versions,
         current_version,
-        snapshot_rollback,
         snapshot_vacuum,
         snapshot_write,
     )
@@ -74,11 +74,11 @@ def test_vacuum_never_removes_current_even_if_old(spark, tmp_path):
     table = str(tmp_path / "snap")
     for bound in (10, 20, 30, 40):
         snapshot_write(docs.filter(F.col("doc_id") < bound), table)
-    snapshot_rollback(table, 1)
+    docs.write.parquet(f"{table}/v=5")  # data + _SUCCESS, no pointer swap
     removed = snapshot_vacuum(table, keep_last=1)
-    assert 1 not in removed
-    assert current_version(table) == 1
-    assert 1 in _versions(table)
+    assert removed == [1, 2, 3]
+    assert current_version(table) == 4
+    assert _versions(table) == [4, 5]
 
 
 def test_maxsim_self_retrieval_is_rank_one(spark):

@@ -1,165 +1,7 @@
-"""Bounded-state streaming dedup + small-file compaction."""
+"""Z-order layout: the registry audit's zone maps prune on both
+dimensions."""
 
 from __future__ import annotations
-
-import pathlib
-
-from pyspark.sql import functions as F
-
-from vectordbfaiss_spark.operators.maintenance import compact_parquet, table_file_stats
-from vectordbfaiss_spark.session import load_table
-from vectordbfaiss_spark.streaming.ingest_stream import stream_dedup
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path: pathlib.Path):
-    """Duplicated event rows arriving in-stream are dropped exactly once;
-    output matches batch dropDuplicates on the same keys."""
-    # load_table normalizes the fixture's TIMESTAMP(NANOS) ts to a real
-    # timestamp — watermarks require TimestampType
-    ev = load_table(spark, SF_DIR, "events").limit(500)
-    src = str(tmp_path / "src")
-    # two copies of every row: the stream must emit each event_id once
-    ev.union(ev).write.parquet(src)
-
-    stream = spark.readStream.schema(ev.schema).parquet(src)
-    deduped = stream_dedup(stream, ["event_id"], ts_col="ts", watermark="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d FROM dedup_sink").first()
-    want = ev.select("event_id").distinct().count()
-    assert got["n"] == got["d"] == want
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path: pathlib.Path):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    frag = str(tmp_path / "frag")
-    li.repartition(32).write.parquet(frag)
-    n_before, total = table_file_stats(spark, frag)
-    assert n_before == 32
-
-    out = str(tmp_path / "compact")
-    compact_parquet(spark, frag, out, target_file_bytes=max(total, 1))
-    n_after, _ = table_file_stats(spark, out)
-    assert n_after == 1
-    # lossless: same rows
-    a = spark.read.parquet(out)
-    assert a.count() == li.count()
-    assert a.exceptAll(li).isEmpty() and li.exceptAll(a).isEmpty()
-
-
-def test_compact_parquet_partitioned_one_file_per_dir(spark, tmp_path: pathlib.Path):
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    frag = str(tmp_path / "frag_part")
-    # fragmented partitioned layout: many files inside each status dir
-    o.repartition(8).write.partitionBy("o_orderstatus").parquet(frag)
-    out = str(tmp_path / "compact_part")
-    n = compact_parquet(spark, frag, out, partition_by=["o_orderstatus"])
-    assert n == o.select("o_orderstatus").distinct().count()
-    for d in pathlib.Path(out).glob("o_orderstatus=*"):
-        files = [f for f in d.iterdir() if not f.name.startswith(("_", "."))]
-        assert len(files) == 1, d
-    back = spark.read.parquet(out)
-    assert back.count() == o.count()
-
-
-def test_compact_sorted_clusters_row_groups(spark, tmp_path):
-    """After a sorted compaction, per-file parquet min/max ranges on the
-    sort key must be (near-)disjoint — the property min/max skipping needs.
-    Verified against the actual parquet footers via pyarrow."""
-    import pyarrow.parquet as pq
-
-    from vectordbfaiss_spark.operators.maintenance import compact_sorted
-    from vectordbfaiss_spark.session import load_table
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "sorted")
-    # scatter the key across many small files (worst-case layout)
-    load_table(spark, "/root/testdata/sf0.001", "orders").repartition(
-        8
-    ).write.parquet(src)
-    compact_sorted(spark, src, out, ["o_orderkey"], n_files=4)
-
-    ranges = []
-    for f in pathlib.Path(out).glob("*.parquet"):
-        md = pq.ParquetFile(str(f)).metadata
-        idx = {md.schema.column(i).name: i for i in range(len(md.schema))}[
-            "o_orderkey"
-        ]
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) == 4
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint: a range filter prunes whole files
-
-    # rewrite is lossless
-    a = spark.read.parquet(src).orderBy("o_orderkey").collect()
-    b = spark.read.parquet(out).orderBy("o_orderkey").collect()
-    assert a == b
-
-
-def test_zorder_compact_prunes_on_both_dimensions(spark, tmp_path):
-    """Files after a Z-order rewrite are rectangles on the (custkey,
-    totalprice) grid: a selective range predicate on EITHER column must
-    rule out a majority of files by footer min/max alone — the property
-    a single-column sort only provides for its own sort key."""
-    import pyarrow.parquet as pq
-
-    from vectordbfaiss_spark.operators.maintenance import zorder_compact
-    from vectordbfaiss_spark.session import load_table
-
-    src = str(tmp_path / "zsrc")
-    out = str(tmp_path / "zout")
-    load_table(spark, "/root/testdata/sf0.01", "orders").repartition(
-        8
-    ).write.parquet(src)
-    zorder_compact(
-        spark, src, out, "o_custkey", "o_totalprice", bits=8, n_files=16
-    )
-
-    boxes = []
-    for f in pathlib.Path(out).glob("*.parquet"):
-        md = pq.ParquetFile(str(f)).metadata
-        idx = {md.schema.column(i).name: i for i in range(len(md.schema))}
-        stats = {}
-        for c in ("o_custkey", "o_totalprice"):
-            mins = [md.row_group(rg).column(idx[c]).statistics.min
-                    for rg in range(md.num_row_groups)]
-            maxs = [md.row_group(rg).column(idx[c]).statistics.max
-                    for rg in range(md.num_row_groups)]
-            stats[c] = (min(mins), max(maxs))
-        boxes.append(stats)
-    assert len(boxes) == 16
-
-    lo_k = min(b["o_custkey"][0] for b in boxes)
-    hi_k = max(b["o_custkey"][1] for b in boxes)
-    lo_p = min(b["o_totalprice"][0] for b in boxes)
-    hi_p = max(b["o_totalprice"][1] for b in boxes)
-
-    # bottom-eighth range query on each dimension independently
-    k_cut = lo_k + (hi_k - lo_k) / 8
-    p_cut = lo_p + (hi_p - lo_p) / 8
-    touch_k = sum(1 for b in boxes if b["o_custkey"][0] <= k_cut)
-    touch_p = sum(1 for b in boxes if b["o_totalprice"][0] <= p_cut)
-    assert touch_k <= 8, [b["o_custkey"] for b in boxes]
-    assert touch_p <= 8, [b["o_totalprice"] for b in boxes]
-
-    # rewrite is lossless
-    a = spark.read.parquet(src).orderBy("o_orderkey").collect()
-    b = spark.read.parquet(out).orderBy("o_orderkey").collect()
-    assert a == b
 
 
 def test_zorder_audit_buckets_prune_on_both_dimensions(spark):

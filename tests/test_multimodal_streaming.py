@@ -1,17 +1,8 @@
-"""Multimodal plumbing + streaming ingest tests."""
+"""Multimodal plumbing tests."""
 
 from __future__ import annotations
 
-import pathlib
-import time
-
-from pyspark.sql import functions as F
-
 from vectordbfaiss_spark.operators import multimodal as MM
-from vectordbfaiss_spark.streaming.ingest_stream import (
-    stream_ingest_text,
-    stream_windowed_event_counts,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,10 +20,6 @@ def test_multimodal_decode_features_frames(spark):
     again = {r["doc_id"]: (r["width"], r["height"]) for r in meta.collect()}
     assert all(again[r["doc_id"]] == (r["width"], r["height"]) for r in rows)
 
-    feats = MM.extract_features(media, dim=16).collect()
-    assert all(len(r["features"]) == 16 for r in feats)
-    assert all(abs(sum(x * x for x in r["features"]) - 1.0) < 1e-4 for r in feats)
-
     frames = MM.sample_frames(media, n_frames=4)
     counts = frames.groupBy("doc_id").count().collect()
     assert all(r["count"] == 4 for r in counts)
@@ -41,173 +28,3 @@ def test_multimodal_decode_features_frames(spark):
     pruned = media.select("doc_id", "media_type")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "payload" not in plan.split("ReadSchema")[-1][:200]
-
-
-def test_stream_ingest_text(spark, tmp_path: pathlib.Path):
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "one.txt").write_text(" ".join(f"a{i}" for i in range(12)))
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = stream_ingest_text(spark, str(src), store, ckpt, n=10, m=2, dim=8)
-    q.awaitTermination(120)
-    stored = spark.read.parquet(store)
-    assert stored.count() == 2  # 12 words, n=10 stride 8 -> 2 chunks
-    assert {"doc_id", "content", "embedding"} <= set(stored.columns)
-
-    # second run with one new file: only new chunks appended (exactly-once)
-    (src / "two.txt").write_text("b0 b1 b2")
-    q2 = stream_ingest_text(spark, str(src), store, ckpt, n=10, m=2, dim=8)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(store).count() == 3
-
-
-def test_stream_windowed_counts_matches_batch(spark):
-    """The streaming aggregation expression over a batch frame must equal
-    the plain batch aggregation (same F.window) — one code path, two modes."""
-    from vectordbfaiss_spark.session import load_table
-
-    ev = load_table(spark, SF_DIR, "events")
-    streaming_expr = stream_windowed_event_counts(ev, window="1 day")
-    batch = (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-    )
-    a = sorted(map(tuple, streaming_expr.collect()))
-    b = sorted(map(tuple, batch.collect()))
-    assert a == b
-
-
-def test_stream_ingest_neardup_suppresses_fuzzy_duplicates(spark, tmp_path):
-    from vectordbfaiss_spark.streaming.ingest_stream import stream_ingest_neardup
-
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    base = " ".join(f"w{i}" for i in range(30))
-
-    # batch 1: seed the store
-    (src / "a.txt").write_text(base + "\n")
-    q = stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    )
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(store).count()
-    assert n1 > 0
-
-    # batch 2: one near-duplicate of a stored chunk (one word changed in a
-    # 10-word window) + one genuinely new doc
-    near = base.replace("w5", "w5x")
-    (src / "b.txt").write_text(near + "\n")
-    fresh = " ".join(f"z{i}" for i in range(30))
-    (src / "c.txt").write_text(fresh + "\n")
-    # n=50 > doc length: one chunk per doc, so the near doc's Jaccard to
-    # its stored original is 25/31 ~ 0.81 — far above threshold and far up
-    # the banding S-curve, so suppression is deterministic
-    q2 = stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    )
-    q2.awaitTermination(120)
-    stored = spark.read.parquet(store)
-    n2 = stored.count()
-    # the fresh doc's chunks landed; the near-duplicate's mostly did not
-    fresh_chunks = stored.filter(stored.content.contains("z0")).count()
-    near_chunks = stored.filter(stored.content.contains("w5x")).count()
-    assert fresh_chunks > 0
-    assert near_chunks == 0, "near-duplicate chunks must be suppressed"
-    assert n2 > n1
-
-
-def test_stream_ingest_neardup_falls_back_without_sidecar(spark, tmp_path):
-    """A legacy store with no signature sidecar must still suppress near
-    dups (signatures recomputed from store text)."""
-    import shutil
-
-    from vectordbfaiss_spark.streaming.ingest_stream import stream_ingest_neardup
-
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    base = " ".join(f"w{i}" for i in range(30))
-    (src / "a.txt").write_text(base + "\n")
-    stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    ).awaitTermination(120)
-    shutil.rmtree(store + "_sigs")  # simulate a pre-sidecar store
-
-    (src / "b.txt").write_text(base.replace("w5", "w5x") + "\n")
-    stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    ).awaitTermination(120)
-    stored = spark.read.parquet(store)
-    assert stored.filter(stored.content.contains("w5x")).count() == 0
-
-
-def test_stream_ingest_neardup_in_batch_burst(spark, tmp_path):
-    """Two near-duplicates arriving in the SAME micro-batch: neither is in
-    the store yet, so store-comparison alone would admit both. The in-batch
-    fuzzy tier must keep exactly one representative of the pair."""
-    from vectordbfaiss_spark.streaming.ingest_stream import stream_ingest_neardup
-
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    base = " ".join(f"w{i}" for i in range(30))
-    near = base.replace("w5", "w5x")
-    fresh = " ".join(f"z{i}" for i in range(30))
-    (src / "a.txt").write_text(base + "\n")
-    (src / "b.txt").write_text(near + "\n")
-    (src / "c.txt").write_text(fresh + "\n")
-    stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    ).awaitTermination(120)
-    stored = spark.read.parquet(store)
-    assert stored.filter(stored.content.contains("z0")).count() > 0
-    base_n = stored.filter(
-        stored.content.contains("w5 ") & ~stored.content.contains("w5x")
-    ).count()
-    near_n = stored.filter(stored.content.contains("w5x")).count()
-    assert base_n + near_n == 1, (
-        f"exactly one of the near-dup pair must survive, got base={base_n} near={near_n}"
-    )
-
-
-def test_stream_ingest_neardup_survives_corrupt_sidecar(spark, tmp_path):
-    """A corrupt signature sidecar (bad parquet footer) is DERIVED data:
-    the micro-batch must rebuild it from store text and keep suppressing,
-    not fail schema inference forever."""
-    import pathlib
-    import shutil
-
-    from vectordbfaiss_spark.streaming.ingest_stream import stream_ingest_neardup
-
-    src = tmp_path / "in"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    base = " ".join(f"w{i}" for i in range(30))
-    (src / "a.txt").write_text(base + "\n")
-    stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    ).awaitTermination(120)
-    sig_dir = pathlib.Path(store + "_sigs")
-    shutil.rmtree(sig_dir)
-    sig_dir.mkdir()
-    (sig_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
-
-    (src / "b.txt").write_text(base.replace("w5", "w5x") + "\n")
-    stream_ingest_neardup(
-        spark, str(src), store, str(tmp_path / "ck"), n=50, m=2, dim=8,
-        jaccard_threshold=0.5,
-    ).awaitTermination(120)
-    stored = spark.read.parquet(store)
-    assert stored.filter(stored.content.contains("w5x")).count() == 0
-    # and the sidecar was republished readable
-    assert spark.read.parquet(store + "_sigs").count() > 0

@@ -22,7 +22,8 @@ def test_priority_is_the_registry_prefix():
 # O(d) l2_normalize, the interactive graph kernel's own scores, NN-Descent's
 # one score per pair, the SQL router's one-partition query block; the
 # MinHash kernel's vectorized min step and single evaluation per candidate
-# call) — each needs a fresh gate row
+# call; the interval join, Morton interleave and graph segment listing
+# moved into their queries' modules) — each needs a fresh gate row
 _CHANGED: tuple[str, ...] = (
     "ivf_topk_search",
     "ivf_disk_search",
@@ -42,6 +43,10 @@ _CHANGED: tuple[str, ...] = (
     "dedup_minhash_capped",
     "dedup_minhash_incremental",
     "minhash_quality_audit",
+    "interval_join_click_purchase",
+    "zorder_layout_audit",
+    "graph_ann_incremental",
+    "graph_ann_compact_serve",
 )
 
 

@@ -1,5 +1,5 @@
-"""Snapshot versioning: publish, pin, rollback, vacuum — reproducible
-corpus versions over plain parquet."""
+"""Snapshot versioning: publish, pin, vacuum — reproducible corpus
+versions over plain parquet."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from vectordbfaiss_spark.session import load_table
 from vectordbfaiss_spark.sources.snapshots import (
     current_version,
     snapshot_read,
-    snapshot_rollback,
     snapshot_vacuum,
     snapshot_write,
 )
@@ -31,12 +30,6 @@ def test_publish_read_rollback_vacuum(spark, tmp_path):
     # pinned read: v1 is still bit-addressable after v2 published
     assert snapshot_read(spark, table, version=1).count() == 30
 
-    snapshot_rollback(table, 1)
-    assert snapshot_read(spark, table).count() == 30
-
-    with pytest.raises(ValueError):
-        snapshot_rollback(table, 99)
-
     v3 = snapshot_write(docs, table)
     assert snapshot_read(spark, table).count() == docs.count()
     # vacuum keeps the newest two and never the current
@@ -54,11 +47,7 @@ def test_unpublished_table_raises(spark, tmp_path):
 def test_partial_version_not_published_but_numbering_skips_it(spark, tmp_path):
     import os
 
-    from vectordbfaiss_spark.sources.snapshots import (
-        _versions,
-        snapshot_rollback,
-        snapshot_write,
-    )
+    from vectordbfaiss_spark.sources.snapshots import _versions, snapshot_write
 
     table = str(tmp_path / "corpus")
     docs = load_table(spark, SF_DIR, "documents")
@@ -71,8 +60,6 @@ def test_partial_version_not_published_but_numbering_skips_it(spark, tmp_path):
         fh.write(b"garbage")
 
     assert _versions(table) == [1]  # unpublished => invisible to readers
-    with pytest.raises(ValueError):
-        snapshot_rollback(table, 2)  # cannot point at partial data
 
     # the next write must NOT collide with the partial directory
     v = snapshot_write(docs.filter(F.col("doc_id") < 20), table)

@@ -83,36 +83,3 @@ def test_text_bytes_survive_roundtrip_exactly(spark, tmp_path):
     assert len(back) == len(orig)
     for r in back:
         assert r["text"] == orig[r["doc_id"]]
-
-
-def test_streaming_shard_publish_batches_are_complete(spark, tmp_path):
-    import glob
-    import json as _json
-
-    from vectordbfaiss_spark.streaming.shard_publish import start_shard_publish
-
-    docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    src = tmp_path / "incoming"
-    out = str(tmp_path / "published")
-    src.mkdir()
-    docs.coalesce(1).write.mode("overwrite").parquet(str(src / "f1"))
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    start_shard_publish(
-        stream, out, str(tmp_path / "ckpt"), shards_per_batch=2
-    ).awaitTermination(120)
-
-    batch_dirs = sorted(glob.glob(os.path.join(out, "batch-*")))
-    assert len(batch_dirs) == 1
-    manifest = _json.load(open(os.path.join(batch_dirs[0], TS.MANIFEST)))
-    assert len(manifest["shards"]) == 2
-    assert manifest["total_samples"] == docs.count()
-    # published shards read back losslessly through the tar source
-    back = spark.read.format("tar_shards").option("path", batch_dirs[0]).load()
-    assert back.count() == docs.count()

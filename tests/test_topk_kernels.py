@@ -44,17 +44,6 @@ def test_vectorized_exclude_self(spark):
     assert len(res) == 30
 
 
-def test_grouped_map_topk_equals_window_topk(spark):
-    from vectordbfaiss_spark.operators.topk import topk_grouped_map
-
-    emb = _emb(spark)
-    q = _queries(emb, 15)
-    scored = score_pairs(q, emb).withColumn("score", F.round("score", 6))
-    win = topk(scored, 8).select("query_id", "vec_id", "score", "rank")
-    gm = topk_grouped_map(scored, 8)
-    assert sorted(map(tuple, win.collect())) == sorted(map(tuple, gm.collect()))
-
-
 def test_vectorized_exclude_self_masks_duplicate_ids(spark):
     """A corpus with repeated vec_ids (e.g. appended segments before
     compaction) must never return the query itself: the searchsorted

@@ -48,7 +48,7 @@ QUERIES = [
     "ivf_disk_search",
     "sequence_packing_bins",
     "crossdoc_span_scrub",
-    # relational / streaming-twin / index-build headliners over the
+    # relational / skew / sessionization / index-build headliners over the
     # FK-consistent replicated star (gen_scale_fixture.py)
     "q1_pricing_summary",
     "q10_returned_item_revenue",

@@ -14,7 +14,6 @@ Layout
 - ``sources``    : ingest pipelines (text dir -> chunk -> embed -> dedup ->
   parquet), CSV/JSON edges.
 - ``plans``      : batch index builds (IVF via KMeans + partition layout).
-- ``streaming``  : Structured Streaming ingest (incremental /add analog).
 
 Design stance (SURVEY.md §4, §7): DataFrame/SQL declarative plans so Catalyst
 does pruning/pushdown/broadcast; pandas_udf only where array semantics force

@@ -648,26 +648,15 @@ def minhash_lsh_incremental(
     rows_per_band: int = 2,
     threshold: float = 0.4,
     check_disjoint: bool = True,
-    existing_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-dup: which NEW documents near-duplicate an
     EXISTING store — the production shape of repeated ingest (daily batch
     vs published corpus), where the corpus self-join never happens.
 
-    ``existing_signatures`` (schema: id_col, mh0..mh{H-1}) supplies the
-    store's PRECOMPUTED MinHash signatures so the per-batch cost of the
-    banding side is one narrow scan instead of re-running the shingle
-    explode + hash aggregate over the whole corpus — maintain it as a
-    sidecar appended with each accepted batch (see
-    streaming.ingest_stream.stream_ingest_neardup). ``existing`` text is
-    still consulted, but only for the (tiny) candidate set during
-    verification.
-
     Same banding family as :func:`minhash_lsh_pairs`, but the candidate
-    join is existing-banded x new-banded (an A x B equi-join whose cost is
-    |new|-proportional, since band keys of the store can be precomputed
-    and reused across batches). Verification runs exact Jaccard over the
-    union restricted to candidate docs only. Output:
+    join is existing-banded x new-banded (an A x B equi-join, so no pair
+    inside the store is ever proposed). Verification runs exact Jaccard
+    over the union restricted to candidate docs only. Output:
     (existing_id, new_id, jaccard).
 
     REQUIRES disjoint id spaces: a doc_id present on both sides would
@@ -691,11 +680,7 @@ def minhash_lsh_incremental(
                 "must be deduped exactly (write_dedup_append) before "
                 "near-dup comparison"
             )
-    sig_e = (
-        existing_signatures
-        if existing_signatures is not None
-        else minhash_signatures(existing, id_col, text_col, n, num_hashes)
-    )
+    sig_e = minhash_signatures(existing, id_col, text_col, n, num_hashes)
     sig_n = minhash_signatures(new, id_col, text_col, n, num_hashes)
     be = _band_keys(sig_e, id_col, num_hashes, rows_per_band).select(
         F.col(id_col).alias("existing_id"), "band", "key"

@@ -1,8 +1,8 @@
 """Incremental graph-ANN maintenance: insert new vectors into a
 published search graph as immutable DELTA EDGE SEGMENTS — the HNSW
 ``add()`` lifecycle for the partitioned-parquet layout, closing the last
-asymmetry between the IVF family (``plans/ivf.py`` append/compact,
-``streaming/vector_index_stream.py``) and the graph family.
+asymmetry between the IVF family (``plans/ivf.py`` append/compact) and
+the graph family.
 
 Insert semantics follow the HNSW insertion algorithm (Malkov & Yashunin
 2018, public): each new point SEARCHES the existing graph for its
@@ -26,7 +26,11 @@ src-partitioned edge artifact.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+
+_SEG_PREFIX = "delta_"
 
 
 def graph_insert_edges(
@@ -90,19 +94,32 @@ def graph_index_append(
     rounds: int = 10,
 ) -> None:
     """Materialize one immutable delta segment for ``batch`` (idempotent
-    whole-directory overwrite — a replayed microbatch rewrites ITS OWN
-    segment, the vector_index_stream durability contract)."""
+    whole-directory overwrite — a replayed batch rewrites ITS OWN
+    segment). Name it ``<segments_root>/delta_<n>`` so
+    :func:`list_segments` serves it."""
     graph_insert_edges(
         batch, base_edges, base_emb, k=k, beam=beam, rounds=rounds
     ).repartition("src").write.mode("overwrite").parquet(seg_path)
+
+
+def list_segments(segments_root: str) -> list[str]:
+    """Completed segment paths (have a _SUCCESS marker), oldest first."""
+    if not os.path.isdir(segments_root):
+        return []
+    out = []
+    for name in sorted(os.listdir(segments_root)):
+        p = os.path.join(segments_root, name)
+        if name.startswith(_SEG_PREFIX) and os.path.isfile(
+            os.path.join(p, "_SUCCESS")
+        ):
+            out.append(p)
+    return out
 
 
 def read_graph(
     spark: SparkSession, base_path: str, segments_root: str
 ) -> DataFrame:
     """Serving view: base edge artifact ∪ all completed delta segments."""
-    from vectordbfaiss_spark.streaming.vector_index_stream import list_segments
-
     df = spark.read.parquet(base_path).select("src", "dst", "score")
     for seg in list_segments(segments_root):
         df = df.unionByName(spark.read.parquet(seg).select("src", "dst", "score"))

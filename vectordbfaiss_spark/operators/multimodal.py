@@ -1,5 +1,5 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata,
-with decode / feature-extraction / frame-sampling as Arrow-batched
+with decode / resize / frame-sampling as Arrow-batched
 ``mapInPandas`` stages.
 
 The reference is text-only; this module is the north-star extension for
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import hashlib
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -40,13 +39,6 @@ IMAGE_META_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
         T.StructField("channels", T.IntegerType()),
         T.StructField("format", T.StringType()),
-    ]
-)
-
-IMAGE_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
     ]
 )
 
@@ -103,29 +95,6 @@ def decode_image_metadata(df: DataFrame, id_col: str = "doc_id", payload_col: st
             )
 
     return df.select(id_col, payload_col).mapInPandas(kernel, IMAGE_META_SCHEMA)
-
-
-def extract_features(
-    df: DataFrame, dim: int = 16, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Feature-extraction stage: payload -> dense float vector.
-
-    Deterministic fake: md5-seeded pseudo-embedding, L2-normalized — the
-    same contract a CLIP/ViT encoder UDF would satisfy.
-    """
-
-    def kernel(batches):
-        for pdf in batches:
-            feats = []
-            for p in pdf[payload_col]:
-                h = hashlib.md5(bytes(p)).digest()
-                raw = np.frombuffer((h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype="<u4")
-                v = (raw.astype(np.float64) / 2**32) - 0.5
-                v /= np.linalg.norm(v) or 1.0
-                feats.append(v.astype(np.float32))
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), "features": feats})
-
-    return df.select(id_col, payload_col).mapInPandas(kernel, IMAGE_FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(

@@ -1,16 +1,11 @@
-"""Skew mitigation: salted aggregation and salted broadcast-replicated join.
+"""Skew mitigation: salted aggregation.
 
 AQE's skew-join splitting handles most runtime skew; salting is the
 explicit, planner-independent fallback for pathological keys (the one
-power-law key that owns 30% of a 100 TB fact table). Both forms preserve
-exact results:
-
-- salted aggregation: groupBy(key, salt) partial -> groupBy(key) final.
-  Decomposable aggregates only (sum/count/min/max); the partial stage
-  spreads one hot key over ``n_salts`` reducers.
-- salted join: the skewed (large) side gets a deterministic salt from a
-  high-entropy column; the small side is replicated n_salts times with
-  every salt value, so (key, salt) join equals the plain key join.
+power-law key that owns 30% of a 100 TB fact table). The result stays
+exact: groupBy(key, salt) partial -> groupBy(key) final. Decomposable
+aggregates only (sum/count/min/max); the partial stage spreads one hot key
+over ``n_salts`` reducers.
 """
 
 from __future__ import annotations
@@ -39,23 +34,3 @@ def salted_sum(
     return partial.groupBy(key).agg(
         F.sum("_s").alias(f"sum_{value}"), F.sum("_c").alias("n_rows")
     )
-
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    salt_source: str | None = None,
-) -> DataFrame:
-    """Exact inner equi-join with the large side's hot keys spread over
-    ``n_salts`` shuffle partitions; the small side is replicated x n_salts
-    (only viable when small is broadcast-ish — which is exactly the skewed
-    -join case worth salting)."""
-    cols_large = large.columns
-    cols_small = [c for c in small.columns if c != key]
-    salt = F.pmod(F.xxhash64(F.col(salt_source or cols_large[0])), F.lit(n_salts))
-    l_salted = large.withColumn("_salt", salt)
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
-    s_replicated = small.select("*", salts)
-    return l_salted.join(s_replicated, [key, "_salt"]).select(*cols_large, *cols_small)

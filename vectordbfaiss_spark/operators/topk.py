@@ -298,47 +298,3 @@ def topk_search(
     return winners.join(
         F.broadcast(hits), winners[index_id] == hits[doc_id], "left"
     ).drop(doc_id)
-
-
-def topk_grouped_map(
-    scored: DataFrame,
-    k: int,
-    query_id: str = "query_id",
-    index_id: str = "vec_id",
-    score: str = "score",
-) -> DataFrame:
-    """Per-query top-k as a grouped-map ``applyInPandas`` (SURVEY §4.3's
-    np.argpartition alternative to the ranking window): exact selection
-    without sorting the full group — O(N) partition + O(k log k) tail sort
-    per query vs the window's O(N log N). Same deterministic tie-break.
-
-    Same shuffle as the window (hash by query id); the win is in-group
-    selection cost when groups are large. Results identical to topk()
-    (asserted in tests).
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_schema = scored.select(query_id, index_id, score).schema.add("rank", "integer")
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf[score].to_numpy()
-        ids = pdf[index_id].to_numpy()
-        take = min(k, len(pdf))
-        if len(pdf) > take:
-            # argpartition on (-score, id): pack both into a structured sort key
-            part = np.argpartition(
-                np.rec.fromarrays([-s, ids], names=["ns", "id"]), take - 1, order=("ns", "id")
-            )[:take]
-            pdf = pdf.iloc[part]
-            s, ids = pdf[score].to_numpy(), pdf[index_id].to_numpy()
-        order = np.lexsort((ids, -s))
-        pdf = pdf.iloc[order].copy()
-        pdf["rank"] = np.arange(1, len(pdf) + 1, dtype="int32")
-        return pdf[[query_id, index_id, score, "rank"]]
-
-    return (
-        scored.select(query_id, index_id, score)
-        .groupBy(query_id)
-        .applyInPandas(kernel, out_schema)
-    )

@@ -662,8 +662,7 @@ def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Batch sessionization (gap-based; oracle-checkable twin of the streaming
-# applyInPandasWithState sessionizer in streaming/sessionize.py)
+# Batch sessionization (gap-based)
 # ---------------------------------------------------------------------------
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000
@@ -696,9 +695,7 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity closes a session) as a
     pure window pipeline: new-session flag from lag, session id as the
     running flag sum, then per-session aggregates. ONE shuffle on user_id
-    serves both windows and the final aggregate. This is the batch twin of
-    the stateful streaming sessionizer (streaming/sessionize.py) and the
-    oracle-checked form of its semantics."""
+    serves both windows and the final aggregate."""
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))

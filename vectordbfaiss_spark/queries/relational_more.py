@@ -1,6 +1,6 @@
-"""Late-round relational coverage: the batch twin of the stream-stream
-interval join, median/mode aggregates, nth_value/cume_dist windows, and
-bitwise aggregates.
+"""Late-round relational coverage: the click/purchase interval join,
+median/mode aggregates, nth_value/cume_dist windows, and bitwise
+aggregates.
 
 The reference has none of these (its only aggregate is COUNT(*) at
 server.js:67,149); they complete the aggregate/window family for the scaled
@@ -16,7 +16,7 @@ from vectordbfaiss_spark.registry import register
 from vectordbfaiss_spark.session import load_table
 
 # ---------------------------------------------------------------------------
-# Batch twin of the stream-stream interval join (streaming/stream_join.py)
+# Interval join: clicks with same-user purchases in a trailing window
 # ---------------------------------------------------------------------------
 
 _INTERVAL_JOIN_ORACLE = """
@@ -40,26 +40,27 @@ GROUP BY c.user_id
 
 @register("interval_join_click_purchase", _INTERVAL_JOIN_ORACLE)
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-stream interval join: purchases in the hour
-    BEFORE each click by the same user (streaming/stream_join.py runs the
-    identical condition with watermarks; tests/test_sessionize.py proves the
-    two modes agree).
+    """Interval join: purchases in the hour BEFORE each click (inclusive)
+    by the same user.
 
     Scale plan: equi on user_id + a time-range residual -> one shuffle on
-    user_id, range evaluated in codegen after the hash probe. In streaming
-    the same range predicate is what bounds each side's join state.
+    user_id, range evaluated in codegen after the hash probe.
     """
-    from vectordbfaiss_spark.streaming.stream_join import (
-        click_purchase_interval_join,
-    )
-
     e = load_table(spark, sf_dir, "events")
-    pairs = click_purchase_interval_join(
-        e.filter(F.col("event_type") == "click"),
-        e.filter(F.col("event_type") == "purchase"),
-        window_minutes=60,
+    c = e.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("ts").alias("click_ts")
     )
-    return pairs.groupBy("user_id").agg(
+    p = e.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("purchase_ts"),
+        F.round("value", 6).alias("purchase_value"),
+    )
+    cond = (
+        (c.user_id == p.p_user_id)
+        & (p.purchase_ts <= c.click_ts)
+        & (p.purchase_ts >= c.click_ts - F.expr("INTERVAL 60 MINUTES"))
+    )
+    return c.join(p, cond).groupBy("user_id").agg(
         F.count("*").alias("n_pairs"),
         F.round(F.sum("purchase_value"), 4).alias("total_value"),
     )
@@ -283,7 +284,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessionization via the BUILT-IN F.session_window aggregate —
     the groupBy form of the manual lag/flag/running-sum pipeline
     (`sessionize_events_batch`), and the same operator Structured
-    Streaming runs stateful (streaming/sessionize.py).
+    Streaming runs stateful.
 
     Boundary semantics: session_window merges rows only when windows
     STRICTLY overlap, i.e. a gap of exactly the 30-min timeout starts a

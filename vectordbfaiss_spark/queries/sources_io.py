@@ -913,15 +913,26 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Z-order layout audit (operators/maintenance.py::zorder_compact)
+# Z-order layout audit
 # ---------------------------------------------------------------------------
 
 _Z_BITS = 8
 _Z_BUCKETS = 16
 
 
+def _interleave_bits(qa, qb, bits: int):
+    """Morton/Z-value: interleave ``bits`` bits of two quantized longs —
+    pure column arithmetic (shifts + masks), fully codegen'd."""
+    z = F.lit(0).cast("long")
+    for i in range(bits):
+        bit_a = F.shiftright(qa, i).bitwiseAND(F.lit(1))
+        bit_b = F.shiftright(qb, i).bitwiseAND(F.lit(1))
+        z = z + F.shiftleft(bit_a, 2 * i) + F.shiftleft(bit_b, 2 * i + 1)
+    return z
+
+
 def _sql_interleave(qa: str, qb: str, bits: int = _Z_BITS) -> str:
-    """DuckDB replica of maintenance._interleave_bits — generated from the
+    """DuckDB replica of :func:`_interleave_bits` — generated from the
     same Python loop so the bit layout cannot drift."""
     terms = []
     for i in range(bits):
@@ -971,9 +982,9 @@ GROUP BY bucket
 def q_zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering as an auditable computation: quantize
     (o_custkey, o_totalprice) to an 8-bit grid, interleave to the Morton
-    value (the EXACT expression zorder_compact lays files out by —
-    operators/maintenance.py::_interleave_bits is reused, the oracle SQL
-    is generated from the same loop), split the z range into 16
+    value (the key a Z-order rewrite — Delta/Iceberg OPTIMIZE ZORDER BY —
+    range-partitions files on; the oracle SQL is generated from the same
+    loop as :func:`_interleave_bits`), split the z range into 16
     equal-width buckets (= prospective files) and report each bucket's
     min/max zone map plus whether a 10%-wide probe on EITHER dimension
     would have to scan it. The hash-check pins the bit layout; the
@@ -981,8 +992,6 @@ def q_zorder_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is asserted in tests/test_maintenance.py. Entirely map + one
     hash-agg; extrema come from two broadcast one-row aggregates, no
     window, no single-partition stage."""
-    from vectordbfaiss_spark.operators.maintenance import _interleave_bits
-
     orders = load_table(spark, sf_dir, "orders")
     ext = orders.agg(
         F.min("o_custkey").cast("double").alias("lo_a"),

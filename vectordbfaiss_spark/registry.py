@@ -81,9 +81,10 @@ _loaded = False
 #   round 9 staged its changed queries the same way, and round 10 kept
 #   that window;
 #   this order: sentinels + every query whose code changed with the
-#   vectorized MinHash kernel (one kernel evaluation per candidate call),
-#   then the stalest hash-verified evidence: the 38 queries whose latest
-#   gate sample is round 4, then the oldest round-5 block, each in its
+#   vectorized MinHash kernel (one kernel evaluation per candidate call)
+#   and the O(d) vector math, + the queries whose helpers moved in from
+#   the deleted streaming/maintenance modules, then the stalest
+#   hash-verified evidence (latest gate sample round 4), each in its
 #   historical sample order.
 _PRIORITY: tuple[str, ...] = (
     # sentinels: flagship operators re-proven every round
@@ -108,6 +109,10 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_minhash_capped",        # one evaluation per candidate call
     "dedup_minhash_incremental",
     "minhash_quality_audit",
+    "interval_join_click_purchase",  # helpers moved in from the deleted
+    "zorder_layout_audit",           # streaming and maintenance modules
+    "graph_ann_incremental",
+    "graph_ann_compact_serve",
     # refresh block: stalest evidence (latest sample round 4)
     "scd2_event_intervals",
     "funnel_view_click_purchase",
@@ -135,10 +140,6 @@ _PRIORITY: tuple[str, ...] = (
     "fuzzy_name_match",
     "explode_outer_long_words",
     "zscore_outlier_events",
-    "incremental_daily_agg",
-    "histogram_order_values",
-    "profile_orders_table",
-    "ivf_recall_bound",
 )
 
 

@@ -13,8 +13,8 @@ no extra dependency:
 - publishing is pointer-swap-last: data is fully written before
   ``_CURRENT`` moves, so a crashed writer leaves the table readable at the
   previous version (readers never see partial data);
-- rollback = move the pointer back; old versions stay addressable for
-  audits/repro until explicitly vacuumed.
+- old versions stay addressable (pinned reads) for audits/repro until
+  explicitly vacuumed.
 
 Scale notes: the pointer file is O(bytes) and read once per query plan —
 never per task. Snapshots share nothing (full copies), which is the
@@ -37,9 +37,8 @@ _VDIR = re.compile(r"^v=(\d+)$")
 def _versions(table_path: str) -> list[int]:
     """Published versions only: a version directory counts iff it carries
     Spark's ``_SUCCESS`` marker. A writer that crashes mid-write leaves a
-    partial ``v=n`` directory with no marker — without this check,
-    ``snapshot_write`` would skip over it (fine) but ``snapshot_rollback``
-    could point ``_CURRENT`` at unpublished partial data."""
+    partial ``v=n`` directory with no marker — without this check, a
+    pinned ``snapshot_read`` could serve unpublished partial data."""
     if not os.path.isdir(table_path):
         return []
     return sorted(
@@ -94,19 +93,9 @@ def snapshot_read(
         raise FileNotFoundError(f"no published version at {table_path}")
     if version is not None and version not in _versions(table_path):
         # a pinned read must never serve a crashed writer's partial v=n
-        # directory — same publication rule as rollback
+        # directory
         raise ValueError(f"version {version} is not published at {table_path}")
     return spark.read.parquet(os.path.join(table_path, f"v={v}"))
-
-
-def snapshot_rollback(table_path: str, version: int) -> None:
-    """Point the table back at an existing version (pointer move only)."""
-    if version not in _versions(table_path):
-        raise ValueError(f"version {version} does not exist at {table_path}")
-    tmp = os.path.join(table_path, f"{_CURRENT}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(version))
-    os.replace(tmp, os.path.join(table_path, _CURRENT))
 
 
 def snapshot_vacuum(table_path: str, keep_last: int = 2) -> list[int]:
