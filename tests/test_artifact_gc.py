@@ -10,7 +10,7 @@ import time
 from tools.artifact_gc import SWEEPABLE, audit, sweep
 
 
-def _mk_artifact(wh, name, src=None, key=None, meta_name="_ivf_meta.json"):
+def _mk_artifact(wh, name, src=None, key=None, meta_name="_artifact.json"):
     path = os.path.join(wh, name)
     os.makedirs(path, exist_ok=True)
     open(os.path.join(path, "_SUCCESS"), "w").close()
@@ -50,7 +50,7 @@ def test_audit_classifies_all_statuses(tmp_path):
     open(os.path.join(wh, "f_container", "delta_0", "_SUCCESS"), "w").close()
     # delta-style *_key with a revision suffix after the fingerprint
     _mk_artifact(wh, "g_delta")
-    with open(os.path.join(wh, "g_delta", "_ivf_meta.json"), "w") as fh:
+    with open(os.path.join(wh, "g_delta", "_artifact.json"), "w") as fh:
         json.dump(
             {"params": {"delta_key": _fingerprint(src) + "|rev3-v1"}}, fh
         )
@@ -63,9 +63,9 @@ def test_audit_classifies_all_statuses(tmp_path):
         fh.write("regenerated!")
     new_fp = _fingerprint(src)
     assert new_fp != stale_key
-    with open(os.path.join(wh, "a_current", "_ivf_meta.json"), "w") as fh:
+    with open(os.path.join(wh, "a_current", "_artifact.json"), "w") as fh:
         json.dump({"params": {"corpus_key": new_fp}}, fh)
-    with open(os.path.join(wh, "g_delta", "_ivf_meta.json"), "w") as fh:
+    with open(os.path.join(wh, "g_delta", "_artifact.json"), "w") as fh:
         json.dump({"params": {"delta_key": new_fp + "|rev3-v1"}}, fh)
 
     by = {r["name"]: r["status"] for r in audit(wh)}

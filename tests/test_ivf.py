@@ -88,7 +88,7 @@ def test_build_ivf_index_is_build_once(spark, tmp_path):
 
 
 def test_ivf_corrupt_meta_sidecar_rebuilds(spark, tmp_path):
-    """A truncated _ivf_meta.json next to a valid _SUCCESS (crash mid-
+    """A truncated _artifact.json next to a valid _SUCCESS (crash mid-
     publish) must trigger a rebuild, not raise forever; the rebuild
     republishes a readable sidecar atomically."""
     import json
@@ -100,7 +100,7 @@ def test_ivf_corrupt_meta_sidecar_rebuilds(spark, tmp_path):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     out = str(tmp_path / "ivf_idx")
     c1 = build_ivf_index(emb, out, n_clusters=4, corpus_key="k1")
-    meta_path = os.path.join(out, "_ivf_meta.json")
+    meta_path = os.path.join(out, "_artifact.json")
     with open(meta_path, "w") as fh:
         fh.write('{"params": {"corpus_key"')  # truncated mid-dump
     c2 = build_ivf_index(emb, out, n_clusters=4, corpus_key="k1")
@@ -134,7 +134,7 @@ def test_ivf_delta_append_is_build_once(spark, tmp_path):
     stamp2 = os.path.getmtime(os.path.join(dpath, "_SUCCESS"))
     assert stamp2 != stamp  # key change republishes
 
-    with open(os.path.join(dpath, "_delta_meta.json"), "w") as fh:
+    with open(os.path.join(dpath, "_artifact.json"), "w") as fh:
         fh.write('{"par')  # truncated sidecar: crash-mid-publish shape
     ivf_index_append(delta, centroids, dpath, delta_key="batch-v2")
     assert os.path.getmtime(os.path.join(dpath, "_SUCCESS")) != stamp2

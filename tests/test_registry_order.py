@@ -23,30 +23,56 @@ def test_priority_is_the_registry_prefix():
 # one score per pair, the SQL router's one-partition query block; the
 # MinHash kernel's vectorized min step and single evaluation per candidate
 # call; the interval join, Morton interleave and graph segment listing
-# moved into their queries' modules) — each needs a fresh gate row
+# moved into their queries' modules; every IVF, IVFPQ, kNN-edge, graph-ANN
+# and PQ-codebook query now locating, keying and publishing its artifacts
+# through artifacts.py) — each needs a fresh gate row
 _CHANGED: tuple[str, ...] = (
     "ivf_topk_search",
     "ivf_disk_search",
-    "pq_rerank_topk",
-    "ivfpq_topk_search",
-    "label_centroids",
+    "ivf_recall_report",
+    "ivf_recall_bound",
     "ivf_nprobe_curve",
-    "graph_ann_topk_search",
-    "sql_routed_graph_topk",
+    "ivf_tombstone_search",
+    "ivf_append_search",
+    "ivf_compact_search",
+    "pq_topk_search",
+    "pq_rerank_topk",
+    "pq_recall_bound",
+    "ivfpq_topk_search",
+    "ivfpq_recall_bound",
     "sql_routed_topk",
     "sql_routed_topk_multi",
     "sql_routed_search_hydrated",
-    "sql_routed_pq_filtered",
     "sql_routed_score_projection",
+    "sql_routed_pq_filtered",
+    "sql_routed_graph_topk",
+    "knn_graph_edges",
+    "knn_graph_blocked",
+    "knn_graph_blocked_scaled",
+    "knn_graph_incremental",
+    "mutual_knn_components",
+    "kcore_mutual_knn",
+    "label_propagation_knn",
+    "recursive_cte_knn_bfs",
+    "semantic_decontamination",
+    "semdedup_prune",
+    "semdedup_prune_scaled",
+    "semdedup_witness_bound",
+    "graph_ann_topk_search",
     "graph_ann_build_bound",
+    "graph_ann_recall_bound",
+    "graph_ann_ivf_entries",
+    "graph_ann_beam_curve",
+    "graph_ann_incremental",
+    "graph_ann_delete_serve",
+    "graph_ann_compact_serve",
+    "label_centroids",
     "dedup_minhash_lsh",
     "dedup_minhash_capped",
     "dedup_minhash_incremental",
     "minhash_quality_audit",
     "interval_join_click_purchase",
     "zorder_layout_audit",
-    "graph_ann_incremental",
-    "graph_ann_compact_serve",
 )
 
 

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Lifecycle audit for build-once artifacts under spark-warehouse/.
+"""Lifecycle audit for build-once artifacts under the store's root
+(``vectordbfaiss_spark.artifacts.ROOT``).
 
 Every published artifact (IVF/IVFPQ indexes, kNN edge lists, graph-ANN
 edges/visited/compacted frames, delta segments) is keyed by a
@@ -22,7 +23,8 @@ Statuses:
   is dead weight);
 - ``orphaned`` — the source path no longer exists;
 - ``corrupt``  — no parseable sidecar / missing _SUCCESS (an interrupted
-  publish; the build-once check already treats it as absent);
+  publish, including a temp dir a crashed build left behind; the
+  build-once check already treats it as absent);
 - ``unkeyed``  — sidecar has no corpus_key (not fingerprint-guarded;
   listed, never swept).
 
@@ -39,31 +41,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-WAREHOUSE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-)
+from vectordbfaiss_spark.artifacts import ROOT, SIDECAR, corpus_fingerprint  # noqa: E402
 
 SWEEPABLE = ("stale", "orphaned", "corrupt")
 
 
 def _sidecar(path: str) -> dict | None:
-    """First parseable ``_*.json`` sidecar in the artifact dir."""
+    """The artifact dir's parsed sidecar, or None."""
     try:
-        names = sorted(
-            n
-            for n in os.listdir(path)
-            if n.startswith("_") and n.endswith(".json")
-        )
-    except OSError:
+        with open(os.path.join(path, SIDECAR)) as fh:
+            return json.load(fh)
+    except (OSError, json.JSONDecodeError):
         return None
-    for n in names:
-        try:
-            with open(os.path.join(path, n)) as fh:
-                return json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-    return None
 
 
 def _dir_size(path: str) -> int:
@@ -77,11 +66,9 @@ def _dir_size(path: str) -> int:
     return total
 
 
-def audit(warehouse: str = WAREHOUSE) -> list[dict]:
+def audit(warehouse: str = ROOT) -> list[dict]:
     """One record per top-level artifact dir: name, size, status, and
     the source path its fingerprint points at."""
-    from vectordbfaiss_spark.plans.ivf import corpus_fingerprint
-
     out: list[dict] = []
     if not os.path.isdir(warehouse):
         return out
@@ -132,7 +119,7 @@ def audit(warehouse: str = WAREHOUSE) -> list[dict]:
     return out
 
 
-def sweep(warehouse: str = WAREHOUSE, delete: bool = False) -> list[dict]:
+def sweep(warehouse: str = ROOT, delete: bool = False) -> list[dict]:
     """Remove (or, dry-run, report) every sweepable artifact."""
     victims = [r for r in audit(warehouse) if r["status"] in SWEEPABLE]
     if delete:

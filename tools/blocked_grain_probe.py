@@ -34,7 +34,8 @@ def main() -> None:
     import pandas as pd
     from pyspark.sql import functions as F, types as T
 
-    from vectordbfaiss_spark.plans.ivf import assign_clusters, corpus_fingerprint
+    from vectordbfaiss_spark.artifacts import corpus_key
+    from vectordbfaiss_spark.plans.ivf import assign_clusters
     from vectordbfaiss_spark.session import get_spark, load_table
 
     combos: list[tuple[str, int]] = []
@@ -82,7 +83,7 @@ def main() -> None:
                 vec_col="nvec",
                 n_clusters=n_clusters,
                 seed=42,
-                corpus_key=f"{corpus_fingerprint(f'{sf_dir}/embeddings.parquet')}:probe{n_clusters}",
+                corpus_key=f"{corpus_key(sf_dir)}:probe{n_clusters}",
             )
             edges = assigned.drop("nvec").groupBy("cluster_id").applyInPandas(
                 kernel, schema

@@ -83,7 +83,9 @@ def main() -> None:
             shutil.rmtree(art, ignore_errors=True)
         fresh = not os.path.isfile(os.path.join(art, "_SUCCESS"))
         t0 = time.time()
-        edges = graph_ann_edges_published(spark, sf_dir, out_path=art)
+        edges = spark.read.parquet(
+            graph_ann_edges_published(spark, sf_dir, out_path=art)
+        )
         n_edges = edges.count()  # forces the full cold build + read-back
         t_build = time.time() - t0
 

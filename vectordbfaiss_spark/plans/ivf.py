@@ -28,26 +28,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+# corpus_fingerprint is re-exported: callers key ad-hoc IVF builds with it
+from vectordbfaiss_spark.artifacts import SIDECAR, corpus_fingerprint, publish  # noqa: F401
 from vectordbfaiss_spark.functions.vector import dot, l2_normalize
 from vectordbfaiss_spark.operators.topk import topk
-
-
-def corpus_fingerprint(path: str) -> str:
-    """Content-sensitive corpus key for centroid/index reuse: the path plus
-    mtime+size of every file under it — regenerating the source parquet in
-    place (same path, new data) yields a NEW key, so caches rebuild."""
-    import os
-
-    parts = [path]
-    if os.path.isfile(path):
-        st = os.stat(path)
-        parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
-    return "|".join(parts)
 
 
 def _fit_centroids(
@@ -288,84 +272,38 @@ def build_ivf_index(
 
     Build-once: an index is a PUBLISHED ARTIFACT, not a per-query
     computation — if ``out_path`` already holds a completed build with the
-    same (corpus_key, vec_col, n_clusters, seed) parameters (recorded in a
-    sidecar ``_ivf_meta.json``), the stored centroids are returned and
-    nothing is rewritten. Queries that share an index (the SQL router, the
+    same (corpus_key, vec_col, n_clusters, seed) parameters (recorded in
+    its sidecar, ``artifacts.publish``), the stored centroids are returned
+    and nothing is rewritten. Queries that share an index (the SQL router, the
     disk-search path) then pay the k-means fit + partitioned write ONCE per
     corpus version. Pass ``corpus_key=None`` to always rebuild.
     """
     # out_path can outlive a regenerated source corpus (the fixture parquet
     # is rewritten in place between rounds) — a plain path-valued corpus_key
-    # would serve stale clusters. Callers should pass corpus_fingerprint().
+    # would serve stale clusters. Callers should pass a content key
+    # (artifacts.corpus_key).
     params = {
         "corpus_key": corpus_key,
         "vec_col": vec_col,
         "n_clusters": n_clusters,
         "seed": seed,
     }
-    meta = _published_meta(out_path, "_ivf_meta.json", params, payload_key="centroids")
-    if corpus_key is not None and meta is not None:
+
+    def build(tmp: str) -> dict:
+        assigned, centroids = assign_clusters(
+            index, vec_col, n_clusters, seed, corpus_key=corpus_key
+        )
+        assigned.repartition("cluster_id").write.partitionBy("cluster_id").parquet(
+            tmp
+        )
+        return {"centroids": centroids}
+
+    centroids = publish(out_path, params, build)["centroids"]
+    if corpus_key is not None:
         # seed the in-process centroid cache too, so assign_clusters
         # callers with the same key skip the k-means fit as well
-        _CENTROID_CACHE[(corpus_key, vec_col, n_clusters, seed)] = meta[
-            "centroids"
-        ]
-        return meta["centroids"]
-
-    assigned, centroids = assign_clusters(
-        index, vec_col, n_clusters, seed, corpus_key=corpus_key
-    )
-    (
-        assigned.repartition("cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(out_path)
-    )
-    _publish_sidecar(
-        out_path, "_ivf_meta.json", {"params": params, "centroids": centroids}
-    )
+        _CENTROID_CACHE[(corpus_key, vec_col, n_clusters, seed)] = centroids
     return centroids
-
-
-def _published_meta(
-    artifact_path: str, meta_name: str, params: dict, payload_key: str | None = None
-) -> dict | None:
-    """Build-once check shared by every published-artifact writer: return
-    the sidecar dict iff the artifact is COMPLETE (_SUCCESS present),
-    its sidecar parses, its recorded params equal ``params``, and (when
-    ``payload_key`` is given) the payload is present. Any corruption — a
-    truncated sidecar from a crash mid-publish, a missing payload —
-    returns None so the caller rebuilds instead of erroring forever."""
-    import json
-    import os
-
-    meta_path = os.path.join(artifact_path, meta_name)
-    if not (
-        os.path.isfile(meta_path)
-        and os.path.isfile(os.path.join(artifact_path, "_SUCCESS"))
-    ):
-        return None
-    try:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        if payload_key is not None:
-            meta[payload_key]  # a sidecar missing its payload is corrupt
-    except (json.JSONDecodeError, KeyError, OSError):
-        return None
-    return meta if meta.get("params") == params else None
-
-
-def _publish_sidecar(artifact_path: str, meta_name: str, payload: dict) -> None:
-    """Atomic sidecar publish: write-then-rename, so a crash mid-dump can
-    never leave a truncated meta file next to a valid _SUCCESS."""
-    import json
-    import os
-
-    meta_path = os.path.join(artifact_path, meta_name)
-    tmp_path = meta_path + ".tmp"
-    with open(tmp_path, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp_path, meta_path)
 
 
 def ivf_search(
@@ -428,32 +366,25 @@ def ivf_index_append(
     source corpus AND the recipe that derives the batch from it; a
     source-only key silently serves a stale segment after a recipe
     change) — and an existing segment with the same key is left in
-    place, the same build-once contract as the base index. The sidecar
-    is written atomically (write-then-rename) AFTER the parquet publish,
-    so a crash mid-write can never leave a matching key over partial
-    data.
+    place, the same build-once contract as the base index
+    (``artifacts.publish``: the segment appears whole or not at all).
     """
     params = {"delta_key": delta_key, "vec_col": vec_col}
-    if delta_key is not None and _published_meta(
-        delta_path, "_delta_meta.json", params
-    ) is not None:
-        return
 
-    norm = delta.withColumn(
-        vec_col, l2_normalize(F.col(vec_col)).cast("array<float>")
-    )
-    assigned = (
-        _nearest_centroids(norm, vec_col, centroids, 1)
-        .select("*", F.element_at("cluster_ids", 1).alias("cluster_id"))
-        .drop("cluster_ids")
-    )
-    (
-        assigned.repartition("cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(delta_path)
-    )
-    _publish_sidecar(delta_path, "_delta_meta.json", {"params": params})
+    def build(tmp: str) -> None:
+        norm = delta.withColumn(
+            vec_col, l2_normalize(F.col(vec_col)).cast("array<float>")
+        )
+        assigned = (
+            _nearest_centroids(norm, vec_col, centroids, 1)
+            .select("*", F.element_at("cluster_ids", 1).alias("cluster_id"))
+            .drop("cluster_ids")
+        )
+        assigned.repartition("cluster_id").write.partitionBy("cluster_id").parquet(
+            tmp
+        )
+
+    publish(delta_path, params, build)
 
 
 def ivf_compact(
@@ -477,17 +408,15 @@ def ivf_compact(
     so a later call re-compacts when segments are added OR when an
     existing segment is republished with new content under an unchanged
     caller key. A basename-only check would silently serve the stale fold
-    in the second case. Atomic at the sidecar: a crash mid-write leaves
-    no matching params over partial data.
+    in the second case.
     """
     import json
     import os
 
     def _delta_ident(p: str) -> list[str]:
         base = os.path.basename(p.rstrip("/"))
-        meta = os.path.join(p, "_delta_meta.json")
         try:
-            with open(meta) as fh:
+            with open(os.path.join(p, SIDECAR)) as fh:
                 dk = json.load(fh).get("params", {}).get("delta_key")
             if dk is not None:
                 return [base, str(dk)]
@@ -503,18 +432,11 @@ def ivf_compact(
         "compact_key": compact_key,
         "deltas": sorted(_delta_ident(p) for p in delta_paths),
     }
-    if compact_key is not None and _published_meta(
-        out_path, "_compact_meta.json", params
-    ) is not None:
-        return
 
-    merged = spark.read.parquet(base_path)
-    for p in delta_paths:
-        merged = merged.unionByName(spark.read.parquet(p))
-    (
-        merged.repartition("cluster_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(out_path)
-    )
-    _publish_sidecar(out_path, "_compact_meta.json", {"params": params})
+    def build(tmp: str) -> None:
+        merged = spark.read.parquet(base_path)
+        for p in delta_paths:
+            merged = merged.unionByName(spark.read.parquet(p))
+        merged.repartition("cluster_id").write.partitionBy("cluster_id").parquet(tmp)
+
+    publish(out_path, params, build)

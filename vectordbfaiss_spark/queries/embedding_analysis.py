@@ -21,6 +21,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from vectordbfaiss_spark import artifacts
 from vectordbfaiss_spark.operators.graph import connected_components
 from vectordbfaiss_spark.operators.topk import score_topk_vectorized
 from vectordbfaiss_spark.registry import register
@@ -109,28 +110,17 @@ def knn_edges_published(
     graph is served: the expensive build is an offline job keyed by
     corpus version, and the `repartition("src")` write gives well-sized,
     src-clustered files so downstream src-keyed joins scan locally.
-    Content-sensitive `corpus_fingerprint` (mtime+size of every source
-    file) forces a rebuild whenever the fixture is regenerated in place.
+    The content-sensitive `artifacts.corpus_key` (mtime+size of the
+    source) forces a rebuild whenever the fixture is regenerated in place.
     """
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import (
-        _published_meta,
-        _publish_sidecar,
-        corpus_fingerprint,
+    out = out_path or artifacts.path("knn_edges", sf_dir)
+    artifacts.publish(
+        out,
+        {"corpus_key": artifacts.corpus_key(sf_dir), "k": k},
+        lambda tmp: knn_edges(load_table(spark, sf_dir, "embeddings"), k=k)
+        .repartition("src")
+        .write.parquet(tmp),
     )
-
-    out = out_path or (
-        f"/root/repo/spark-warehouse/knn_edges_{pathlib.Path(sf_dir).name}"
-    )
-    params = {
-        "corpus_key": corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
-        "k": k,
-    }
-    if _published_meta(out, "_knn_meta.json", params) is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        knn_edges(emb, k=k).repartition("src").write.mode("overwrite").parquet(out)
-        _publish_sidecar(out, "_knn_meta.json", {"params": params})
     return spark.read.parquet(out)
 
 
@@ -207,7 +197,7 @@ def _blocked_knn_edges(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from vectordbfaiss_spark.plans.ivf import assign_clusters, corpus_fingerprint
+    from vectordbfaiss_spark.plans.ivf import assign_clusters
 
     emb = load_table(spark, sf_dir, "embeddings")
     if min_id is not None:
@@ -222,7 +212,7 @@ def _blocked_knn_edges(
         n_clusters=n_clusters,
         seed=42,
         # the subset must NOT share the full corpus's centroid-cache key
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet")
+        corpus_key=artifacts.corpus_key(sf_dir)
         + (f":min{min_id}" if min_id is not None else ""),
     )
     assigned = assigned.drop("nvec")
@@ -1131,9 +1121,11 @@ def graph_ann_edges_published(
     sf_dir: str,
     out_path: str | None = None,
     subset_min_id: int | None = None,
-) -> DataFrame:
+) -> str:
     """The search graph the graph-ANN family traverses, built by the
-    LINEAR path and published build-once (the IVF artifact shape).
+    LINEAR path and published build-once (the IVF artifact shape) at
+    ``graph_ann_edges_<sf>`` (``_min<id>`` for a subset build); returns
+    the artifact path, which readers take from here.
 
     Build = cluster-blocked within-cell kNN init (K ∝ N keeps the
     per-cell Gram constant, ``_blocked_knn_edges``) refined by
@@ -1148,22 +1140,12 @@ def graph_ann_edges_published(
     remaining scale `weak`; the exact build (:func:`knn_edges`) remains
     the fixture-scale recall oracle only.
     """
-    import pathlib
-
     from vectordbfaiss_spark.operators.nn_descent import nn_descent
-    from vectordbfaiss_spark.plans.ivf import (
-        _published_meta,
-        _publish_sidecar,
-        corpus_fingerprint,
-    )
 
     suffix = f"_min{subset_min_id}" if subset_min_id is not None else ""
-    out = out_path or (
-        "/root/repo/spark-warehouse/"
-        f"graph_ann_edges_{pathlib.Path(sf_dir).name}{suffix}"
-    )
+    out = out_path or artifacts.path("graph_ann_edges", sf_dir) + suffix
     params = {
-        "corpus_key": corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        "corpus_key": artifacts.corpus_key(sf_dir),
         "builder": "nn_descent",
         "k_build": _GRAPH_ANN_BUILD_K,
         "rounds": _GRAPH_ANN_NND_ROUNDS,
@@ -1172,7 +1154,8 @@ def graph_ann_edges_published(
         "sample_cap": _GRAPH_ANN_SAMPLE_CAP,
         "subset_min_id": subset_min_id,
     }
-    if _published_meta(out, "_graph_meta.json", params) is None:
+
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         if subset_min_id is not None:
             # base-only build for the incremental-insert lifecycle: the
@@ -1208,13 +1191,14 @@ def graph_ann_edges_published(
             .filter(F.col("_r") <= _GRAPH_ANN_DEGREE_CAP)
             .select("src", "dst", "score")
         )
-        capped.repartition("src").write.mode("overwrite").parquet(out)
-        _publish_sidecar(out, "_graph_meta.json", {"params": params})
-    return spark.read.parquet(out)
+        capped.repartition("src").write.parquet(tmp)
+
+    artifacts.publish(out, params, build)
+    return out
 
 
 def _graph_ann_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return graph_ann_edges_published(spark, sf_dir)
+    return spark.read.parquet(graph_ann_edges_published(spark, sf_dir))
 
 
 def _graph_ann_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,36 +1214,21 @@ def _graph_ann_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _published_frame(spark, out_name: str, params: dict, compute) -> DataFrame:
-    """Build-once publisher for small audit frames (the `_published_meta`
-    / `_publish_sidecar` shape of plans/ivf.py): a beam traversal over
-    the canonical query set, or its exact top-k counterpart, is pipeline
-    INFRASTRUCTURE — computed once per (corpus fingerprint, knobs) and
-    then consumed by the whole graph-ANN audit family as a parquet scan.
-    Round 7 measured the cost of NOT sharing it: seven registry queries
-    each re-ran a 10-round bulk-synchronous traversal (~10 checkpointed
-    stages apiece), 75-114 s of bench wall at sf0.1 for identical
-    results. `graph_ann_topk_search` deliberately bypasses this cache —
-    it is the family's one COLD-PATH query, so the serving latency stays
-    a measured number every round."""
-    from vectordbfaiss_spark.plans.ivf import _published_meta, _publish_sidecar
-
-    out = f"/root/repo/spark-warehouse/{out_name}"
-    if _published_meta(out, "_frame_meta.json", params) is None:
-        compute().coalesce(2).write.mode("overwrite").parquet(out)
-        _publish_sidecar(out, "_frame_meta.json", {"params": params})
-    return spark.read.parquet(out)
-
-
 def _graph_family_params(sf_dir: str, **extra) -> dict:
     """Shared param key for the family's published audit frames: the
     full edge-build recipe + serving knobs + canonical query set — any
     change to any of them (or a fixture regeneration) invalidates every
-    downstream frame at once."""
-    from vectordbfaiss_spark.plans.ivf import corpus_fingerprint
+    downstream frame at once.
 
+    The frames are small (a beam traversal over the canonical query set,
+    or its exact top-k counterpart) and are written as two files each.
+    Round 7 measured the cost of NOT sharing them: seven registry queries
+    each re-ran a 10-round bulk-synchronous traversal, 75-114 s of bench
+    wall at sf0.1 for identical results. `graph_ann_topk_search`
+    deliberately bypasses them: it is the family's one COLD-PATH query,
+    so the serving latency stays a measured number every round."""
     params = {
-        "corpus_key": corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        "corpus_key": artifacts.corpus_key(sf_dir),
         "builder": "nn_descent",
         "k_build": _GRAPH_ANN_BUILD_K,
         "rounds": _GRAPH_ANN_NND_ROUNDS,
@@ -1280,14 +1249,13 @@ def graph_ann_visited_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     by `graph_ann_recall_bound` and the beam-24 leg of
     `graph_ann_beam_curve` (a per-query-independent traversal restricts
     to any query subset by filter)."""
-    import pathlib
-
-    return _published_frame(
-        spark,
-        f"graph_ann_visited_{pathlib.Path(sf_dir).name}",
+    out = artifacts.path("graph_ann_visited", sf_dir)
+    artifacts.publish(
+        out,
         _graph_family_params(sf_dir, entries="hash"),
-        lambda: _graph_ann_visited(spark, sf_dir),
+        lambda tmp: _graph_ann_visited(spark, sf_dir).coalesce(2).write.parquet(tmp),
     )
+    return spark.read.parquet(out)
 
 
 def _exact_top10_q50_published(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1296,33 +1264,26 @@ def _exact_top10_q50_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ivf_entries`, `incremental`, and `beam_curve` (which filters to its
     25-query prefix). One O(Q*N) scoring pass per corpus fingerprint
     instead of four per bench run."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import corpus_fingerprint
-
     params = {
-        "corpus_key": corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        "corpus_key": artifacts.corpus_key(sf_dir),
         "k": 10,
         "queries": "vec_id<50",
         "exclude_self": True,
     }
 
-    def compute() -> DataFrame:
+    def build(tmp: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         queries = emb.filter(F.col("vec_id") < 50).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-        return score_topk_vectorized(queries, emb, k=10, exclude_self=True).select(
+        score_topk_vectorized(queries, emb, k=10, exclude_self=True).select(
             "query_id", "vec_id", "score"
-        )
+        ).coalesce(2).write.parquet(tmp)
 
-    return _published_frame(
-        spark,
-        f"graph_exact_top10_{pathlib.Path(sf_dir).name}",
-        params,
-        compute,
-    )
+    out = artifacts.path("graph_exact_top10", sf_dir)
+    artifacts.publish(out, params, build)
+    return spark.read.parquet(out)
 
 
 @register("graph_ann_topk_search", rows_only=True)
@@ -1349,24 +1310,19 @@ def q_graph_ann_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         graph_beam_search_interactive,
     )
 
-    import pathlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
+    edges_path = graph_ann_edges_published(spark, sf_dir)
     visited = graph_beam_search_interactive(
         queries,
-        edges,
+        spark.read.parquet(edges_path).select("src", "dst"),
         emb,
         beam=_GRAPH_ANN_BEAM,
         rounds=_GRAPH_ANN_ROUNDS,
         emb_path=f"{sf_dir}/embeddings.parquet",
-        edges_path=(
-            "/root/repo/spark-warehouse/"
-            f"graph_ann_edges_{pathlib.Path(sf_dir).name}"
-        ),
+        edges_path=edges_path,
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     return (
@@ -1407,12 +1363,10 @@ def q_graph_ann_build_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`knn_edges_published`, `knn_edges16_*`): the O(N^2) tiled
     pass runs once per corpus fingerprint — round 7 re-ran it on every
     bench pass (20.9 s at sf0.1) for an identical answer."""
-    import pathlib
-
     from vectordbfaiss_spark.functions.vector import cosine_similarity
 
     emb = load_table(spark, sf_dir, "embeddings")
-    edges = graph_ann_edges_published(spark, sf_dir)
+    edges = _graph_ann_edges(spark, sf_dir)
     degrees = edges.groupBy("src").agg(
         F.count("*").alias("deg"),
         F.max((F.col("dst") == F.col("src")).cast("int")).alias("self_loop"),
@@ -1434,10 +1388,7 @@ def q_graph_ann_build_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         k=_GRAPH_ANN_BUILD_K,
-        out_path=(
-            "/root/repo/spark-warehouse/"
-            f"knn_edges{_GRAPH_ANN_BUILD_K}_{pathlib.Path(sf_dir).name}"
-        ),
+        out_path=artifacts.path(f"knn_edges{_GRAPH_ANN_BUILD_K}", sf_dir),
     ).select("src", "dst")
     hits = edges.select("src", "dst").join(exact, ["src", "dst"], "left_semi")
     return (
@@ -1485,8 +1436,6 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``recall_ok`` (recall@10 vs the exact in-plan scan >= 0.5; IVF
     seeding starts the beam near the query, measured means >= the
     hash-entry form's)."""
-    import pathlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -1497,10 +1446,7 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             graph_beam_search,
             ivf_entry_pairs,
         )
-        from vectordbfaiss_spark.plans.ivf import (
-            assign_clusters,
-            corpus_fingerprint,
-        )
+        from vectordbfaiss_spark.plans.ivf import assign_clusters
 
         n = emb.count()
         # route on a COPY column (assign_clusters normalizes vec_col in place)
@@ -1509,7 +1455,7 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_col="nvec",
             n_clusters=max(8, -(-n // _SCALED_CELL_TARGET)),
             seed=42,
-            corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+            corpus_key=artifacts.corpus_key(sf_dir),
         )
         entries = ivf_entry_pairs(queries, assigned, centroids, nprobe=2)
         edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
@@ -1522,14 +1468,15 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             entry_pairs=entries,
         )
 
-    visited = _published_frame(
-        spark,
-        f"graph_ann_visited_ivf_{pathlib.Path(sf_dir).name}",
+    out = artifacts.path("graph_ann_visited_ivf", sf_dir)
+    artifacts.publish(
+        out,
         _graph_family_params(
             sf_dir, entries="ivf", nprobe=2, cell_target=_SCALED_CELL_TARGET
         ),
-        compute,
+        lambda tmp: compute().coalesce(2).write.parquet(tmp),
     )
+    visited = spark.read.parquet(out)
     w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     approx = (
         visited.filter(F.col("query_id") != F.col("vec_id"))
@@ -1631,8 +1578,6 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The traversal is a published audit frame (one cold build per corpus
     fingerprint; round 7 re-ran two 10-round traversals per bench
     pass)."""
-    import pathlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
     queries = batch.select(
@@ -1649,7 +1594,9 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         base_emb = emb.filter(F.col("vec_id") >= 50)
-        base_edges = graph_ann_edges_published(spark, sf_dir, subset_min_id=50)
+        base_edges = spark.read.parquet(
+            graph_ann_edges_published(spark, sf_dir, subset_min_id=50)
+        )
         delta = graph_insert_edges(
             batch,
             base_edges.select("src", "dst"),
@@ -1675,9 +1622,9 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             entry_pairs=entries,
         )
 
-    visited = _published_frame(
-        spark,
-        f"graph_ann_visited_incr_{pathlib.Path(sf_dir).name}",
+    out = artifacts.path("graph_ann_visited_incr", sf_dir)
+    artifacts.publish(
+        out,
         _graph_family_params(
             sf_dir,
             variant="incremental",
@@ -1686,8 +1633,9 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             insert_k=_GRAPH_ANN_BUILD_K,
             subset_min_id=50,
         ),
-        compute,
+        lambda tmp: compute().coalesce(2).write.parquet(tmp),
     )
+    visited = spark.read.parquet(out)
     w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     approx = (
         visited.filter(F.col("query_id") != F.col("vec_id"))
@@ -1745,8 +1693,6 @@ def q_graph_ann_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op and ``no_deleted_hits`` now FAILS — round 7's form scored
     against a pre-filtered survivor frame, which made the bound
     insensitive to the operator it claimed to verify."""
-    import pathlib
-
     from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
     from vectordbfaiss_spark.operators.graph_ann_incremental import (
         apply_tombstones,
@@ -1771,9 +1717,9 @@ def q_graph_ann_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             exclude_entry_ids=tombstones,
         )
 
-    visited = _published_frame(
-        spark,
-        f"graph_ann_visited_del_{pathlib.Path(sf_dir).name}",
+    out = artifacts.path("graph_ann_visited_del", sf_dir)
+    artifacts.publish(
+        out,
         _graph_family_params(
             sf_dir,
             variant="delete",
@@ -1781,8 +1727,9 @@ def q_graph_ann_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             delete_mod=_DELETE_MOD,
             store="full",
         ),
-        compute,
+        lambda tmp: compute().coalesce(2).write.parquet(tmp),
     )
+    visited = spark.read.parquet(out)
     w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     approx = (
         visited.filter(F.col("query_id") != F.col("vec_id"))
@@ -1820,10 +1767,6 @@ def _exact_top10_del_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 over the SURVIVING corpus for the surviving canonical
     queries — the recall denominator `graph_ann_delete_serve` and
     `graph_ann_compact_serve` share."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import corpus_fingerprint
-
     emb = load_table(spark, sf_dir, "embeddings")
     survivors = emb.filter(F.col("vec_id") % _DELETE_MOD != 0)
     queries = survivors.filter(F.col("vec_id") < 50).select(
@@ -1835,18 +1778,19 @@ def _exact_top10_del_published(spark: SparkSession, sf_dir: str) -> DataFrame:
             queries, survivors, k=10, exclude_self=True
         ).select("query_id", "vec_id", "score")
 
-    return _published_frame(
-        spark,
-        f"graph_exact_top10_del_{pathlib.Path(sf_dir).name}",
+    out = artifacts.path("graph_exact_top10_del", sf_dir)
+    artifacts.publish(
+        out,
         {
-            "corpus_key": corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+            "corpus_key": artifacts.corpus_key(sf_dir),
             "k": 10,
             "queries": "vec_id<50 survivors",
             "delete_mod": _DELETE_MOD,
             "exclude_self": True,
         },
-        compute_exact,
+        lambda tmp: compute_exact().coalesce(2).write.parquet(tmp),
     )
+    return spark.read.parquet(out)
 
 
 _GRAPH_COMPACT_ORACLE = f"""
@@ -1877,8 +1821,6 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     navigability; the inserted vectors stay first-class citizens), and
     ``degree_ok`` (max out-degree of the compacted artifact <= the
     publish cap — the growth bound compaction re-establishes)."""
-    import pathlib
-
     from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1888,7 +1830,6 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    name = pathlib.Path(sf_dir).name
     params = _graph_family_params(
         sf_dir,
         variant="compact",
@@ -1900,46 +1841,36 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         store="full",
     )
 
-    def compute_compacted() -> DataFrame:
+    def build_compacted(tmp: str) -> None:
         from vectordbfaiss_spark.operators.graph_ann_incremental import (
             compact_graph,
             graph_index_append,
         )
-        from vectordbfaiss_spark.plans.ivf import _publish_sidecar
 
-        base_out = (
-            f"/root/repo/spark-warehouse/graph_ann_edges_{name}_min50"
-        )
-        graph_ann_edges_published(spark, sf_dir, subset_min_id=50)  # ensures base
-        seg_root = f"/root/repo/spark-warehouse/graph_ann_segments_{name}"
+        base_path = graph_ann_edges_published(spark, sf_dir, subset_min_id=50)
+        seg_root = artifacts.path("graph_ann_segments", sf_dir)
         batch = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
         base_emb = emb.filter(F.col("vec_id") >= 50)
         graph_index_append(
             batch,
-            spark.read.parquet(base_out).select("src", "dst"),
+            spark.read.parquet(base_path).select("src", "dst"),
             base_emb,
             f"{seg_root}/delta_00000",  # list_segments' completed-seg prefix
             k=_GRAPH_ANN_BUILD_K,
             beam=_GRAPH_ANN_BEAM,
             rounds=_GRAPH_ANN_ROUNDS,
         )
-        out = f"/root/repo/spark-warehouse/graph_ann_compacted_{name}"
         compact_graph(
             spark,
-            base_out,
+            base_path,
             seg_root,
-            out,
+            tmp,
             degree_cap=_GRAPH_ANN_DEGREE_CAP,
             tombstones=tombstones,
         )
-        _publish_sidecar(out, "_frame_meta.json", {"params": params})
-        return spark.read.parquet(out)
 
-    from vectordbfaiss_spark.plans.ivf import _published_meta
-
-    compacted_path = f"/root/repo/spark-warehouse/graph_ann_compacted_{name}"
-    if _published_meta(compacted_path, "_frame_meta.json", params) is None:
-        compute_compacted()
+    compacted_path = artifacts.path("graph_ann_compacted", sf_dir)
+    artifacts.publish(compacted_path, params, build_compacted)
     compacted = spark.read.parquet(compacted_path)
 
     def compute_visited() -> DataFrame:
@@ -1952,12 +1883,13 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             exclude_entry_ids=tombstones,
         )
 
-    visited = _published_frame(
-        spark,
-        f"graph_ann_visited_compact_{name}",
+    out = artifacts.path("graph_ann_visited_compact", sf_dir)
+    artifacts.publish(
+        out,
         params,
-        compute_visited,
+        lambda tmp: compute_visited().coalesce(2).write.parquet(tmp),
     )
+    visited = spark.read.parquet(out)
     w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     approx = (
         visited.filter(F.col("query_id") != F.col("vec_id"))
@@ -2016,8 +1948,6 @@ def q_graph_ann_beam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     under observed means) and ``monotone_ok`` (mean recall at beam=24 is
     not below beam=4 minus noise slack 0.05: widening the beam must not
     LOSE recall, the regression a broken frontier introduces first)."""
-    import pathlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _BEAM_CURVE_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -2028,30 +1958,31 @@ def q_graph_ann_beam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id")
     )
 
-    def compute_narrow() -> DataFrame:
+    def build_narrow(tmp: str) -> None:
         from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
 
         edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
-        return graph_beam_search(
+        graph_beam_search(
             queries, edges, emb, beam=_BEAM_CURVE_BEAMS[0], rounds=_GRAPH_ANN_ROUNDS
-        )
+        ).coalesce(2).write.parquet(tmp)
 
     # wide leg = the canonical shared traversal restricted to this
     # query prefix (per-query independence makes the filter exact);
     # narrow leg is its own published frame — round 7 ran BOTH searches
     # live on every bench pass (21.9 s at sf0.1)
-    visited_by_beam = {
-        _BEAM_CURVE_BEAMS[0]: _published_frame(
-            spark,
-            f"graph_ann_visited_beam{_BEAM_CURVE_BEAMS[0]}_{pathlib.Path(sf_dir).name}",
-            _graph_family_params(
-                sf_dir,
-                entries="hash",
-                beam=_BEAM_CURVE_BEAMS[0],
-                queries=f"vec_id<{_BEAM_CURVE_QUERIES}",
-            ),
-            compute_narrow,
+    narrow = artifacts.path(f"graph_ann_visited_beam{_BEAM_CURVE_BEAMS[0]}", sf_dir)
+    artifacts.publish(
+        narrow,
+        _graph_family_params(
+            sf_dir,
+            entries="hash",
+            beam=_BEAM_CURVE_BEAMS[0],
+            queries=f"vec_id<{_BEAM_CURVE_QUERIES}",
         ),
+        build_narrow,
+    )
+    visited_by_beam = {
+        _BEAM_CURVE_BEAMS[0]: spark.read.parquet(narrow),
         _BEAM_CURVE_BEAMS[1]: graph_ann_visited_published(spark, sf_dir).filter(
             F.col("query_id") < _BEAM_CURVE_QUERIES
         ),

@@ -14,6 +14,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from vectordbfaiss_spark import artifacts
 from vectordbfaiss_spark.registry import register
 from vectordbfaiss_spark.session import load_table
 
@@ -232,10 +233,10 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-k (plans.ivf): KMeans routing + cluster-pruned exact
     scoring. Rows-only check (ANN correctness is recall-vs-exact, asserted
     in tests/test_ivf.py; SURVEY §7 risk (e))."""
-    from vectordbfaiss_spark.plans.ivf import assign_clusters, corpus_fingerprint, ivf_search
+    from vectordbfaiss_spark.plans.ivf import assign_clusters, ivf_search
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids = assign_clusters(emb, n_clusters=8, seed=42, corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"))
+    assigned, centroids = assign_clusters(emb, n_clusters=8, seed=42, corpus_key=artifacts.corpus_key(sf_dir))
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
@@ -321,13 +322,11 @@ def q_ivf_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     files on disk (the at-scale read path; in-memory assign_clusters in
     `ivf_topk_search` is the ad-hoc variant). Rows-only: k-means is not
     SQL-expressible; recall is asserted in tests/test_ivf.py."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import build_ivf_index, corpus_fingerprint, ivf_search
+    from vectordbfaiss_spark.plans.ivf import ivf_search
+    from vectordbfaiss_spark.queries.vector_search import registry_ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
-    centroids = build_ivf_index(emb, out, n_clusters=8, seed=42, corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"))
+    out, centroids = registry_ivf_index(emb, sf_dir)
     index = spark.read.parquet(out)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -384,14 +383,14 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F2
 
     from vectordbfaiss_spark.operators.topk import score_topk_vectorized
-    from vectordbfaiss_spark.plans.ivf import assign_clusters, corpus_fingerprint, ivf_search
+    from vectordbfaiss_spark.plans.ivf import assign_clusters, ivf_search
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F2.col("vec_id") < 50).select(
         F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
     )
     exact = score_topk_vectorized(queries, emb, k=10).select("query_id", "vec_id")
-    assigned, centroids = assign_clusters(emb, n_clusters=8, seed=42, corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"))
+    assigned, centroids = assign_clusters(emb, n_clusters=8, seed=42, corpus_key=artifacts.corpus_key(sf_dir))
     approx = ivf_search(assigned, queries, centroids, k=10, nprobe=4).select(
         "query_id", "vec_id"
     )
@@ -429,11 +428,7 @@ def q_ivf_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F2
 
     from vectordbfaiss_spark.operators.topk import score_topk_vectorized
-    from vectordbfaiss_spark.plans.ivf import (
-        assign_clusters,
-        corpus_fingerprint,
-        ivf_search,
-    )
+    from vectordbfaiss_spark.plans.ivf import assign_clusters, ivf_search
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F2.col("vec_id") < 50).select(
@@ -441,7 +436,7 @@ def q_ivf_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned, centroids = assign_clusters(
         emb, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        corpus_key=artifacts.corpus_key(sf_dir),
     )
     # same shape as pq_recall_bound: independent exact/approx legs,
     # approx consumed twice below — materialize both once, overlapped
@@ -509,9 +504,21 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return window_audio(attach_binary_payload(docs))
 
 
-# Trained PQ codebooks per corpus (same artifact-memoization rationale as
-# plans.ivf._CENTROID_CACHE).
-_PQ_BOOK_CACHE: dict[str, object] = {}
+# Trained PQ codebooks per corpus version (the memoization rationale of
+# plans.ivf._CENTROID_CACHE), keyed by content so a corpus regenerated in
+# place retrains instead of serving the old codebooks.
+_PQ_BOOKS: dict[str, object] = {}
+
+
+def pq_codebooks(emb: DataFrame, sf_dir: str):
+    """The registry's PQ codebooks (m=16, k_codes=32, seed 42) for the
+    corpus at ``sf_dir``, trained once per ``artifacts.corpus_key``."""
+    from vectordbfaiss_spark.plans import pq
+
+    key = artifacts.corpus_key(sf_dir)
+    if key not in _PQ_BOOKS:
+        _PQ_BOOKS[key] = pq.train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
+    return _PQ_BOOKS[key]
 
 
 @register("pq_topk_search", rows_only=True)
@@ -521,17 +528,10 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     format at server.js:194) -> ADC lookup-table scoring with batch-local
     pruning. Rows-only: ANN correctness is recall-vs-exact, asserted in
     tests/test_pq.py (SURVEY §7 risk (e))."""
-    from vectordbfaiss_spark.plans.pq import (
-        pq_encode,
-        pq_search,
-        train_pq_codebooks,
-    )
+    from vectordbfaiss_spark.plans.pq import pq_encode, pq_search
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
-        _PQ_BOOK_CACHE[sf_dir] = books
+    books = pq_codebooks(emb, sf_dir)
     encoded = pq_encode(emb, books)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -547,17 +547,10 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     IndexRefineFlat refinement step that closes most of the recall gap to
     the reference's flat scan (server.js:53-60) at r*k exact scores per
     query. Rows-only; recall pinned in tests/test_pq.py."""
-    from vectordbfaiss_spark.plans.pq import (
-        pq_encode,
-        pq_search_rerank,
-        train_pq_codebooks,
-    )
+    from vectordbfaiss_spark.plans.pq import pq_encode, pq_search_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
-        _PQ_BOOK_CACHE[sf_dir] = books
+    books = pq_codebooks(emb, sf_dir)
     encoded = pq_encode(emb, books)
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -571,20 +564,13 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ROW count (nprobe/k_clusters of the corpus), PQ codes prune the
     BYTES per row (m bytes vs 4d) — the FAISS IVFPQ index re-expressed as
     layout + broadcast + ADC kernel. Rows-only; recall in tests/test_pq.py."""
-    from vectordbfaiss_spark.plans.ivf import assign_clusters, corpus_fingerprint
-    from vectordbfaiss_spark.plans.pq import (
-        ivfpq_search,
-        pq_encode,
-        train_pq_codebooks,
-    )
+    from vectordbfaiss_spark.plans.ivf import assign_clusters
+    from vectordbfaiss_spark.plans.pq import ivfpq_search, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
-        _PQ_BOOK_CACHE[sf_dir] = books
+    books = pq_codebooks(emb, sf_dir)
     assigned, centroids = assign_clusters(
-        emb, n_clusters=8, seed=42, corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet")
+        emb, n_clusters=8, seed=42, corpus_key=artifacts.corpus_key(sf_dir)
     )
     encoded = pq_encode(assigned, books)
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -618,17 +604,10 @@ def q_pq_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F2
 
     from vectordbfaiss_spark.operators.topk import score_topk_vectorized
-    from vectordbfaiss_spark.plans.pq import (
-        pq_encode,
-        pq_search_rerank,
-        train_pq_codebooks,
-    )
+    from vectordbfaiss_spark.plans.pq import pq_encode, pq_search_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
-        _PQ_BOOK_CACHE[sf_dir] = books
+    books = pq_codebooks(emb, sf_dir)
     queries = emb.filter(F2.col("vec_id") < 50).select(
         F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
     )
@@ -683,21 +662,14 @@ def q_ivfpq_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F2
 
     from vectordbfaiss_spark.operators.topk import score_topk_vectorized
-    from vectordbfaiss_spark.plans.ivf import assign_clusters, corpus_fingerprint
-    from vectordbfaiss_spark.plans.pq import (
-        ivfpq_search,
-        pq_encode,
-        train_pq_codebooks,
-    )
+    from vectordbfaiss_spark.plans.ivf import assign_clusters
+    from vectordbfaiss_spark.plans.pq import ivfpq_search, pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
-        _PQ_BOOK_CACHE[sf_dir] = books
+    books = pq_codebooks(emb, sf_dir)
     assigned, centroids = assign_clusters(
         emb, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        corpus_key=artifacts.corpus_key(sf_dir),
     )
     queries = emb.filter(F2.col("vec_id") < 50).select(
         F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
@@ -1300,21 +1272,16 @@ def q_ivf_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (`ivf_disk_search`) → append (here) → delete
     (`ivf_tombstone_search`) → rebuild-on-drift (`embedding_drift_report`).
     """
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import (
-        build_ivf_index,
-        corpus_fingerprint,
-        ivf_index_append,
-        ivf_search,
+    from vectordbfaiss_spark.plans.ivf import ivf_index_append, ivf_search
+    from vectordbfaiss_spark.queries.vector_search import (
+        _routed_query_vec,
+        registry_ivf_index,
     )
-    from vectordbfaiss_spark.queries.vector_search import _routed_query_vec
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = corpus_fingerprint(f"{sf_dir}/embeddings.parquet")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
+    fp = artifacts.corpus_key(sf_dir)
+    out, centroids = registry_ivf_index(emb, sf_dir)
     delta_out = f"{out}_delta"
-    centroids = build_ivf_index(emb, out, n_clusters=8, seed=42, corpus_key=fp)
     delta = emb.filter(F.col("vec_id") % 13 == 2).select(
         (F.col("vec_id") + 200000).alias("vec_id"),
         F.reverse("embedding").alias("embedding"),
@@ -1361,23 +1328,21 @@ def q_ivf_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     file set per cluster and tombstones become physical at the same
     moment. Build-once under (corpus fingerprint)-derived keys end to end.
     """
-    import pathlib
-
     from vectordbfaiss_spark.plans.ivf import (
-        build_ivf_index,
-        corpus_fingerprint,
         ivf_compact,
         ivf_index_append,
         ivf_search,
     )
-    from vectordbfaiss_spark.queries.vector_search import _routed_query_vec
+    from vectordbfaiss_spark.queries.vector_search import (
+        _routed_query_vec,
+        registry_ivf_index,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = corpus_fingerprint(f"{sf_dir}/embeddings.parquet")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
+    fp = artifacts.corpus_key(sf_dir)
+    out, centroids = registry_ivf_index(emb, sf_dir)
     delta_out = f"{out}_delta"
     compact_out = f"{out}_compacted"
-    centroids = build_ivf_index(emb, out, n_clusters=8, seed=42, corpus_key=fp)
     delta = emb.filter(F.col("vec_id") % 13 == 2).select(
         (F.col("vec_id") + 200000).alias("vec_id"),
         F.reverse("embedding").alias("embedding"),

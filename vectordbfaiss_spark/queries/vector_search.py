@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from vectordbfaiss_spark import artifacts
 from vectordbfaiss_spark.operators.topk import score_pairs, score_topk_vectorized, topk
 from vectordbfaiss_spark.registry import register
 from vectordbfaiss_spark.session import load_table
@@ -361,6 +362,19 @@ def _routed_query_vec(dim: int = 64) -> list[float]:
 
 _ROUTED_LITS = ", ".join(repr(x) for x in _routed_query_vec())
 
+
+def registry_ivf_index(emb: DataFrame, sf_dir: str) -> tuple[str, list]:
+    """The registry's shared IVF index over the corpus at ``sf_dir`` (8
+    clusters, seed 42), published build-once; returns (path, centroids)."""
+    from vectordbfaiss_spark.plans.ivf import build_ivf_index
+
+    out = artifacts.path("ivf_index", sf_dir)
+    centroids = build_ivf_index(
+        emb, out, n_clusters=8, seed=42, corpus_key=artifacts.corpus_key(sf_dir)
+    )
+    return out, centroids
+
+
 # Bit-replication of the routed plan's arithmetic: literals land as
 # ARRAY<FLOAT> (::REAL[]), normalization is double math cast back to REAL
 # (exactly functions.vector.l2_normalize + the array<float> storage cast),
@@ -392,17 +406,13 @@ def q_sql_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle can hash-check it; production sets nprobe < n_clusters and the
     same plan prunes partitions (see ivf_disk_search + tests/test_ivf.py
     for the recall-bounded pruned path)."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import build_ivf_index, corpus_fingerprint
     from vectordbfaiss_spark.plans.sql_router import (
         register_ivf_table,
         route_topk_sql,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
-    centroids = build_ivf_index(emb, out, n_clusters=8, seed=42, corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"))
+    out, centroids = registry_ivf_index(emb, sf_dir)
     register_ivf_table("emb_ivf", out, centroids)
     sql = (
         "SELECT * FROM emb_ivf ORDER BY "
@@ -434,8 +444,6 @@ def q_sql_routed_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every returned score re-derives EXACTLY from raw vectors with the
     expression cosine: graph serving scores real vectors, unlike PQ's
     quantized ADC, so approximation lives only in the candidate SET)."""
-    import pathlib
-
     from vectordbfaiss_spark.functions.vector import cosine_similarity
     from vectordbfaiss_spark.plans.sql_router import (
         register_graph_table,
@@ -447,10 +455,7 @@ def q_sql_routed_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    graph_ann_edges_published(spark, sf_dir)  # build-once publish
-    edges_path = (
-        f"/root/repo/spark-warehouse/graph_ann_edges_{pathlib.Path(sf_dir).name}"
-    )
+    edges_path = graph_ann_edges_published(spark, sf_dir)
     register_graph_table(
         "emb_graph", f"{sf_dir}/embeddings.parquet", edges_path, n
     )
@@ -507,20 +512,13 @@ def q_sql_routed_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned in tests/test_sql_router.py), then serves the top-k from the
     IVF layout. Full probe, so the routed answer is exact and
     hash-checkable; anything outside the grammar falls back verbatim."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import build_ivf_index, corpus_fingerprint
     from vectordbfaiss_spark.plans.sql_router import (
         register_ivf_table,
         route_topk_sql,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
-    centroids = build_ivf_index(
-        emb, out, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
-    )
+    out, centroids = registry_ivf_index(emb, sf_dir)
     register_ivf_table("emb_ivf", out, centroids)
     sql = (
         "SELECT * FROM emb_ivf WHERE label IN (2, 4, 7) AND vec_id >= 50 "
@@ -581,20 +579,13 @@ def q_sql_routed_search_hydrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     unregistered tables (`embed` and `cosine_similarity` are registered
     SQL functions) — routing stays a transparent speedup; equality is
     pinned in tests/test_sql_router.py."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import build_ivf_index, corpus_fingerprint
     from vectordbfaiss_spark.plans.sql_router import (
         register_ivf_table,
         route_topk_sql,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
-    centroids = build_ivf_index(
-        emb, out, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
-    )
+    out, centroids = registry_ivf_index(emb, sf_dir)
     register_ivf_table("emb_ivf", out, centroids)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     sql = (
@@ -622,38 +613,26 @@ def _ivfpq_artifact(spark: SparkSession, sf_dir: str):
     partitioned by cluster_id) + its deterministic models. Centroids and
     codebooks are seeded retrains keyed by the corpus fingerprint, so a
     fresh process reusing the parquet re-derives identical models."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import (
-        _published_meta,
-        _publish_sidecar,
-        assign_clusters,
-        corpus_fingerprint,
-    )
-    from vectordbfaiss_spark.plans.pq import pq_encode, train_pq_codebooks
-    from vectordbfaiss_spark.queries.sources_io import _PQ_BOOK_CACHE
+    from vectordbfaiss_spark.plans.ivf import assign_clusters
+    from vectordbfaiss_spark.plans.pq import pq_encode
+    from vectordbfaiss_spark.queries.sources_io import pq_codebooks
 
     emb = load_table(spark, sf_dir, "embeddings")
-    books = _PQ_BOOK_CACHE.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(emb, m=16, k_codes=32, seed=42)
-        _PQ_BOOK_CACHE[sf_dir] = books
-    key = corpus_fingerprint(f"{sf_dir}/embeddings.parquet")
+    books = pq_codebooks(emb, sf_dir)
+    key = artifacts.corpus_key(sf_dir)
     assigned, centroids = assign_clusters(
         emb, n_clusters=8, seed=42, corpus_key=key
     )
-    out = f"/root/repo/spark-warehouse/ivfpq_index_{pathlib.Path(sf_dir).name}"
-    params = {"corpus_key": key, "m": 16, "k_codes": 32, "n_clusters": 8}
-    if _published_meta(out, "_ivfpq_meta.json", params) is None:
-        (
-            pq_encode(assigned, books)
-            .drop("embedding")  # PQ's point: m bytes per row, not 4d
-            .repartition("cluster_id")
-            .write.mode("overwrite")
-            .partitionBy("cluster_id")
-            .parquet(out)
-        )
-        _publish_sidecar(out, "_ivfpq_meta.json", {"params": params})
+    out = artifacts.path("ivfpq_index", sf_dir)
+    artifacts.publish(
+        out,
+        {"corpus_key": key, "m": 16, "k_codes": 32, "n_clusters": 8},
+        lambda tmp: pq_encode(assigned, books)
+        .drop("embedding")  # PQ's point: m bytes per row, not 4d
+        .repartition("cluster_id")
+        .write.partitionBy("cluster_id")
+        .parquet(tmp),
+    )
     return out, centroids, books
 
 
@@ -825,14 +804,12 @@ _SEMDEDUP_TAU = 0.3  # fixture embeddings are near-random (max pairwise
 
 def _semdedup_df(spark: SparkSession, sf_dir: str):
     from vectordbfaiss_spark.operators.semdedup import semdedup
-    from vectordbfaiss_spark.plans.ivf import corpus_fingerprint
-
     emb = load_table(spark, sf_dir, "embeddings")
     return semdedup(
         emb,
         n_clusters=_SEMDEDUP_K,
         threshold=_SEMDEDUP_TAU,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        corpus_key=artifacts.corpus_key(sf_dir),
     )
 
 
@@ -944,8 +921,6 @@ def q_semdedup_prune_scaled(
     booleans)."""
     from vectordbfaiss_spark.functions.vector import cosine_similarity
     from vectordbfaiss_spark.operators.semdedup import semdedup
-    from vectordbfaiss_spark.plans.ivf import corpus_fingerprint
-
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     n_clusters = max(8, -(-n // cell_target))
@@ -953,7 +928,7 @@ def q_semdedup_prune_scaled(
         emb,
         n_clusters=n_clusters,
         threshold=_SEMDEDUP_TAU,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        corpus_key=artifacts.corpus_key(sf_dir),
     )
     wa = emb.select(
         F.col("vec_id").alias("witness_id"), F.col("embedding").alias("w_vec")
@@ -1603,20 +1578,10 @@ def q_ivf_tombstone_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastHashJoin LeftAnti adjacent to the index scan, no modulo
     predicate on the index side.
     """
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import (
-        build_ivf_index,
-        corpus_fingerprint,
-        ivf_search,
-    )
+    from vectordbfaiss_spark.plans.ivf import ivf_search
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
-    centroids = build_ivf_index(
-        emb, out, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
-    )
+    out, centroids = registry_ivf_index(emb, sf_dir)
     # Delete log: bounded id list (projected scan of the id column only —
     # in production this is the tombstone sidecar, not the corpus).
     tombstones = emb.select("vec_id").filter(F.col("vec_id") % 5 == 0)
@@ -1743,11 +1708,7 @@ def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from vectordbfaiss_spark.functions.vector import dot, l2_normalize
-    from vectordbfaiss_spark.plans.ivf import (
-        _nearest_centroids,
-        assign_clusters,
-        corpus_fingerprint,
-    )
+    from vectordbfaiss_spark.plans.ivf import _nearest_centroids, assign_clusters
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 30).select(
@@ -1755,7 +1716,7 @@ def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned, centroids = assign_clusters(
         emb, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
+        corpus_key=artifacts.corpus_key(sf_dir),
     )
     widths = (1, 2, 4, 8)
 
@@ -2053,20 +2014,13 @@ def q_sql_routed_score_projection(spark: SparkSession, sf_dir: str) -> DataFrame
     layout with the score under the requested alias; any mismatch runs
     verbatim (tests/test_sql_router.py pins both directions). Full probe,
     so the routed answer is exact and hash-checkable."""
-    import pathlib
-
-    from vectordbfaiss_spark.plans.ivf import build_ivf_index, corpus_fingerprint
     from vectordbfaiss_spark.plans.sql_router import (
         register_ivf_table,
         route_topk_sql,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = f"/root/repo/spark-warehouse/ivf_index_{pathlib.Path(sf_dir).name}"
-    centroids = build_ivf_index(
-        emb, out, n_clusters=8, seed=42,
-        corpus_key=corpus_fingerprint(f"{sf_dir}/embeddings.parquet"),
-    )
+    out, centroids = registry_ivf_index(emb, sf_dir)
     register_ivf_table("emb_ivf", out, centroids)
     sql = (
         f"SELECT vec_id, cosine_similarity(embedding, array({_ROUTED_LITS})) AS sim "

@@ -80,39 +80,66 @@ _loaded = False
 #   embedder checksum), then the stalest evidence;
 #   round 9 staged its changed queries the same way, and round 10 kept
 #   that window;
-#   this order: sentinels + every query whose code changed with the
-#   vectorized MinHash kernel (one kernel evaluation per candidate call)
-#   and the O(d) vector math, + the queries whose helpers moved in from
-#   the deleted streaming/maintenance modules, then the stalest
-#   hash-verified evidence (latest gate sample round 4), each in its
-#   historical sample order.
+#   this order: sentinels + every query whose artifacts moved to the one
+#   artifact store (IVF, IVFPQ, kNN-edge, graph-ANN and PQ-codebook
+#   families), + the queries still unsampled since the vectorized MinHash
+#   kernel, the O(d) vector math and the helpers moved in from the
+#   deleted streaming/maintenance modules, then the stalest hash-verified
+#   evidence (latest gate sample round 4).
 _PRIORITY: tuple[str, ...] = (
     # sentinels: flagship operators re-proven every round
     "topk_search",
     "ingest_index_build",
     # ---- changed queries (need fresh gate rows) ----
-    "ivf_topk_search",             # l2_normalize: one norm per row
+    # one artifact store: every build-once artifact these queries read is
+    # located, keyed and published by artifacts.py; PQ codebooks keyed by
+    # corpus content
+    "ivf_topk_search",
     "ivf_disk_search",
-    "pq_rerank_topk",
-    "ivfpq_topk_search",
-    "label_centroids",
+    "ivf_recall_report",
+    "ivf_recall_bound",
     "ivf_nprobe_curve",
-    "graph_ann_topk_search",       # interactive graph kernel emits its
-    "sql_routed_graph_topk",       # own scores (no re-scoring join);
-    "sql_routed_topk",             # router: one-partition JVM query block
+    "ivf_tombstone_search",
+    "ivf_append_search",
+    "ivf_compact_search",
+    "pq_topk_search",
+    "pq_rerank_topk",
+    "pq_recall_bound",
+    "ivfpq_topk_search",
+    "ivfpq_recall_bound",
+    "sql_routed_topk",
     "sql_routed_topk_multi",
     "sql_routed_search_hydrated",
-    "sql_routed_pq_filtered",
     "sql_routed_score_projection",
-    "graph_ann_build_bound",       # NN-Descent: one score per pair
+    "sql_routed_pq_filtered",
+    "sql_routed_graph_topk",
+    "knn_graph_edges",
+    "knn_graph_blocked",
+    "knn_graph_blocked_scaled",
+    "knn_graph_incremental",
+    "mutual_knn_components",
+    "kcore_mutual_knn",
+    "label_propagation_knn",
+    "recursive_cte_knn_bfs",
+    "semantic_decontamination",
+    "semdedup_prune",
+    "semdedup_prune_scaled",
+    "semdedup_witness_bound",
+    "graph_ann_topk_search",
+    "graph_ann_build_bound",
+    "graph_ann_recall_bound",
+    "graph_ann_ivf_entries",
+    "graph_ann_beam_curve",
+    "graph_ann_incremental",
+    "graph_ann_delete_serve",
+    "graph_ann_compact_serve",
+    "label_centroids",             # l2_normalize: one norm per row
     "dedup_minhash_lsh",           # MinHash kernel: vectorized min step,
     "dedup_minhash_capped",        # one evaluation per candidate call
     "dedup_minhash_incremental",
     "minhash_quality_audit",
     "interval_join_click_purchase",  # helpers moved in from the deleted
     "zorder_layout_audit",           # streaming and maintenance modules
-    "graph_ann_incremental",
-    "graph_ann_compact_serve",
     # refresh block: stalest evidence (latest sample round 4)
     "scd2_event_intervals",
     "funnel_view_click_purchase",

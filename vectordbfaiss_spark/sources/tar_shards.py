@@ -145,7 +145,8 @@ class _TarWriter(DataSourceWriter):
     Each task streams its partition into one tar under a temp name and
     os.replace()s it into place — a mid-write crash leaves only a temp
     file the next run overwrites, never a truncated shard under a name
-    the reader would pick up (the _ivf_meta.json lesson generalized).
+    the reader would pick up (the write-then-rename rule of
+    ``artifacts.publish``).
     The driver commit() writes manifest.json atomically the same way;
     readers treat the manifest as the source of truth, so shards from a
     failed/partial job are invisible until commit.
