@@ -192,6 +192,43 @@ def test_registry_artifacts_follow_the_root(spark, tmp_path, monkeypatch):
     assert _tree(repo_root) == before
 
 
+def test_graph_delta_segment_is_published_keyed(spark, tmp_path, monkeypatch):
+    """graph_ann_compact_serve's delta segment goes through the store: every
+    parquet write under the root lands in a publish temp dir (no live path
+    is written in place), the segment container audits current (keyed, not
+    unkeyed) and still serves its one segment, and a rerun writes nothing."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tests.conftest import SF_ORACLE
+    from tests.oracle_harness import run_pair
+    from tools.artifact_gc import audit
+    from vectordbfaiss_spark.operators.graph_ann_incremental import list_segments
+
+    root = str(tmp_path / "wh")
+    monkeypatch.setattr(artifacts, "ROOT", root)
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        written.append(os.path.relpath(path, root))
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    assert run_pair(spark, "graph_ann_compact_serve", SF_ORACLE) == []
+    assert written
+    assert all(w.startswith(".") and ".tmp-" in w.split(os.sep)[0] for w in written), written
+
+    seg_root = artifacts.path("graph_ann_segments", SF_ORACLE)
+    status = {r["name"]: r["status"] for r in audit(root)}
+    assert status[os.path.basename(seg_root)] == "current"
+    assert "unkeyed" not in status.values()
+    assert list_segments(seg_root) == [os.path.join(seg_root, "delta_00000")]
+
+    written.clear()
+    assert run_pair(spark, "graph_ann_compact_serve", SF_ORACLE) == []
+    assert written == []
+
+
 def test_pq_codebooks_retrain_when_corpus_regenerated(spark, tmp_path, monkeypatch):
     """Codebooks are keyed by corpus content, not by the corpus path: a
     corpus rewritten in place with different vectors retrains them."""

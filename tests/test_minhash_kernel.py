@@ -4,6 +4,8 @@ plan: the kernel must run once per minhash_band_candidates call."""
 
 from __future__ import annotations
 
+from hashlib import md5
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -47,20 +49,66 @@ def test_signatures_equal_md5_expression(spark, num_hashes):
     assert {r[0] for r in got} >= {10**9, 10**9 + 1, 10**9 + 2}
 
 
-def test_empty_shingle_array_gives_null_signature(spark):
-    shingled = spark.createDataFrame(
-        [(1, []), (2, ["a b c", "b c d"]), (3, [])], "doc_id LONG, _sh ARRAY<STRING>"
-    )
-    sig = D.minhash_signatures(None, "doc_id", None, shingled=shingled)
-    rows = {r[0]: r[1:] for r in sig.collect()}
-    assert rows[1] == rows[3] == (None,) * 16
+# Texts on which Python's tokenizer habits and the JVM's split(rtrim(text),
+# r"\s+") disagree: Java's \s is exactly [ \t\n\x0B\f\r] and rtrim strips
+# U+0020 only, so NBSP, U+2003, U+001C and U+0085 are word characters and a
+# leading/trailing tab yields an empty token.
+_HOSTILE = [
+    "\tlead tab and trail tab\t",
+    "\x0bvertical tab words here\x0b",
+    "\fform feed words here\f",
+    "crlf line one\r\nline two\r\n",
+    "  doubled  spaces  inside  and  around  ",
+    "trailing spaces only   ",
+    "nbsp\u00a0inside one word here",
+    "em\u2003space inside one word",
+    "file\u001cseparator inside one word",
+    "next\u0085line inside one word",
+    "\u00a0 \u2003 \u0085 \u001c",
+    "",
+    " ",
+    "\t",
+    "\r\n",
+    "one",
+    "two words",
+    "a b c a b c a b c a b c",
+    "x x x x x",
+    "日本語 の テキスト です 日本語 の テキスト",
+    "😀 🎉 😀 🎉 emoji 😀",
+    "混合 mixed 😀\u00a0text \tend",
+]
+
+
+@pytest.mark.parametrize("num_hashes", [16, 10])
+def test_hostile_texts_tokenize_as_the_jvm_does(spark, num_hashes):
+    docs = spark.createDataFrame(list(enumerate(_HOSTILE)), "doc_id LONG, text STRING")
+    sig = D.minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=num_hashes)
     expected = _expr_signatures(
-        shingled.filter(F.col("doc_id") == 2).select(
-            "doc_id", F.explode("_sh").alias("shingle")
-        ),
-        16,
-    ).collect()[0]
-    assert rows[2] == tuple(expected)[1:]
+        D.exploded_shingles(docs, "doc_id", "text", n=3), num_hashes
+    )
+    got = _rows(sig)
+    assert len(got) == len(_HOSTILE)
+    assert got == _rows(expected)
+
+
+def _md5_signature(gram: str, num_hashes: int = 16) -> tuple:
+    return tuple(
+        md5(f"{s // 4}:{gram}".encode()).hexdigest()[(s % 4) * 8 : (s % 4) * 8 + 8]
+        for s in range(num_hashes)
+    )
+
+
+def test_shortest_texts_sign_their_one_gram(spark):
+    """Texts with fewer than n words are ONE shingle, their words joined by
+    single spaces: rtrim empties " ", while "\t" splits into two empty
+    words joined to " "."""
+    one_gram = {"": "", " ": "", "\t": " ", "a": "a", "a b": "a b"}
+    docs = spark.createDataFrame(list(enumerate(one_gram)), "doc_id LONG, text STRING")
+    shingles = D.exploded_shingles(docs, "doc_id", "text", n=3)
+    assert dict(shingles.collect()) == dict(enumerate(one_gram.values()))
+    sig = {r[0]: r[1:] for r in D.minhash_signatures(docs, "doc_id", "text", n=3).collect()}
+    expr = {r[0]: r[1:] for r in _expr_signatures(shingles, 16).collect()}
+    assert sig == expr == {i: _md5_signature(g) for i, g in enumerate(one_gram.values())}
 
 
 def test_zero_row_input(spark):

@@ -25,8 +25,16 @@ def test_priority_is_the_registry_prefix():
 # call; the interval join, Morton interleave and graph segment listing
 # moved into their queries' modules; every IVF, IVFPQ, kNN-edge, graph-ANN
 # and PQ-codebook query now locating, keying and publishing its artifacts
-# through artifacts.py) — each needs a fresh gate row
+# through artifacts.py; the MinHash kernel shingling the text itself, the
+# k-center oracle's materialized CTEs, the compacted graph build's delta
+# segment published through the store) — each needs a fresh gate row
 _CHANGED: tuple[str, ...] = (
+    "dedup_minhash_lsh",
+    "dedup_minhash_capped",
+    "dedup_minhash_incremental",
+    "minhash_quality_audit",
+    "kcenter_coreset_select",
+    "graph_ann_compact_serve",
     "ivf_topk_search",
     "ivf_disk_search",
     "ivf_recall_report",
@@ -65,12 +73,7 @@ _CHANGED: tuple[str, ...] = (
     "graph_ann_beam_curve",
     "graph_ann_incremental",
     "graph_ann_delete_serve",
-    "graph_ann_compact_serve",
     "label_centroids",
-    "dedup_minhash_lsh",
-    "dedup_minhash_capped",
-    "dedup_minhash_incremental",
-    "minhash_quality_audit",
     "interval_join_click_purchase",
     "zorder_layout_audit",
 )

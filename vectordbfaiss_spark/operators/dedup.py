@@ -86,33 +86,7 @@ def word_shingles(text_col, n: int = 3):
     return F.array_distinct(gram_array(text_col, n))
 
 
-def shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, _sh ARRAY<STRING>) — each document's DISTINCT n-word shingle
-    array, the shared upstream of both the signature pipelines
-    (:func:`minhash_signatures`) and the exploded form
-    (:func:`exploded_shingles`). Queries that run BOTH an approximate and
-    an exact leg over the same corpus (the recall audit) checkpoint this
-    frame once and feed it to both, so the regex split + gram build +
-    array_distinct — the expensive per-doc work — runs a single time.
-    NULL-text rows are dropped (they have no shingles; both consumers
-    already behaved that way — explode drops the NULL array, the
-    signature path filtered them explicitly)."""
-    base = fan_out(df.filter(F.col(text_col).isNotNull())).select(
-        F.col(id_col), F.split(F.rtrim(F.col(text_col)), r"\s+").alias("_words")
-    )
-    return base.select(
-        F.col(id_col),
-        F.array_distinct(gram_array(None, n, words=F.col("_words"))).alias("_sh"),
-    )
-
-
-def exploded_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
+def exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle) rows, distinct per doc — the normalized form every
     dedup pipeline starts from. ``word_shingles`` already deduplicates
     within a document (array_distinct), so NO extra ``distinct()`` shuffle
@@ -120,13 +94,7 @@ def exploded_shingles(
     explode multiplies rows ~100x and must not run single-task (see
     session.fan_out). The words array is projected as a REAL column
     before the gram transform (see :func:`gram_array` — a split inside
-    the lambda re-runs per gram, quadratic per doc).
-
-    ``shingled``: optionally a PRE-COMPUTED :func:`shingle_arrays` frame
-    (``df``/``text_col`` are then ignored) — pass the same checkpointed
-    frame to several consumers to share the shingle computation."""
-    if shingled is not None:
-        return shingled.select(F.col(id_col), F.explode("_sh").alias("shingle"))
+    the lambda re-runs per gram, quadratic per doc)."""
     base = fan_out(df).select(
         F.col(id_col), F.split(F.rtrim(F.col(text_col)), r"\s+").alias("_words")
     )
@@ -379,7 +347,6 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_hashes: int = 16,
-    shingled: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signature per document.
 
@@ -388,109 +355,96 @@ def minhash_signatures(
     min-hashes from H/4 md5 evaluations (md5 is the only hash both Spark
     and the DuckDB oracle implement identically; computing one digest per
     GROUP instead of per hash makes the signature aggregate ~4x cheaper).
-    PURE MAP form (round 9): the signature is computed per document row
-    from its distinct-shingle array (an Arrow kernel since round 10, see
-    below) — so there is NO shingle explode and NO exchange anywhere in
-    signature computation. The previous explode + groupBy(min) form
-    shuffled one row PER (doc, shingle, 4 digests) — corpus x
-    ~shingles-per-doc wide rows — which is pure overhead when the minima
-    are per-document reductions; at the syn300 rung that stage was the
-    failing straggler. Values are identical: min over exploded rows ==
-    the per-document min over the same array. The id column keeps its
-    input type.
+    PURE MAP form: one Arrow kernel goes from each document's text to its
+    signature in a single streamed pass (see below) — NO shingle explode
+    and NO exchange anywhere in signature computation. Values are
+    identical to the exploded ``min(substr(md5(...)))`` aggregate over
+    :func:`exploded_shingles`. The id column keeps its input type.
 
     Preconditions / NULL semantics: rows with NULL ``text_col`` produce
-    NO signature row — a deliberate (round-9 advisor) behavior change vs
-    the old explode+groupBy form, which emitted an all-NULL signature
-    row per NULL-text doc (gram_array on NULL text yields [NULL], so the
-    exploded aggregate grouped over a null-shingle row; downstream,
-    xxhash64(NULL)'s constant even made all NULL-text docs mutual J=1
-    pairs in ngram_jaccard_pairs). Dropping the row is the fix; pinned
-    by test_null_text_semantics. ``id_col`` must be unique per row — the
-    old aggregate merged duplicate ids' shingle sets into one signature,
-    the map form emits one signature per ROW. Every caller (documents
-    PK, parity splits, exact-deduped ingest batches) is unique by
-    construction.
-
-    ``shingled``: optionally a PRE-COMPUTED :func:`shingle_arrays` frame
-    (``df``/``text_col``/``n`` are then ignored) for callers sharing the
-    shingle computation across pipelines.
+    NO signature row (an all-NULL signature would make every NULL-text
+    doc share every band); pinned by test_null_text_semantics.
+    ``id_col`` must be unique per row — the map form emits one signature
+    per ROW. Every caller (documents PK, parity splits, exact-deduped
+    ingest batches) is unique by construction.
     """
     n_groups = (num_hashes + 3) // 4
 
-    if shingled is None:
-        shingled = shingle_arrays(df, id_col, text_col, n)
-
-    # Arrow kernel (round 10, guide §4.2): the per-row signature is
-    # ~4 md5 + 16 slice/min operations PER SHINGLE, and the expression
-    # forms all evaluate it INTERPRETED (HOF lambda bodies have no
-    # codegen) with heavy intermediate allocation. Measured at the
-    # syn300 rung (1.5M docs, 79.4M shingles): transform+array_min
-    # form 359 s, struct-aggregate form 423 s, explode+codegen-md5+
-    # groupBy(min) 812 s (the partial agg buffers ~corpus-many groups
-    # per task and spills) — while this kernel runs the same math
-    # through hashlib's C md5 in one streamed pass over Arrow batches.
+    # Arrow kernel (guide §4.2): text -> shingles -> md5 -> per-hash
+    # minima, all inside one Python pass per batch. The JVM forms of the
+    # shingle build (split + gram_array's zip_with/concat lambdas) and of
+    # the signature (~4 md5 + 16 slice/min per shingle) evaluate
+    # INTERPRETED — HOF lambda bodies have no codegen — and shipping the
+    # shingle arrays to a hash-only kernel cost more JVM CPU than the
+    # hashing itself. Measured at the syn300 rung (1.5M docs, 79.4M
+    # shingles) for the signature alone: transform+array_min form 359 s,
+    # struct-aggregate form 423 s, explode+codegen-md5+groupBy(min) 812 s.
     #
-    # Min step: Python touches each shingle only for its ceil(H/4) raw
-    # md5 digests; everything after is numpy over one buffer per batch.
-    # The digests are viewed as big-endian uint32 (``>u4``), 4 per
-    # digest, and ``np.minimum.reduceat`` over the list offsets takes
-    # each document's per-hash minimum. The oracle's hash j of group g
-    # is the 8-hex-char substring j of md5('g:' || shingle), i.e. digest
-    # bytes 4j..4j+3 written most-significant nibble first; fixed-width
-    # lowercase hex compares in byte order exactly as the number it
-    # spells ('0'-'9' < 'a'-'f' in ASCII), so the ``>u4`` minimum IS the
-    # string minimum, and formatting it back as %08x is bit-identical to
-    # the Spark/DuckDB ``min(substr(md5(...), 8j+1, 8))``. A document
-    # with an empty shingle array gets a NULL signature, as the
-    # aggregate forms do. The id column passes through untouched, so the
-    # output id type is the input's.
-    _nh, _ng = num_hashes, n_groups
+    # Tokenizer parity with ``split(rtrim(text), r"\s+")`` (gram_array),
+    # on the UTF-8 bytes: rtrim strips U+0020 only, and Java's ``\s`` is
+    # exactly [ \t\n\x0B\f\r] — NOT Python's ``\s``, which also
+    # splits on NBSP, U+2003, U+001C-001F and U+0085. All six are ASCII,
+    # and no multi-byte UTF-8 sequence contains an ASCII byte, so
+    # splitting the bytes is splitting the text. Leading/trailing empty
+    # tokens are kept (as Java's split with limit -1 keeps them); a text
+    # with fewer than n words is one shingle, its words joined by single
+    # spaces. Each document therefore has >= 1 shingle.
+    #
+    # Min step: Python touches each distinct shingle only for its
+    # ceil(H/4) raw md5 digests; everything after is numpy over one
+    # buffer per batch. The digests are viewed as big-endian uint32
+    # (``>u4``), 4 per digest, and ``np.minimum.reduceat`` over the
+    # per-document starts takes each document's per-hash minimum. The
+    # oracle's hash j of group g is the 8-hex-char substring j of
+    # md5('g:' || shingle), i.e. digest bytes 4j..4j+3 written
+    # most-significant nibble first; fixed-width lowercase hex compares
+    # in byte order exactly as the number it spells ('0'-'9' < 'a'-'f'
+    # in ASCII), so the ``>u4`` minimum IS the string minimum, and
+    # formatting it back as %08x is bit-identical to the Spark/DuckDB
+    # ``min(substr(md5(...), 8j+1, 8))``. The id column passes through
+    # untouched, so the output id type is the input's.
+    _n, _nh, _ng = n, num_hashes, n_groups
     names = [id_col] + [f"mh{s}" for s in range(num_hashes)]
 
     def _sig(batches):
+        import re
         from hashlib import md5
 
         import numpy as np
         import pyarrow as pa
 
+        split = re.compile(rb"[ \t\n\x0b\f\r]+").split
         prefixes = [f"{g}:".encode() for g in range(_ng)]
         for b in batches:
-            sh = b.column(1)
-            offs = np.asarray(sh.offsets, dtype=np.int64)
-            vals = sh.values.slice(offs[0], offs[-1] - offs[0]).to_pylist()
-            digests = b"".join(
-                [md5(p + s.encode()).digest() for s in vals for p in prefixes]
-            )
-            words = np.frombuffer(digests, dtype=">u4").reshape(len(vals), 4 * _ng)
-            nonempty = np.diff(offs) > 0
-            mins = np.zeros((len(offs) - 1, _nh), dtype=">u4")
-            mins[nonempty] = np.minimum.reduceat(
-                words[:, :_nh], offs[:-1][nonempty] - offs[0], axis=0
-            )
+            shingles, starts = [], []
+            for text in b.column(1).cast(pa.binary()).to_pylist():
+                w = split(text.rstrip(b" "))
+                starts.append(len(shingles))
+                grams = set(map(b" ".join, zip(*[w[i:] for i in range(_n)])))
+                shingles.extend(grams or (b" ".join(w),))
+            digests = b"".join([md5(p + s).digest() for s in shingles for p in prefixes])
+            words = np.frombuffer(digests, dtype=">u4").reshape(len(shingles), 4 * _ng)
+            mins = np.minimum.reduceat(words[:, :_nh], starts, axis=0)
             # %08x of every minimum, column-major: hash k's strings are
-            # the k-th run of 8 * rows hex chars in one buffer. Each
+            # the k-th run of 8 * rows hex chars in one buffer (reduceat
+            # returns native byte order: convert back to big-endian). Each
             # column gets its own zero-based slice (Arrow IPC assumes
             # offsets start at 0 for an unsliced array)
-            n = len(mins)
-            hexed = pa.py_buffer(mins.T.tobytes().hex().encode())
-            offsets = pa.py_buffer(np.arange(0, 8 * n + 1, 8, dtype=np.int32))
-            valid = None if nonempty.all() else pa.array(nonempty).buffers()[1]
+            rows = len(starts)
+            hexed = pa.py_buffer(mins.T.astype(">u4").tobytes().hex().encode())
+            offsets = pa.py_buffer(np.arange(0, 8 * rows + 1, 8, dtype=np.int32))
             cols = [
-                pa.StringArray.from_buffers(
-                    n, offsets, hexed.slice(8 * n * k, 8 * n), valid
-                )
+                pa.StringArray.from_buffers(rows, offsets, hexed.slice(8 * rows * k, 8 * rows))
                 for k in range(_nh)
             ]
             yield pa.RecordBatch.from_arrays([b.column(0)] + cols, names)
 
     out_schema = T.StructType(
-        [shingled.schema[id_col]]
+        [df.schema[id_col]]
         + [T.StructField(f"mh{s}", T.StringType()) for s in range(num_hashes)]
     )
-    return shingled.select(F.col(id_col), F.col("_sh")).mapInArrow(
-        _sig, out_schema
-    )
+    docs = df.filter(F.col(text_col).isNotNull()).select(id_col, text_col)
+    return fan_out(docs).mapInArrow(_sig, out_schema)
 
 
 def _band_keys(
@@ -524,7 +478,6 @@ def minhash_band_candidates(
     rows_per_band: int = 2,
     max_bucket: int | None = None,
     materialize: bool = True,
-    shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct banded candidate pairs (id_a < id_b) — the LSH pair
     generator shared by :func:`minhash_lsh_pairs` and the recall audit
@@ -548,10 +501,8 @@ def minhash_band_candidates(
     ``materialize=False`` returns the pair frame LAZY (no eager
     checkpoint) for callers that overlap the materialization with an
     independent pipeline (session.materialize_concurrently); such
-    callers take over the multiple-consumer checkpoint obligation.
-    ``shingled``: a pre-computed :func:`shingle_arrays` frame shared
-    with other pipelines (see :func:`minhash_signatures`)."""
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes, shingled=shingled)
+    callers take over the multiple-consumer checkpoint obligation."""
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
     if max_bucket is not None:
         # the bucket guard consumes `banded` twice (count + probe); without
         # this the whole shingle->md5->min-agg pipeline runs once per

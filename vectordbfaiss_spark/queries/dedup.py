@@ -556,27 +556,18 @@ def q_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordbfaiss_spark.operators.dedup import (
         exploded_shingles,
         minhash_band_candidates,
-        shingle_arrays,
     )
     from vectordbfaiss_spark.operators.setsim import prefix_filter_jaccard_pairs
 
     from vectordbfaiss_spark.session import materialize_concurrently
 
     docs = load_table(spark, sf_dir, "documents")
-    # ONE shingle pass for both legs (round 10): the banded-candidate and
-    # exact-prefix-join pipelines each start from the per-doc distinct-
-    # shingle arrays — previously each built its own from `docs`, so the
-    # regex split + gram build ran twice (the materialize_concurrently
-    # docstring's shared-lineage warning). Checkpoint the shared frame
-    # eagerly FIRST, then both legs consume executor blocks.
-    shingled = shingle_arrays(docs, "doc_id", "text", n=3).localCheckpoint(
-        eager=True
-    )
     # candidate-pair-sized frame with two consumers (the detection semi-
     # join and the n_candidates count): materialize once or the whole
-    # minhash->band pipeline runs twice. The two legs are INDEPENDENT
-    # past the shingle checkpoint, so their materializations overlap
-    # (guide-§2.6 back-fill) — wall ~= max of the two pipelines instead
+    # minhash->band pipeline runs twice. The two legs are INDEPENDENT —
+    # the banded leg's kernel shingles the text itself, the exact leg
+    # explodes its own shingles — so their materializations overlap
+    # (guide-§2.6 back-fill): wall ~= max of the two pipelines instead
     # of their sum.
     cand, exact = materialize_concurrently(
         minhash_band_candidates(
@@ -587,12 +578,9 @@ def q_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_hashes=_NUM_HASHES,
             rows_per_band=_ROWS_PER_BAND,
             materialize=False,
-            shingled=shingled,
         ),
         prefix_filter_jaccard_pairs(
-            exploded_shingles(docs, "doc_id", "text", n=3, shingled=shingled),
-            "doc_id",
-            "shingle",
+            exploded_shingles(docs, "doc_id", "text", n=3), "doc_id", "shingle"
         ).select("id_a", "id_b"),
     )
     # explicit hints: both sides are checkpointed RDDs (no stats), so the

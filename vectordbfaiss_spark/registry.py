@@ -91,6 +91,15 @@ _PRIORITY: tuple[str, ...] = (
     "topk_search",
     "ingest_index_build",
     # ---- changed queries (need fresh gate rows) ----
+    # MinHash kernel shingles the text itself (one Arrow pass from text
+    # to signature); k-center oracle CTEs materialized; the compacted
+    # graph build publishes its delta segment through the store
+    "dedup_minhash_lsh",
+    "dedup_minhash_capped",
+    "dedup_minhash_incremental",
+    "minhash_quality_audit",
+    "kcenter_coreset_select",
+    "graph_ann_compact_serve",
     # one artifact store: every build-once artifact these queries read is
     # located, keyed and published by artifacts.py; PQ codebooks keyed by
     # corpus content
@@ -132,12 +141,7 @@ _PRIORITY: tuple[str, ...] = (
     "graph_ann_beam_curve",
     "graph_ann_incremental",
     "graph_ann_delete_serve",
-    "graph_ann_compact_serve",
     "label_centroids",             # l2_normalize: one norm per row
-    "dedup_minhash_lsh",           # MinHash kernel: vectorized min step,
-    "dedup_minhash_capped",        # one evaluation per candidate call
-    "dedup_minhash_incremental",
-    "minhash_quality_audit",
     "interval_join_click_purchase",  # helpers moved in from the deleted
     "zorder_layout_audit",           # streaming and maintenance modules
     # refresh block: stalest evidence (latest sample round 4)
