@@ -45,7 +45,8 @@ def test_audit_classifies_all_statuses(tmp_path):
     # corrupt: _SUCCESS but no sidecar, no complete child
     os.makedirs(os.path.join(wh, "e_corrupt"))
     open(os.path.join(wh, "e_corrupt", "_SUCCESS"), "w").close()
-    # container: no sidecar, but a child with _SUCCESS (segment dirs)
+    # a sidecar-less container of complete segment dirs (written before
+    # segment containers went through the store): corrupt, swept
     os.makedirs(os.path.join(wh, "f_container", "delta_0"))
     open(os.path.join(wh, "f_container", "delta_0", "_SUCCESS"), "w").close()
     # delta-style *_key with a revision suffix after the fingerprint
@@ -75,7 +76,7 @@ def test_audit_classifies_all_statuses(tmp_path):
         "c_stale": "stale",
         "d_unkeyed": "unkeyed",
         "e_corrupt": "corrupt",
-        "f_container": "unkeyed",
+        "f_container": "corrupt",
         "g_delta": "current",
     }
 
@@ -85,6 +86,7 @@ def test_audit_classifies_all_statuses(tmp_path):
         "b_orphaned",
         "c_stale",
         "e_corrupt",
+        "f_container",
     ]
     assert all(r["status"] in SWEEPABLE for r in victims)
     assert os.path.isdir(os.path.join(wh, "c_stale"))
@@ -92,7 +94,7 @@ def test_audit_classifies_all_statuses(tmp_path):
     # real sweep removes exactly the sweepable set
     sweep(wh, delete=True)
     left = sorted(os.listdir(wh))
-    assert left == ["a_current", "d_unkeyed", "f_container", "g_delta"]
+    assert left == ["a_current", "d_unkeyed", "g_delta"]
 
 
 def test_real_warehouse_audits_clean():

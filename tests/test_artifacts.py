@@ -187,7 +187,7 @@ def test_registry_artifacts_follow_the_root(spark, tmp_path, monkeypatch):
         f"ivfpq_index_{sf}",
         f"graph_ann_edges_{sf}",
         f"graph_ann_visited_{sf}",
-        f"graph_exact_top10_{sf}",
+        f"exact_top11_{sf}",
     } <= set(os.listdir(root))
     assert _tree(repo_root) == before
 

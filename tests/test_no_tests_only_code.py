@@ -7,7 +7,10 @@ attribute ``x.f``, or a string constant ``"f"`` for ``getattr``-style
 dispatch) inside reachable code marks every top-level function or class
 called ``f`` reachable. That over-approximates, so a function it reports
 really has no caller. Import statements are not uses, so a re-export from
-an ``__init__.py`` does not keep a function alive.
+an ``__init__.py`` does not keep a function alive. A string constant that
+names a registered query (``registry.queries()["topk_search"]``, a
+``_PRIORITY`` entry) is a query reference, not a function reference, so it
+does not keep an operator of the same name alive.
 """
 
 from __future__ import annotations
@@ -23,11 +26,13 @@ ENTRY_DIRS = [ROOT / "perfbench", ROOT / "tools"]
 # Reference implementations that tests compare the production path against.
 ALLOWED = {
     "simhash_pairs_allpairs",  # all-pairs oracle for the blocked SimHash join
+    "score_pairs",  # expression-cosine oracle for the vectorized top-k kernel
 }
 
 
-def _used_names(nodes) -> set[str]:
-    """Names an AST subtree refers to; import statements are skipped."""
+def _used_names(nodes, query_names: set[str]) -> set[str]:
+    """Names an AST subtree refers to; import statements are skipped, and
+    so are string constants naming a registered query."""
     out: set[str] = set()
     stack = list(nodes)
     while stack:
@@ -39,39 +44,51 @@ def _used_names(nodes) -> set[str]:
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-            if n.value.isidentifier():
+            if n.value.isidentifier() and n.value not in query_names:
                 out.add(n.value)
         stack.extend(ast.iter_child_nodes(n))
     return out
 
 
-def _is_registered(fn: ast.FunctionDef) -> bool:
+def _registered_name(fn: ast.FunctionDef) -> str | None:
+    """The query name a ``@register("name", ...)`` decorator gives ``fn``."""
     for d in fn.decorator_list:
-        f = d.func if isinstance(d, ast.Call) else d
-        if getattr(f, "id", None) == "register" or getattr(f, "attr", None) == "register":
-            return True
-    return False
+        if isinstance(d, ast.Call) and "register" in (
+            getattr(d.func, "id", None),
+            getattr(d.func, "attr", None),
+        ):
+            return d.args[0].value
+    return None
 
 
 def unreachable() -> list[str]:
     defs: dict[str, list[tuple[str, ast.AST]]] = {}
     live: set[str] = set()
-    for path in sorted(LIB.rglob("*.py")):
-        mod = path.relative_to(ROOT).with_suffix("").as_posix().replace("/", ".")
-        tree = ast.parse(path.read_text(), filename=str(path))
+    trees = {
+        path.relative_to(ROOT).with_suffix("").as_posix().replace("/", "."):
+        ast.parse(path.read_text(), filename=str(path))
+        for path in sorted(LIB.rglob("*.py"))
+    }
+    queries = {
+        _registered_name(node)
+        for tree in trees.values()
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+    } - {None}
+    for mod, tree in trees.items():
         for node in tree.body:
             if isinstance(node, ast.ClassDef):
                 defs.setdefault(node.name, []).append((mod, node))
             elif isinstance(node, ast.FunctionDef):
                 defs.setdefault(node.name, []).append((mod, node))
                 # decorators and default arguments run at import time
-                live |= _used_names(node.decorator_list + node.args.defaults)
-                if _is_registered(node):
+                live |= _used_names(node.decorator_list + node.args.defaults, queries)
+                if _registered_name(node):
                     live.add(node.name)
             else:
-                live |= _used_names([node])
+                live |= _used_names([node], queries)
     for path in ENTRY_POINTS + [p for d in ENTRY_DIRS for p in sorted(d.rglob("*.py"))]:
-        live |= _used_names([ast.parse(path.read_text(), filename=str(path))])
+        live |= _used_names([ast.parse(path.read_text(), filename=str(path))], queries)
 
     seen: set[str] = set()
     todo = [n for n in live if n in defs]
@@ -81,7 +98,9 @@ def unreachable() -> list[str]:
             continue
         seen.add(name)
         for _, node in defs[name]:
-            todo.extend(n for n in _used_names(node.body) if n in defs and n not in seen)
+            todo.extend(
+                n for n in _used_names(node.body, queries) if n in defs and n not in seen
+            )
 
     dead = [f"{name} (allowlisted, not defined)" for name in ALLOWED - defs.keys()]
     for name, sites in defs.items():

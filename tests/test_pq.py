@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vectordbfaiss_spark.operators.topk import topk_search
+from vectordbfaiss_spark.operators.topk import score_pairs, topk
 from vectordbfaiss_spark.plans.pq import pq_encode, pq_search, train_pq_codebooks
 from vectordbfaiss_spark.session import load_table
 
@@ -42,7 +42,7 @@ def test_recall_vs_exact(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     k = 10
-    exact = topk_search(queries, emb, k=k)
+    exact = topk(score_pairs(queries, emb), k)
     approx = pq_search(pq_encode(emb, books), queries, books, k=k)
     ex = {}
     for r in exact.select("query_id", "vec_id").collect():
@@ -74,7 +74,7 @@ def test_ivfpq_recall_and_pruning(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     k = 10
-    exact = topk_search(queries, emb, k=k)
+    exact = topk(score_pairs(queries, emb), k)
     approx = ivfpq_search(encoded, queries, centroids, books, k=k, nprobe=4)
     ex, ap = {}, {}
     for r in exact.select("query_id", "vec_id").collect():
@@ -99,7 +99,7 @@ def test_rerank_recall_improves_over_plain_pq(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     k = 10
-    exact = topk_search(queries, emb, k=k)
+    exact = topk(score_pairs(queries, emb), k)
     encoded = pq_encode(emb, books)
     plain = pq_search(encoded, queries, books, k=k)
     refined = pq_search_rerank(encoded, queries, books, k=k, refine=8)

@@ -23,8 +23,9 @@ Statuses:
   is dead weight);
 - ``orphaned`` — the source path no longer exists;
 - ``corrupt``  — no parseable sidecar / missing _SUCCESS (an interrupted
-  publish, including a temp dir a crashed build left behind; the
-  build-once check already treats it as absent);
+  publish, including a temp dir a crashed build left behind, or a
+  segment container written before containers went through the store;
+  the build-once check already treats it as absent);
 - ``unkeyed``  — sidecar has no corpus_key (not fingerprint-guarded;
   listed, never swept).
 
@@ -79,15 +80,7 @@ def audit(warehouse: str = ROOT) -> list[dict]:
         rec = {"name": name, "bytes": _dir_size(path), "source": None}
         meta = _sidecar(path)
         if meta is None or not os.path.isfile(os.path.join(path, "_SUCCESS")):
-            # a CONTAINER of segment dirs (e.g. graph_ann_segments_*)
-            # has no top-level sidecar; its staleness is governed by its
-            # consumer's params — listed, never swept
-            has_complete_child = any(
-                os.path.isfile(os.path.join(path, d, "_SUCCESS"))
-                for d in os.listdir(path)
-                if os.path.isdir(os.path.join(path, d))
-            )
-            rec["status"] = "unkeyed" if has_complete_child else "corrupt"
+            rec["status"] = "corrupt"
             out.append(rec)
             continue
         params = meta.get("params") or {}

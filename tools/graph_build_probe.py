@@ -40,15 +40,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import Window as W, functions as F
+    from pyspark.sql import functions as F
 
     from vectordbfaiss_spark.operators.graph_ann import (
         graph_beam_search,
         graph_serve_knobs,
     )
-    from vectordbfaiss_spark.operators.topk import score_topk_vectorized
     from vectordbfaiss_spark.queries.embedding_analysis import (
         _GRAPH_ANN_BUILD_K,
+        _exact_top10_without_self,
+        _visited_top10,
+        exact_top11,
         graph_ann_edges_published,
         knn_edges_published,
     )
@@ -95,11 +97,7 @@ def main() -> None:
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-        exact = (
-            score_topk_vectorized(queries, emb, k=10, exclude_self=True)
-            .select("query_id", "vec_id")
-            .localCheckpoint(eager=True)
-        )
+        exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
         # edge recall vs the exact kNN@k_build artifact (param-keyed,
         # built once per rung) — the build-quality witness for the
         # rho-sampling change. The exact build is O(N^2); affordable
@@ -131,13 +129,7 @@ def main() -> None:
             visited = graph_beam_search(
                 queries, edges.select("src", "dst"), emb, beam=beam, rounds=rounds
             )
-            w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-            approx = (
-                visited.filter(F.col("query_id") != F.col("vec_id"))
-                .withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= 10)
-                .select("query_id", "vec_id")
-            ).localCheckpoint(eager=True)
+            approx = _visited_top10(visited).localCheckpoint(eager=True)
             t_serve = time.time() - t0
             hits = exact.join(
                 F.broadcast(approx), ["query_id", "vec_id"], "left_semi"

@@ -2,8 +2,9 @@
 
 Reference semantics: ``FAISS.search(queryVector, k)``
 /root/reference/server.js:45-61 — exact cosine score against every indexed
-vector (:53-56), sort desc (:58-59), take k (:60); then hydrate document
-text by id with a null-preserving lookup join (server.js:231-248).
+vector (:53-56), sort desc (:58-59), take k (:60). The registry's
+``topk_search`` query adds the reference's null-preserving text hydration
+(server.js:231-248).
 
 Spark-first design (SURVEY §2.8 W1, §3.1):
 - the per-request loop becomes ONE DataFrame over (query x index) pairs;
@@ -11,9 +12,9 @@ Spark-first design (SURVEY §2.8 W1, §3.1):
   map-side nested-loop with NO shuffle of the index table;
 - per-query top-k is a ``row_number`` window partitioned by query id. The
   only shuffle in the plan is the window's hash-partition on query_id,
-  whose input we pre-shrink by keeping only each *partition's* local top-k
-  candidates first (see below) — so at 100 TB the shuffle carries
-  O(num_partitions * k) rows, not O(N).
+  whose input :func:`score_topk_vectorized` pre-shrinks to each Arrow
+  batch's local top-k candidates — so at 100 TB the shuffle carries
+  O(batches * k) rows per query, not O(N).
 - determinism: JS sort is stable (SURVEY §2.5) -> we order by
   ``(score DESC, id ASC)`` so ties are reproducible on an unstable sort.
 
@@ -59,56 +60,17 @@ def score_pairs(
     )
 
 
-def _local_topk_prune(scored: DataFrame, k: int, query_id: str, index_id: str,
-                      score: str) -> DataFrame:
-    """Per-physical-partition top-k WITHOUT a shuffle: a mapInPandas pass
-    keeps at most k candidates per query per partition (bounded heaps),
-    so the downstream window shuffle carries O(partitions * Q * k) rows
-    instead of O(Q * N). Worth it when N/partition >> k; Arrow-batched,
-    constant memory.
-
-    (A ``Window.partitionBy(spark_partition_id(), ...)`` formulation would
-    NOT avoid the shuffle — Catalyst still plans an Exchange on the window
-    keys — hence the mapInPandas kernel.)
-    """
-    import pandas as pd  # local import: executors only
-
-    schema = scored.select(query_id, index_id, score).schema
-
-    def prune(batches):
-        best: dict = {}  # query_id -> DataFrame of current top-k
-        for pdf in batches:
-            for qid, grp in pdf.groupby(query_id, sort=False):
-                cur = best.get(qid)
-                cand = pd.concat([cur, grp]) if cur is not None else grp
-                cand = cand.sort_values(
-                    [score, index_id], ascending=[False, True], kind="mergesort"
-                ).head(k)
-                best[qid] = cand
-        if best:
-            yield pd.concat(best.values())
-
-    return scored.select(query_id, index_id, score).mapInPandas(prune, schema)
-
-
 def topk(
     scored: DataFrame,
     k: int,
     query_id: str = "query_id",
     index_id: str = "vec_id",
     score: str = "score",
-    local_prune: bool = False,
 ) -> DataFrame:
     """Per-query top-k with deterministic (score DESC, id ASC) tie-break.
 
     The window's hash-partition on ``query_id`` is the plan's only shuffle.
-    With ``local_prune`` the shuffle input first drops to k rows per query
-    per partition (see :func:`_local_topk_prune`) — the scale path when the
-    index side is huge; leave False when Q*N is small enough that one
-    shuffle beats an extra Arrow pass.
     """
-    if local_prune:
-        scored = _local_topk_prune(scored, k, query_id, index_id, score)
     order = [F.desc(score), F.asc(index_id)]
     w = Window.partitionBy(query_id).orderBy(*order)
     return (
@@ -245,56 +207,3 @@ def score_topk_vectorized(
 
     survivors = index.select(index_id, index_vec).mapInPandas(kernel, out_schema)
     return topk(survivors, k, query_id, index_id)
-
-
-def topk_search(
-    queries: DataFrame,
-    index: DataFrame,
-    k: int,
-    documents: DataFrame | None = None,
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
-    doc_id: str = "doc_id",
-    assume_normalized: bool = False,
-    vectorized: bool = False,
-) -> DataFrame:
-    """End-to-end flagship: score -> top-k -> optional text hydration.
-
-    Mirrors POST /search (server.js:217-265) minus the LLM answer stage:
-    late materialization keeps the scan narrow (id+vector only) and joins
-    the wide ``documents`` table only for the Q*k winners — the Spark analog
-    of the reference's RAM-index/SQLite-hydrate split (README.md:16-17).
-    Set ``vectorized=True`` to score through :func:`score_topk_vectorized`
-    (same results after rounding; BLAS arithmetic + pruned shuffle).
-    The hydration join is left-outer (null content preserved,
-    server.js:245-248) and broadcasts the tiny winner side.
-    """
-    if vectorized:
-        winners = score_topk_vectorized(
-            queries, index, k, query_id, query_vec, index_id, index_vec
-        )
-    else:
-        scored = score_pairs(
-            queries, index, query_id, query_vec, index_id, index_vec, assume_normalized
-        )
-        winners = topk(scored, k, query_id, index_id)
-    if documents is None:
-        return winners
-    # Null-preserving hydration (server.js:231-248), two broadcast steps —
-    # an outer join can only build (broadcast) its NON-preserved side, so a
-    # one-shot "broadcast(winners) left-join documents" is unplannable as a
-    # broadcast join. Instead, exactly like the reference's
-    # `WHERE id IN (...)` + in-memory lookup:
-    #  1. semi-join documents against the Q*k winner ids (build side =
-    #     winners, broadcastable) -> tiny `hits`, no shuffle of documents;
-    #  2. left-outer join winners -> broadcast(hits): build side = hits
-    #     (non-preserved), broadcastable; missing ids keep NULL text.
-    winner_ids = winners.select(F.col(index_id)).distinct()
-    hits = documents.join(
-        F.broadcast(winner_ids), documents[doc_id] == winner_ids[index_id], "left_semi"
-    )
-    return winners.join(
-        F.broadcast(hits), winners[index_id] == hits[doc_id], "left"
-    ).drop(doc_id)

@@ -1223,8 +1223,8 @@ def _graph_family_params(sf_dir: str, **extra) -> dict:
     change to any of them (or a fixture regeneration) invalidates every
     downstream frame at once.
 
-    The frames are small (a beam traversal over the canonical query set,
-    or its exact top-k counterpart) and are written as two files each.
+    The frames are small (a beam traversal over the canonical query
+    set) and are written as two files each.
     Round 7 measured the cost of NOT sharing them: seven registry queries
     each re-ran a 10-round bulk-synchronous traversal, 75-114 s of bench
     wall at sf0.1 for identical results. `graph_ann_topk_search`
@@ -1261,32 +1261,108 @@ def graph_ann_visited_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
-def _exact_top10_q50_published(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 (BLAS kernel) for the canonical query block over the
-    FULL corpus — the recall denominator shared by `recall_bound`,
-    `ivf_entries`, `incremental`, and `beam_curve` (which filters to its
-    25-query prefix). One O(Q*N) scoring pass per corpus fingerprint
-    instead of four per bench run."""
-    params = {
-        "corpus_key": artifacts.corpus_key(sf_dir),
-        "k": 10,
-        "queries": "vec_id<50",
-        "exclude_self": True,
-    }
+def exact_top11(
+    spark: SparkSession,
+    sf_dir: str,
+    corpus: DataFrame,
+    kind: str = "exact_top11",
+    **params,
+) -> DataFrame:
+    """The ANN bound family's one exact truth: the self-inclusive top-11
+    (BLAS kernel; ``query_id, vec_id, score, rank``) of the canonical
+    ``vec_id < 50`` block of ``corpus`` — the full corpus, or the
+    survivors of a delete (``kind="exact_top11_del"``) — published once
+    per corpus fingerprint. Every IVF/PQ/graph recall bound reads it
+    instead of re-running the flat scan (server.js:53-60).
+
+    Two views, both exactly the top-10 the kernel would return:
+    ``rank <= 10`` is the self-inclusive top-10 (a top-11 prefix), and
+    :func:`_exact_top10_without_self` is the ``exclude_self`` top-10."""
 
     def build(tmp: str) -> None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 50).select(
+        queries = corpus.filter(F.col("vec_id") < 50).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-        score_topk_vectorized(queries, emb, k=10, exclude_self=True).select(
-            "query_id", "vec_id", "score"
+        score_topk_vectorized(queries, corpus, k=11).select(
+            "query_id", "vec_id", "score", "rank"
         ).coalesce(2).write.parquet(tmp)
 
-    out = artifacts.path("graph_exact_top10", sf_dir)
-    artifacts.publish(out, params, build)
+    out = artifacts.path(kind, sf_dir)
+    key = artifacts.corpus_key(sf_dir)
+    artifacts.publish(out, {"corpus_key": key, "k": 11, "queries": "vec_id<50", **params}, build)
     return spark.read.parquet(out)
+
+
+def _exact_top10_without_self(truth: DataFrame) -> DataFrame:
+    """The graph family's view of :func:`exact_top11`: drop the query's
+    own row, THEN keep the first 10 by rank. Never the reverse — first
+    10 then drop self returns 9 rows whenever self ranks in the top 10."""
+    w = W.partitionBy("query_id").orderBy("rank")
+    return (
+        truth.filter(F.col("query_id") != F.col("vec_id"))
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= 10)
+        .select("query_id", "vec_id")
+    )
+
+
+def _visited_top10(visited: DataFrame) -> DataFrame:
+    """A traversal's answer: each query's best 10 visited ids other than
+    itself, ordered (score DESC, vec_id ASC) like the exact kernel."""
+    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
+    return (
+        visited.filter(F.col("query_id") != F.col("vec_id"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= 10)
+        .select("query_id", "vec_id", "score", "rnk")
+    )
+
+
+def _hit_counts(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, n_hits, self_hit) in ONE aggregation over ``approx``:
+    ``n_hits`` counts its rows that are in ``exact``, ``self_hit`` says
+    whether it returned the query's own id. Both sides are Q x 10, so
+    the truth is broadcast (post-window frames carry no stats, and an
+    unhinted plan degrades to sort-merge joins over bounded data)."""
+    marked = exact.select("query_id", "vec_id", F.lit(1).alias("_hit"))
+    return (
+        approx.select("query_id", "vec_id")
+        .join(F.broadcast(marked), ["query_id", "vec_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count("_hit").alias("n_hits"),
+            F.max(F.col("query_id") == F.col("vec_id")).alias("self_hit"),
+        )
+    )
+
+
+def _recall_bound(
+    queries: DataFrame,
+    exact: DataFrame,
+    approx: DataFrame,
+    found: DataFrame,
+    min_hits: int,
+) -> DataFrame:
+    """The family's per-query witness ``(query_id, self_found,
+    recall_ok)``: ``recall_ok`` is ``n_hits >= min_hits`` of ``approx``'s
+    top-10 against ``exact``, ``self_found`` that ``found`` holds the
+    query's own id. Pass ``found=approx`` (IVF/PQ) and both come out of
+    one aggregation, so the approximate leg runs once; the graph family
+    passes its whole visited set."""
+    out = queries.select("query_id").join(
+        F.broadcast(_hit_counts(exact, approx)), "query_id", "left"
+    )
+    if found is not approx:
+        own = found.filter(F.col("query_id") == F.col("vec_id")).select(
+            "query_id", F.lit(True).alias("self_hit")
+        )
+        out = out.drop("self_hit").join(F.broadcast(own), "query_id", "left")
+    return out.select(
+        "query_id",
+        F.coalesce("self_hit", F.lit(False)).alias("self_found"),
+        (F.coalesce("n_hits", F.lit(0)) >= F.lit(min_hits)).alias("recall_ok"),
+    )
 
 
 @register("graph_ann_topk_search", rows_only=True)
@@ -1327,13 +1403,7 @@ def q_graph_ann_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb_path=f"{sf_dir}/embeddings.parquet",
         edges_path=edges_path,
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-    return (
-        visited.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id", "score", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return _visited_top10(visited).withColumn("rnk", F.col("rnk").cast("long"))
 
 
 _GRAPH_BUILD_ORACLE = """
@@ -1436,7 +1506,7 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-in-N term in the serving path. Same hash-checked bound shape
     as `graph_ann_recall_bound`: ``self_found`` (a corpus-drawn query
     sits in its own nearest cell, so the traversal must touch it) and
-    ``recall_ok`` (recall@10 vs the exact in-plan scan >= 0.5; IVF
+    ``recall_ok`` (recall@10 vs the exact truth >= 0.5; IVF
     seeding starts the beam near the query, measured means >= the
     hash-entry form's)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1480,32 +1550,8 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda tmp: compute().coalesce(2).write.parquet(tmp),
     )
     visited = spark.read.parquet(out)
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-    approx = (
-        visited.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    exact = _exact_top10_q50_published(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        exact.join(F.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    self_found = visited.filter(F.col("query_id") == F.col("vec_id")).select(
-        "query_id", F.lit(True).alias("self_found")
-    )
-    return (
-        queries.select("query_id")
-        .join(F.broadcast(hits), "query_id", "left")
-        .join(F.broadcast(self_found), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("self_found", F.lit(False)).alias("self_found"),
-            (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
-        )
-    )
+    exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
+    return _recall_bound(queries, exact, _visited_top10(visited), visited, min_hits=5)
 
 
 @register("graph_ann_recall_bound", _GRAPH_ANN_BOUND_ORACLE)
@@ -1517,9 +1563,10 @@ def q_graph_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the graph (cosine 1.0, so it wins the beam the moment any
     neighbor is touched; the symmetrized publish makes every edged node
     reachable, and a traversal that misses it has a broken frontier or
-    entry spread); (b) ``recall_ok`` — recall@10 vs the exact in-plan
-    scan >= 0.5, under the measured floor on the NN-Descent-built graph
-    (per-query min >= 0.5 everywhere; means 0.99/0.996/0.87 at
+    entry spread); (b) ``recall_ok`` — recall@10 vs the exact truth
+    (:func:`exact_top11`) >= 0.5, under the measured floor on the
+    NN-Descent-built graph (per-query min >= 0.5 everywhere; means
+    0.99/0.996/0.87 at
     sf0.001/0.01/0.1 with beam=24, rounds=10, entries=max(16, N/32)),
     so it fires on real traversal regressions, not fixture noise."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1527,34 +1574,8 @@ def q_graph_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     visited = graph_ann_visited_published(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-    approx = (
-        visited.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    exact = _exact_top10_q50_published(spark, sf_dir).select("query_id", "vec_id")
-    # Q-bounded frames throughout: broadcast explicitly (post-window frames
-    # carry no stats and would degrade to sort-merge joins)
-    hits = (
-        exact.join(F.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    self_found = visited.filter(F.col("query_id") == F.col("vec_id")).select(
-        "query_id", F.lit(True).alias("self_found")
-    )
-    return (
-        queries.select("query_id")
-        .join(F.broadcast(hits), "query_id", "left")
-        .join(F.broadcast(self_found), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("self_found", F.lit(False)).alias("self_found"),
-            (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
-        )
-    )
+    exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
+    return _recall_bound(queries, exact, _visited_top10(visited), visited, min_hits=5)
 
 
 @register("graph_ann_incremental", _GRAPH_ANN_BOUND_ORACLE)
@@ -1639,32 +1660,8 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda tmp: compute().coalesce(2).write.parquet(tmp),
     )
     visited = spark.read.parquet(out)
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-    approx = (
-        visited.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    exact = _exact_top10_q50_published(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        exact.join(F.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    self_found = visited.filter(F.col("query_id") == F.col("vec_id")).select(
-        "query_id", F.lit(True).alias("self_found")
-    )
-    return (
-        queries.select("query_id")
-        .join(F.broadcast(hits), "query_id", "left")
-        .join(F.broadcast(self_found), "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("self_found", F.lit(False)).alias("self_found"),
-            (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
-        )
-    )
+    exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
+    return _recall_bound(queries, exact, _visited_top10(visited), visited, min_hits=5)
 
 
 _DELETE_MOD = 40  # tombstone every 40th id (~2.5% of the corpus)
@@ -1732,68 +1729,25 @@ def q_graph_ann_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda tmp: compute().coalesce(2).write.parquet(tmp),
     )
-    visited = spark.read.parquet(out)
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-    approx = (
-        visited.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    ).localCheckpoint(eager=True)
+    approx = _visited_top10(spark.read.parquet(out)).localCheckpoint(eager=True)
     deleted_hits = (
-        approx.join(
-            F.broadcast(tombstones.select(F.col("vec_id"))), "vec_id", "left_semi"
-        )
+        approx.join(F.broadcast(tombstones), "vec_id", "left_semi")
         .groupBy("query_id")
         .agg(F.count("*").alias("n_del"))
     )
-
-    exact = _exact_top10_del_published(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        exact.join(F.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
+    exact = _exact_top10_without_self(
+        exact_top11(spark, sf_dir, survivors, "exact_top11_del", delete_mod=_DELETE_MOD)
     )
     return (
         queries.select("query_id")
         .join(F.broadcast(deleted_hits), "query_id", "left")
-        .join(F.broadcast(hits), "query_id", "left")
+        .join(F.broadcast(_hit_counts(exact, approx)), "query_id", "left")
         .select(
             "query_id",
             (F.coalesce("n_del", F.lit(0)) == 0).alias("no_deleted_hits"),
             (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
         )
     )
-
-
-def _exact_top10_del_published(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 over the SURVIVING corpus for the surviving canonical
-    queries — the recall denominator `graph_ann_delete_serve` and
-    `graph_ann_compact_serve` share."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    survivors = emb.filter(F.col("vec_id") % _DELETE_MOD != 0)
-    queries = survivors.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-    def compute_exact() -> DataFrame:
-        return score_topk_vectorized(
-            queries, survivors, k=10, exclude_self=True
-        ).select("query_id", "vec_id", "score")
-
-    out = artifacts.path("graph_exact_top10_del", sf_dir)
-    artifacts.publish(
-        out,
-        {
-            "corpus_key": artifacts.corpus_key(sf_dir),
-            "k": 10,
-            "queries": "vec_id<50 survivors",
-            "delete_mod": _DELETE_MOD,
-            "exclude_self": True,
-        },
-        lambda tmp: compute_exact().coalesce(2).write.parquet(tmp),
-    )
-    return spark.read.parquet(out)
 
 
 _GRAPH_COMPACT_ORACLE = f"""
@@ -1828,9 +1782,8 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     tombstones = emb.filter(F.col("vec_id") % _DELETE_MOD == 0).select("vec_id")
-    queries = emb.filter(
-        (F.col("vec_id") < 50) & (F.col("vec_id") % _DELETE_MOD != 0)
-    ).select(
+    survivors = emb.filter(F.col("vec_id") % _DELETE_MOD != 0)
+    queries = survivors.filter(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     params = _graph_family_params(
@@ -1900,24 +1853,14 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         params,
         lambda tmp: compute_visited().coalesce(2).write.parquet(tmp),
     )
-    visited = spark.read.parquet(out)
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-    approx = (
-        visited.filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    ).localCheckpoint(eager=True)
+    approx = _visited_top10(spark.read.parquet(out)).localCheckpoint(eager=True)
     deleted_hits = (
         approx.join(F.broadcast(tombstones), "vec_id", "left_semi")
         .groupBy("query_id")
         .agg(F.count("*").alias("n_del"))
     )
-    exact = _exact_top10_del_published(spark, sf_dir).select("query_id", "vec_id")
-    hits = (
-        exact.join(F.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
+    exact = _exact_top10_without_self(
+        exact_top11(spark, sf_dir, survivors, "exact_top11_del", delete_mod=_DELETE_MOD)
     )
     degree_ok = (
         compacted.groupBy("src")
@@ -1927,7 +1870,7 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         queries.select("query_id")
         .join(F.broadcast(deleted_hits), "query_id", "left")
-        .join(F.broadcast(hits), "query_id", "left")
+        .join(F.broadcast(_hit_counts(exact, approx)), "query_id", "left")
         .crossJoin(F.broadcast(degree_ok))
         .select(
             "query_id",
@@ -1963,10 +1906,8 @@ def q_graph_ann_beam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _BEAM_CURVE_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    exact = (
-        _exact_top10_q50_published(spark, sf_dir)
-        .filter(F.col("query_id") < _BEAM_CURVE_QUERIES)
-        .select("query_id", "vec_id")
+    exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb)).filter(
+        F.col("query_id") < _BEAM_CURVE_QUERIES
     )
 
     def build_narrow(tmp: str) -> None:
@@ -2002,18 +1943,11 @@ def q_graph_ann_beam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     means = {}
     for beam in _BEAM_CURVE_BEAMS:
-        visited = visited_by_beam[beam]
-        w = W.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
-        approx = (
-            visited.filter(F.col("query_id") != F.col("vec_id"))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= 10)
-            .select("query_id", "vec_id")
-        )
-        hits = exact.join(F.broadcast(approx), ["query_id", "vec_id"], "left_semi")
+        approx = _visited_top10(visited_by_beam[beam])
         # bounded driver collect: two scalars per beam (the knob-curve
         # pattern of ivf_nprobe_curve)
-        mean_recall = hits.count() / (10.0 * _BEAM_CURVE_QUERIES)
+        hits = _hit_counts(exact, approx).agg(F.sum("n_hits")).first()[0] or 0
+        mean_recall = hits / (10.0 * _BEAM_CURVE_QUERIES)
         means[beam] = mean_recall
         rows.append((beam, mean_recall >= floors[beam]))
     monotone = means[_BEAM_CURVE_BEAMS[1]] >= means[_BEAM_CURVE_BEAMS[0]] - 0.05

@@ -374,34 +374,42 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _canonical_block(spark: SparkSession, sf_dir: str):
+    """The corpus, its canonical ``vec_id < 50`` query block, and the
+    self-inclusive exact top-10 of that block (the ``rank <= 10`` view
+    of the published truth, ``embedding_analysis.exact_top11``)."""
+    from vectordbfaiss_spark.queries.embedding_analysis import exact_top11
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 50).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    exact = exact_top11(spark, sf_dir, emb).filter(F.col("rank") <= 10)
+    return emb, queries, exact.select("query_id", "vec_id")
+
+
 @register("ivf_recall_report", rows_only=True)
 def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality as a first-class query: recall@10 of IVF (nprobe=4 of 8)
-    against the exact brute-force kernel, computed in one plan. Rows-only
-    (k-means is not SQL-expressible) but self-validating: the exact side IS
-    the in-plan oracle, the SURVEY §7(e) way to check ANN operators."""
-    from pyspark.sql import functions as F2
-
-    from vectordbfaiss_spark.operators.topk import score_topk_vectorized
+    against the exact top-10, computed in one plan. Rows-only (k-means is
+    not SQL-expressible) but self-validating: the exact side is the
+    published truth (``embedding_analysis.exact_top11``), the SURVEY §7(e)
+    way to check ANN operators."""
     from vectordbfaiss_spark.plans.ivf import assign_clusters, ivf_search
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F2.col("vec_id") < 50).select(
-        F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
-    )
-    exact = score_topk_vectorized(queries, emb, k=10).select("query_id", "vec_id")
+    emb, queries, exact = _canonical_block(spark, sf_dir)
     assigned, centroids = assign_clusters(emb, n_clusters=8, seed=42, corpus_key=artifacts.corpus_key(sf_dir))
     approx = ivf_search(assigned, queries, centroids, k=10, nprobe=4).select(
         "query_id", "vec_id"
     )
     hits = exact.join(approx, ["query_id", "vec_id"], "left_semi")
     return (
-        hits.agg(F2.count("*").alias("n_hits"))
-        .crossJoin(exact.agg(F2.count("*").alias("n_exact")))
+        hits.agg(F.count("*").alias("n_hits"))
+        .crossJoin(exact.agg(F.count("*").alias("n_exact")))
         .select(
             "n_hits",
             "n_exact",
-            F2.round(F2.col("n_hits") / F2.col("n_exact"), 4).alias("recall_at_10"),
+            F.round(F.col("n_hits") / F.col("n_exact"), 4).alias("recall_at_10"),
         )
     )
 
@@ -422,53 +430,19 @@ def q_ivf_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     drawn from the corpus must retrieve its own vector (its top-1 probe IS
     its assigned cluster, so this is structurally guaranteed at any
     nprobe >= 1; a routing bug breaks it instantly); (b) ``recall_ok`` —
-    recall@10 vs the exact in-plan scan >= 0.2, far below the observed
+    recall@10 vs the exact truth >= 0.2, far below the observed
     floor (0.4 at sf0.001, 0.5 at sf0.01; means ~0.75-0.8) so it only
     fires on genuine routing/assignment regressions, not fixture noise."""
-    from pyspark.sql import functions as F2
-
-    from vectordbfaiss_spark.operators.topk import score_topk_vectorized
     from vectordbfaiss_spark.plans.ivf import assign_clusters, ivf_search
+    from vectordbfaiss_spark.queries.embedding_analysis import _recall_bound
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F2.col("vec_id") < 50).select(
-        F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
-    )
+    emb, queries, exact = _canonical_block(spark, sf_dir)
     assigned, centroids = assign_clusters(
         emb, n_clusters=8, seed=42,
         corpus_key=artifacts.corpus_key(sf_dir),
     )
-    # same shape as pq_recall_bound: independent exact/approx legs,
-    # approx consumed twice below — materialize both once, overlapped
-    from vectordbfaiss_spark.session import materialize_concurrently
-
-    exact, approx = materialize_concurrently(
-        score_topk_vectorized(queries, emb, k=10).select("query_id", "vec_id"),
-        ivf_search(assigned, queries, centroids, k=10, nprobe=4).select(
-            "query_id", "vec_id"
-        ),
-    )
-    # every join side below is Q-bounded (top-k outputs / per-query rows):
-    # broadcast explicitly — post-window frames carry no stats, and an
-    # unhinted plan degrades to sort-merge joins over bounded data
-    hits = (
-        exact.join(F2.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F2.count("*").alias("n_hits"))
-    )
-    self_found = approx.filter(F2.col("query_id") == F2.col("vec_id")).select(
-        "query_id", F2.lit(True).alias("self_found")
-    )
-    return (
-        queries.select("query_id")
-        .join(F2.broadcast(hits), "query_id", "left")
-        .join(F2.broadcast(self_found), "query_id", "left")
-        .select(
-            "query_id",
-            F2.coalesce("self_found", F2.lit(False)).alias("self_found"),
-            (F2.coalesce("n_hits", F2.lit(0)) >= F2.lit(2)).alias("recall_ok"),
-        )
-    )
+    approx = ivf_search(assigned, queries, centroids, k=10, nprobe=4)
+    return _recall_bound(queries, exact, approx, approx, min_hits=2)
 
 
 _AUDIO_ORACLE = """
@@ -597,53 +571,17 @@ def q_pq_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine is 1.0, so this only fails if quantization drops it from the
     top refine*k=80 ADC candidates — a codebook/LUT bug, not noise;
     observed 50/50 at sf0.001/0.01/0.1); (b) ``recall_ok`` — recall@10
-    vs the exact in-plan scan >= 0.5, far under the observed floor
+    vs the exact truth >= 0.5, far under the observed floor
     (min hits 7/10, means 9.2-9.9 across SFs) so it only fires on real
     encode/ADC regressions. Reference bar: the flat exact scan at
     server.js:53-60."""
-    from pyspark.sql import functions as F2
-
-    from vectordbfaiss_spark.operators.topk import score_topk_vectorized
     from vectordbfaiss_spark.plans.pq import pq_encode, pq_search_rerank
+    from vectordbfaiss_spark.queries.embedding_analysis import _recall_bound
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, queries, exact = _canonical_block(spark, sf_dir)
     books = pq_codebooks(emb, sf_dir)
-    queries = emb.filter(F2.col("vec_id") < 50).select(
-        F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
-    )
-    # exact (BLAS scan) and approx (ADC + rerank) are independent heavy
-    # legs, and approx has TWO consumers below (hits + self_found) — left
-    # lazy its whole encode/ADC pipeline executed once per consumer in
-    # the final action. Materialize both once, overlapped (guide §2.6).
-    from vectordbfaiss_spark.session import materialize_concurrently
-
-    exact, approx = materialize_concurrently(
-        score_topk_vectorized(queries, emb, k=10).select("query_id", "vec_id"),
-        pq_search_rerank(
-            pq_encode(emb, books), queries, books, k=10, refine=8
-        ).select("query_id", "vec_id"),
-    )
-    # every join side below is Q-bounded (top-k outputs / per-query rows):
-    # broadcast explicitly — post-window frames carry no stats, and an
-    # unhinted plan degrades to sort-merge joins over bounded data
-    hits = (
-        exact.join(F2.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F2.count("*").alias("n_hits"))
-    )
-    self_found = approx.filter(F2.col("query_id") == F2.col("vec_id")).select(
-        "query_id", F2.lit(True).alias("self_found")
-    )
-    return (
-        queries.select("query_id")
-        .join(F2.broadcast(hits), "query_id", "left")
-        .join(F2.broadcast(self_found), "query_id", "left")
-        .select(
-            "query_id",
-            F2.coalesce("self_found", F2.lit(False)).alias("self_found"),
-            (F2.coalesce("n_hits", F2.lit(0)) >= F2.lit(5)).alias("recall_ok"),
-        )
-    )
+    approx = pq_search_rerank(pq_encode(emb, books), queries, books, k=10, refine=8)
+    return _recall_bound(queries, exact, approx, approx, min_hits=5)
 
 
 @register("ivfpq_recall_bound", _PQ_RECALL_BOUND_ORACLE)
@@ -659,52 +597,20 @@ def q_ivfpq_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization loss, so the floor sits under the IVF-only bound's).
     The floor fires on genuine routing/codebook regressions, not fixture
     noise."""
-    from pyspark.sql import functions as F2
-
-    from vectordbfaiss_spark.operators.topk import score_topk_vectorized
     from vectordbfaiss_spark.plans.ivf import assign_clusters
     from vectordbfaiss_spark.plans.pq import ivfpq_search, pq_encode
+    from vectordbfaiss_spark.queries.embedding_analysis import _recall_bound
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb, queries, exact = _canonical_block(spark, sf_dir)
     books = pq_codebooks(emb, sf_dir)
     assigned, centroids = assign_clusters(
         emb, n_clusters=8, seed=42,
         corpus_key=artifacts.corpus_key(sf_dir),
     )
-    queries = emb.filter(F2.col("vec_id") < 50).select(
-        F2.col("vec_id").alias("query_id"), F2.col("embedding").alias("query_vec")
+    approx = ivfpq_search(
+        pq_encode(assigned, books), queries, centroids, books, k=10, nprobe=4
     )
-    # same shape as pq_recall_bound: independent exact/approx legs,
-    # approx consumed twice below — materialize both once, overlapped
-    from vectordbfaiss_spark.session import materialize_concurrently
-
-    exact, approx = materialize_concurrently(
-        score_topk_vectorized(queries, emb, k=10).select("query_id", "vec_id"),
-        ivfpq_search(
-            pq_encode(assigned, books), queries, centroids, books, k=10, nprobe=4
-        ).select("query_id", "vec_id"),
-    )
-    # every join side below is Q-bounded (top-k outputs / per-query rows):
-    # broadcast explicitly — post-window frames carry no stats, and an
-    # unhinted plan degrades to sort-merge joins over bounded data
-    hits = (
-        exact.join(F2.broadcast(approx), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F2.count("*").alias("n_hits"))
-    )
-    self_found = approx.filter(F2.col("query_id") == F2.col("vec_id")).select(
-        "query_id", F2.lit(True).alias("self_found")
-    )
-    return (
-        queries.select("query_id")
-        .join(F2.broadcast(hits), "query_id", "left")
-        .join(F2.broadcast(self_found), "query_id", "left")
-        .select(
-            "query_id",
-            F2.coalesce("self_found", F2.lit(False)).alias("self_found"),
-            (F2.coalesce("n_hits", F2.lit(0)) >= F2.lit(1)).alias("recall_ok"),
-        )
-    )
+    return _recall_bound(queries, exact, approx, approx, min_hits=1)
 
 
 _SQLITE_RT_ORACLE = """

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from vectordbfaiss_spark import artifacts
-from vectordbfaiss_spark.operators.topk import score_pairs, score_topk_vectorized, topk
+from vectordbfaiss_spark.operators.topk import score_topk_vectorized, topk
 from vectordbfaiss_spark.registry import register
 from vectordbfaiss_spark.session import load_table
 
@@ -49,9 +49,10 @@ def q_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners = score_topk_vectorized(queries, emb, k=5).withColumnRenamed(
         "rank", "rnk"
     )
-    # two-step broadcast hydration (see operators.topk.topk_search): semi-join
-    # pulls the Q*k matching doc rows, then a broadcast left-outer preserves
-    # winners with missing docs (server.js:231-248 semantics).
+    # two-step broadcast hydration: an outer join can only broadcast its
+    # NON-preserved side, so a semi-join first pulls the Q*k matching doc
+    # rows, then a broadcast left-outer preserves winners with missing docs
+    # (server.js:231-248 semantics).
     winner_ids = winners.select("vec_id").distinct()
     hits = docs.select("doc_id", "text").join(
         F.broadcast(winner_ids), F.col("doc_id") == winner_ids.vec_id, "left_semi"

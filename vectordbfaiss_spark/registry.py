@@ -80,42 +80,49 @@ _loaded = False
 #   embedder checksum), then the stalest evidence;
 #   round 9 staged its changed queries the same way, and round 10 kept
 #   that window;
-#   this order: sentinels + every query whose artifacts moved to the one
-#   artifact store (IVF, IVFPQ, kNN-edge, graph-ANN and PQ-codebook
-#   families), + the queries still unsampled since the vectorized MinHash
-#   kernel, the O(d) vector math and the helpers moved in from the
-#   deleted streaming/maintenance modules, then the stalest hash-verified
-#   evidence (latest gate sample round 4).
+#   this order: sentinels + the ANN recall-bound family (one published
+#   exact truth, one witness helper), + every query whose artifacts moved
+#   to the one artifact store (IVF, IVFPQ, kNN-edge, graph-ANN and
+#   PQ-codebook families), + the queries still unsampled since the
+#   vectorized MinHash kernel, the O(d) vector math and the helpers moved
+#   in from the deleted streaming/maintenance modules, then the stalest
+#   hash-verified evidence (latest gate sample round 4).
 _PRIORITY: tuple[str, ...] = (
     # sentinels: flagship operators re-proven every round
     "topk_search",
     "ingest_index_build",
     # ---- changed queries (need fresh gate rows) ----
+    # the ANN bound family reads one published exact truth (top-11 per
+    # corpus) through one witness helper
+    "ivf_recall_report",
+    "ivf_recall_bound",
+    "pq_recall_bound",
+    "ivfpq_recall_bound",
+    "graph_ann_recall_bound",
+    "graph_ann_ivf_entries",
+    "graph_ann_incremental",
+    "graph_ann_delete_serve",
+    "graph_ann_compact_serve",
+    "graph_ann_beam_curve",
     # MinHash kernel shingles the text itself (one Arrow pass from text
-    # to signature); k-center oracle CTEs materialized; the compacted
-    # graph build publishes its delta segment through the store
+    # to signature); k-center oracle CTEs materialized
     "dedup_minhash_lsh",
     "dedup_minhash_capped",
     "dedup_minhash_incremental",
     "minhash_quality_audit",
     "kcenter_coreset_select",
-    "graph_ann_compact_serve",
     # one artifact store: every build-once artifact these queries read is
     # located, keyed and published by artifacts.py; PQ codebooks keyed by
     # corpus content
     "ivf_topk_search",
     "ivf_disk_search",
-    "ivf_recall_report",
-    "ivf_recall_bound",
     "ivf_nprobe_curve",
     "ivf_tombstone_search",
     "ivf_append_search",
     "ivf_compact_search",
     "pq_topk_search",
     "pq_rerank_topk",
-    "pq_recall_bound",
     "ivfpq_topk_search",
-    "ivfpq_recall_bound",
     "sql_routed_topk",
     "sql_routed_topk_multi",
     "sql_routed_search_hydrated",
@@ -136,11 +143,6 @@ _PRIORITY: tuple[str, ...] = (
     "semdedup_witness_bound",
     "graph_ann_topk_search",
     "graph_ann_build_bound",
-    "graph_ann_recall_bound",
-    "graph_ann_ivf_entries",
-    "graph_ann_beam_curve",
-    "graph_ann_incremental",
-    "graph_ann_delete_serve",
     "label_centroids",             # l2_normalize: one norm per row
     "interval_join_click_purchase",  # helpers moved in from the deleted
     "zorder_layout_audit",           # streaming and maintenance modules
