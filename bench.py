@@ -7,7 +7,9 @@
 
 Each query is materialized with a noop sink (full execution, no driver
 collect). A tiny warmup first touches the session so JVM/codegen startup
-isn't billed to the first query.
+isn't billed to the first query. Per-query timings and layer records
+(build/action split, jobs, stages, task time from perfbench's
+``LayerTracer``) go to a sidecar JSON file, not stdout.
 """
 
 from __future__ import annotations
@@ -19,6 +21,55 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.probe import LayerTracer  # noqa: E402
+
+
+def traced_run(tracer: LayerTracer, spark, name: str, fn, sf_dir: str):
+    """Build one registry query and materialize it with a noop sink inside
+    the query's job group. ``fn(spark, sf_dir)`` runs in the group, so
+    eager ``localCheckpoint``/``count`` calls made while the plan is built
+    are billed to ``build_s`` (and their stages to ``build_stages``); the
+    noop save is ``action_s``. The clock stops before the status-store
+    harvest starts.
+
+    Returns ``(df, layers, harvest_s)``; ``build_s + action_s`` is the
+    query's wall time."""
+    group = tracer.begin(name)
+    ts, t0 = time.time(), time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t2, te = time.perf_counter(), time.time()
+    rec = tracer.end(group, ts, te)
+    harvest_s = time.perf_counter() - t2
+    split = ts + (t1 - t0)  # the build/action boundary on the stage clock
+    layers = {
+        "build_s": round(t1 - t0, 3),
+        "action_s": round(t2 - t1, 3),
+        "build_stages": sum(sub < split for _, sub, _ in rec["stages"]),
+        "jobs": rec["jobs"],
+        "stages": len(rec["stages"]),
+    }
+    for k in ("task_s", "task_cpu_s", "shuffle_write_mb", "spill_mb"):
+        layers[k] = round(rec[k], 3)
+    return df, layers, harvest_s
+
+
+def drop_leaked_blocks(spark) -> None:
+    """Unpersist blocks the finished query left in the shared JVM.
+
+    Many queries eagerly localCheckpoint small frames (the loop/
+    multi-consumer discipline) and never unpersist — correct inside
+    one query, but across a 250+-query bench the block manager
+    accumulates and the GC tail punishes late-alphabet queries: the
+    first clean 253-query run showed a clean 0.99x first quartile vs
+    1.17-1.27x after, with two full-GC outliers (16x). A real
+    workload runs one query per job; dropping leaked blocks between
+    timings restores that isolation without touching query code."""
+    spark.catalog.clearCache()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(False)
 
 
 def main() -> None:
@@ -168,21 +219,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    def _drop_leaked_blocks() -> None:
-        """Unpersist blocks the finished query left in the shared JVM.
-
-        Many queries eagerly localCheckpoint small frames (the loop/
-        multi-consumer discipline) and never unpersist — correct inside
-        one query, but across a 250+-query bench the block manager
-        accumulates and the GC tail punishes late-alphabet queries: the
-        first clean 253-query run showed a clean 0.99x first quartile vs
-        1.17-1.27x after, with two full-GC outliers (16x). A real
-        workload runs one query per job; dropping leaked blocks between
-        timings restores that isolation without touching query code."""
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-
     # Stall re-measure gate (round-6 verdict): multi-second host freezes
     # hit RANDOM queries (pure-compute TPC-H q19 at 36x with an identical
     # plan — host scheduling, not code). Compare each timing to the
@@ -207,37 +243,32 @@ def main() -> None:
     except (OSError, json.JSONDecodeError):
         pass
 
-    def _timed(fn) -> float:
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = round(time.perf_counter() - t0, 3)
-        _drop_leaked_blocks()
-        return dt
+    tracer = LayerTracer(spark)
+    harvest_s = 0.0
 
-    # cold/warm pairs (round-7 verdict item 3): with
-    # SPARK_GRAFT_BENCH_PASSES=2 every query is timed twice back-to-back
-    # and both samples land in the sidecar ("pairs") — the second sample
-    # isolates steady-state compute from first-touch costs (shuffle-file
-    # page cache, codegen, broadcast rebuilds) for drift adjudication.
-    # The OFFICIAL timing stays the first (stall-gated) sample, so the
-    # number remains comparable with rounds 1-7.
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "1"))
+    def _timed(name, fn) -> tuple[float, dict]:
+        nonlocal harvest_s
+        _, rec, h = traced_run(tracer, spark, name, fn, sf_dir)
+        harvest_s += h
+        drop_leaked_blocks(spark)
+        return round(rec["build_s"] + rec["action_s"], 3), rec
+
     artifacts.RECORD.clear()  # the timed run's own built/reused record
     timings: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     retried: dict[str, list[float]] = {}
-    pairs: dict[str, list[float]] = {}
     for name, fn in sorted(registry.queries().items()):
         if wanted is not None and name not in wanted:
             continue
-        dt = _timed(fn)
+        dt, rec = _timed(name, fn)
         ref = anchor.get(name)
         if ref is not None and dt > 3.0 * ref and dt > ref + 1.0:
-            dt2 = _timed(fn)
+            dt2, rec2 = _timed(name, fn)
             retried[name] = [dt, dt2]
-            dt = min(dt, dt2)
-        if passes > 1:
-            pairs[name] = [dt, _timed(fn)]
+            if dt2 < dt:
+                dt, rec = dt2, rec2
         timings[name] = dt
+        layers[name] = rec
     if retried:
         print(
             f"NOTE: re-measured {len(retried)} stall-suspect queries "
@@ -321,10 +352,14 @@ def main() -> None:
                 "n_artifacts": n_artifacts,
                 "settle_s": _settle_s,
                 "load_presettle": _load_presettle,
-                # [official-first, immediate-warm] samples when
-                # SPARK_GRAFT_BENCH_PASSES=2 (empty otherwise)
-                "pairs": pairs,
+                # status-store harvest time of the whole run, outside
+                # every query's timing
+                "harvest_s": round(harvest_s, 3),
                 "queries": timings,
+                # per-query layer record of the official sample (see
+                # traced_run): build/action split, jobs, stages, task
+                # time, task CPU, shuffle writes and spill
+                "layers": layers,
             },
             f,
             indent=1,

@@ -70,8 +70,9 @@ def test_witness_joins_never_broadcast_the_store(spark):
     """The witness re-derivation joins verdicts against the FULL embedding
     store — corpus-grain, so those joins must plan as shuffle-hash, never
     broadcast (at syn100 the 51 MB store slid under the 64 MB threshold
-    and the broadcast build blew a 1g driver heap; caught round 6 by
-    tools/scaled_registry_probe.py)."""
+    and the broadcast build blew a 1g driver heap; caught round 6 at that
+    rung, rerun with
+    `python tools/ladder.py syn100=.scratch/syn100 semdedup_prune_scaled`)."""
     from tests.conftest import SF_SMOKE
     from vectordbfaiss_spark.queries.vector_search import (
         q_semdedup_prune_scaled,

@@ -153,7 +153,7 @@ def main() -> None:
 
     # the star/events tables are not re-synthesized: dedup/ANN/scrub are
     # the families whose density this generator exists to hold fixed —
-    # point SPOTCHECK_SF_DIRS at the replicated fixture for those
+    # give tools/ladder.py a replicated-fixture rung for those
     print(f"wrote {out}")
 
 

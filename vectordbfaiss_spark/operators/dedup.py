@@ -132,14 +132,10 @@ def exact_dedup_stats(df: DataFrame, key_cols: list[str], group_cols: list[str])
     )
 
 
-def dedup_exact(df: DataFrame, key_cols: list[str], existing: DataFrame | None = None) -> DataFrame:
-    """Remove-form exact dedup: in-batch ``dropDuplicates`` + cross-batch
-    left-anti join against an existing table (the INSERT OR IGNORE analog,
-    server.js:198; Spark-side pattern from SURVEY §2.1 S5)."""
-    out = df.dropDuplicates(key_cols)
-    if existing is not None:
-        out = out.join(existing.select(*key_cols).distinct(), key_cols, "left_anti")
-    return out
+def dedup_exact(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Remove-form exact dedup: in-batch ``dropDuplicates`` (the INSERT OR
+    IGNORE analog, server.js:198; SURVEY §2.1 S5)."""
+    return df.dropDuplicates(key_cols)
 
 
 def ngram_jaccard_pairs(
@@ -148,7 +144,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.4,
-    restrict_ids: DataFrame | None = None,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard similarity over n-gram shingle sets for every pair
@@ -161,9 +156,8 @@ def ngram_jaccard_pairs(
     The intersection join uses ``xxhash64(shingle)`` as the join key: an
     8-byte shuffle key instead of a variable-length string (collisions at
     2^-64 are beyond the result's 6dp precision; the oracle gate would
-    surface one). ``restrict_ids`` (optional) semi-joins the shingle set
-    down to a candidate id list first — used by the LSH verify step so the
-    exact-Jaccard join runs only over banding candidates, not the corpus.
+    surface one). LSH verify does not use this join; it scores its explicit
+    candidate pairs with :func:`pair_jaccard`.
 
     ``max_shingle_df`` (standalone-scale guard): drop shingles whose
     document frequency exceeds the cap BEFORE any other work. A shingle
@@ -175,20 +169,12 @@ def ngram_jaccard_pairs(
     same filtered sets (above-cap boilerplate shingles simply don't exist
     for this metric — filtering only the join side would silently deflate
     J for every pair sharing one boilerplate shingle). Pick the cap above
-    the corpus' plausible non-boilerplate df and the result is unchanged;
-    the LSH verify path leaves it None because ``restrict_ids`` already
-    bounds the join input.
+    the corpus' plausible non-boilerplate df and the result is unchanged.
+
+    The per-doc count side is one row PER CORPUS DOCUMENT, so it carries no
+    broadcast hint (a forced broadcast of 10^9 rows OOMs every executor);
+    AQE picks the strategy from the observed size.
     """
-    if restrict_ids is not None:
-        # restrict BEFORE the explode: the shingle explode multiplies rows
-        # ~100x, so filtering the doc set first (tiny broadcast semi-join)
-        # keeps the whole verify subtree proportional to the candidate set,
-        # not the corpus
-        df = df.join(
-            F.broadcast(restrict_ids.select(F.col(restrict_ids.columns[0]).alias(id_col))),
-            id_col,
-            "left_semi",
-        )
     sh = exploded_shingles(df, id_col, text_col, n)
     hashed = sh.select(F.col(id_col), F.xxhash64("shingle").alias("sh_key"))
     if max_shingle_df is not None:
@@ -215,13 +201,6 @@ def ngram_jaccard_pairs(
     )
     ca = counts.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    if restrict_ids is not None:
-        # candidate-bounded (the LSH verify path): the per-doc count side is
-        # as small as the candidate list — broadcast is always right.
-        # Standalone, counts is one row PER CORPUS DOCUMENT; a forced
-        # broadcast of 10^9 rows OOMs every executor, so leave the hint off
-        # and let AQE pick the strategy from the observed size.
-        ca, cb = F.broadcast(ca), F.broadcast(cb)
     return (
         inter.join(ca, "id_a")
         .join(cb, "id_b")
@@ -252,7 +231,7 @@ def pair_jaccard(
     computes J = |A∩B| / (|A| + |B| - |A∩B|) with array_intersect —
     O(|pairs| x shingles-per-doc), no shingle self-join anywhere. This is
     the verify kernel for LSH candidates: the shingle-join formulation
-    (ngram_jaccard_pairs with restrict_ids) re-generates pairs from
+    (ngram_jaccard_pairs over the candidate docs) re-generates pairs from
     shingles, which is Σ df² over the candidate docs' shingle universe —
     quadratic when the shingle space saturates (a 31-word-vocabulary
     corpus at 500k docs hung the verify step; SCALE.md honest-density

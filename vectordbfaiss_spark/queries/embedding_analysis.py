@@ -332,9 +332,7 @@ FROM embeddings
 
 
 @register("knn_graph_blocked_scaled", _BLOCKED_SCALED_ORACLE)
-def q_knn_graph_blocked_scaled(
-    spark: SparkSession, sf_dir: str, cell_target: int = _SCALED_CELL_TARGET
-) -> DataFrame:
+def q_knn_graph_blocked_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked kNN graph with the PRODUCTION grain contract executed:
     ``n_clusters = max(8, ceil(N / 64))`` is computed from the corpus
     size, so mean cell population (and the per-cell Gram cost) stays
@@ -349,7 +347,7 @@ def q_knn_graph_blocked_scaled(
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    n_clusters = max(8, -(-n // cell_target))
+    n_clusters = max(8, -(-n // _SCALED_CELL_TARGET))
     blocked = _blocked_knn_edges(spark, sf_dir, n_clusters=n_clusters)
     blocked = blocked.localCheckpoint(eager=True)  # feeds two checks below
 
@@ -1122,7 +1120,6 @@ _GRAPH_ANN_ROUNDS = 6
 def graph_ann_edges_published(
     spark: SparkSession,
     sf_dir: str,
-    out_path: str | None = None,
     subset_min_id: int | None = None,
 ) -> str:
     """The search graph the graph-ANN family traverses, built by the
@@ -1146,7 +1143,7 @@ def graph_ann_edges_published(
     from vectordbfaiss_spark.operators.nn_descent import nn_descent
 
     suffix = f"_min{subset_min_id}" if subset_min_id is not None else ""
-    out = out_path or artifacts.path("graph_ann_edges", sf_dir) + suffix
+    out = artifacts.path("graph_ann_edges", sf_dir) + suffix
     params = {
         "corpus_key": artifacts.corpus_key(sf_dir),
         "builder": "nn_descent",

@@ -863,7 +863,7 @@ def q_semdedup_witness_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         # wa/wb are the FULL embedding store (corpus-grain): shuffle-hash,
         # never a broadcast — at syn100 the 51 MB store slid under the
         # 64 MB threshold and the broadcast BUILD blew the driver heap
-        # (caught by tools/scaled_registry_probe.py, round 6)
+        # (caught running semdedup_prune_scaled on the syn100 rung, round 6)
         verdicts.join(wa.hint("SHUFFLE_HASH"), "witness_id", "left")
         .join(wb.hint("SHUFFLE_HASH"), "vec_id", "left")
         .withColumn(
@@ -905,9 +905,7 @@ FROM embeddings
 
 
 @register("semdedup_prune_scaled", _SEMDEDUP_SCALED_ORACLE)
-def q_semdedup_prune_scaled(
-    spark: SparkSession, sf_dir: str, cell_target: int = _SEMDEDUP_CELL_TARGET
-) -> DataFrame:
+def q_semdedup_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with the PRODUCTION grain contract executed:
     ``n_clusters = max(8, ceil(N / 64))`` is computed from the corpus
     size (the paper's own design point — 50k clusters for 134M
@@ -924,7 +922,7 @@ def q_semdedup_prune_scaled(
     from vectordbfaiss_spark.operators.semdedup import semdedup
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
-    n_clusters = max(8, -(-n // cell_target))
+    n_clusters = max(8, -(-n // _SEMDEDUP_CELL_TARGET))
     verdicts = semdedup(
         emb,
         n_clusters=n_clusters,
