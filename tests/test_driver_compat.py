@@ -130,3 +130,29 @@ def test_numpy_hugepage_madvise_disabled():
     get = getattr(ma, "_get_madvise_hugepage", None)
     if get is not None:
         assert get() is False
+
+
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """load_table infers a table's schema once per file version: a repeat
+    read runs no Spark job, and a file rewritten in place is read with
+    its new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vectordbfaiss_spark.session import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    load_table(spark, str(tmp_path), "t")
+    sc = spark.sparkContext
+    sc.setJobGroup("load-table-repeat", "repeat read")
+    try:
+        again = load_table(spark, str(tmp_path), "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("load-table-repeat")) == []
+    assert again.columns == ["a"]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    rewritten = load_table(spark, str(tmp_path), "t")
+    assert rewritten.columns == ["a", "b"]
+    assert [tuple(r) for r in rewritten.collect()] == [(3, "x")]

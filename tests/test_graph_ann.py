@@ -248,7 +248,8 @@ def test_xxhash64_long_parity(spark):
 
 def test_round_half_up6_matches_spark(spark):
     """The in-kernel 6dp rounding must match Spark's round(double, 6) on
-    representative score values, including .5-boundary cases."""
+    representative score values, including .5-boundary cases and the
+    non-finite scores a zero-norm vector produces."""
     import numpy as np
 
     from vectordbfaiss_spark.operators.graph_ann import _round_half_up6
@@ -259,44 +260,18 @@ def test_round_half_up6_matches_spark(spark):
             rng.uniform(-1, 1, size=2000),
             np.array([0.1234565, -0.1234565, 0.9999995, -0.9999995, 1.0, -1.0]),
             np.array([2.5e-7, -2.5e-7, 0.5e-6, 1.5e-6]),
+            np.array([np.nan, np.inf, -np.inf]),
         ]
     )
     df = spark.createDataFrame([(float(v),) for v in vals], "v double")
-    want = [r[0] for r in df.select(F.round("v", 6)).collect()]
-    got = _round_half_up6(vals).tolist()
-    assert got == want
+    want = np.array([r[0] for r in df.select(F.round("v", 6)).collect()])
+    got = _round_half_up6(vals)
+    np.testing.assert_array_equal(got, want)  # NaN == NaN here
 
 
-def test_interactive_kernel_bit_identical_to_bsp(spark):
-    """The request-path kernel must produce the EXACT visited frame the
-    BSP operator produces (same entries, same expansion order, same
-    JVM-rounded scores) — it is a latency re-plumbing, not a different
-    algorithm."""
-    from vectordbfaiss_spark.operators.graph_ann import (
-        graph_beam_search_interactive,
-    )
-
-    emb_df = _toy_corpus(spark, n=60)
-    edges = _knn_edges_df(spark, emb_df, k=5)
-    queries = emb_df.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    bsp = graph_beam_search(queries, edges, emb_df, beam=6, rounds=5)
-    inter = graph_beam_search_interactive(
-        queries, edges, emb_df, beam=6, rounds=5
-    )
-    a = sorted(map(tuple, bsp.collect()))
-    b = sorted(map(tuple, inter.collect()))
-    assert a == b and len(a) > 0
-
-
-def test_interactive_kernel_path_mode_matches_df_mode(spark, tmp_path):
-    """The single-job Arrow kernel (published-artifact paths) must return
-    the same frame as df-mode and hence as the BSP operator."""
-    from vectordbfaiss_spark.operators.graph_ann import (
-        graph_beam_search_interactive,
-    )
-
+def _toy_artifacts(spark, tmp_path):
+    """The 60-node toy corpus and its 5-NN edges as frames, also written
+    to parquet (the kernel reads the published paths)."""
     emb_df = _toy_corpus(spark, n=60)
     edges = _knn_edges_df(spark, emb_df, k=5)
     emb_path = str(tmp_path / "emb.parquet")
@@ -306,34 +281,72 @@ def test_interactive_kernel_path_mode_matches_df_mode(spark, tmp_path):
     queries = emb_df.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    df_mode = graph_beam_search_interactive(
-        queries, edges, emb_df, beam=6, rounds=5
+    return emb_df, edges, queries, {"emb_path": emb_path, "edges_path": edges_path}
+
+
+def test_interactive_kernel_bit_identical_to_bsp(spark, tmp_path):
+    """The request-path kernel must produce the EXACT visited frame the
+    BSP operator produces (same entries, same expansion order, same
+    JVM-rounded scores) — it is a latency re-plumbing, not a different
+    algorithm — whether the request block is a local relation or a
+    parquet scan."""
+    from vectordbfaiss_spark.operators.graph_ann import (
+        graph_beam_search_interactive,
     )
-    path_mode = graph_beam_search_interactive(
-        queries,
-        edges,
-        emb_df,
-        beam=6,
-        rounds=5,
-        emb_path=emb_path,
-        edges_path=edges_path,
-    )
-    a = sorted(map(tuple, df_mode.collect()))
-    b = sorted(map(tuple, path_mode.collect()))
-    assert a == b and len(a) > 0
-    # scan-backed query block: the collected request rows round-trip
-    # through a real parquet scan instead of a local relation
+
+    emb_df, edges, queries, paths = _toy_artifacts(spark, tmp_path)
+    bsp = graph_beam_search(queries, edges, emb_df, beam=6, rounds=5)
+    bsp = sorted(map(tuple, bsp.collect()))
+    assert len(bsp) > 0
+    q_path = str(tmp_path / "queries.parquet")
+    queries.write.parquet(q_path)
+    for block in (queries, spark.read.parquet(q_path)):
+        inter = graph_beam_search_interactive(
+            block, edges, emb_df, beam=6, rounds=5, **paths
+        )
+        assert sorted(map(tuple, inter.collect())) == bsp
+
+
+def test_interactive_kernel_path_mode_matches_df_mode(spark, tmp_path, monkeypatch):
+    """Path mode (the kernel loading the published artifacts) and
+    DataFrame mode (the size guard's BSP fallback over the frames it is
+    handed) must return the same frame for a scan-fed request block."""
+    from vectordbfaiss_spark.operators import graph_ann
+
+    emb_df, edges, queries, paths = _toy_artifacts(spark, tmp_path)
     q_path = str(tmp_path / "queries.parquet")
     queries.write.parquet(q_path)
     q_scan = spark.read.parquet(q_path)
-    scan_fed = graph_beam_search_interactive(
-        q_scan,
-        edges,
-        emb_df,
-        beam=6,
-        rounds=5,
-        emb_path=emb_path,
-        edges_path=edges_path,
+    path_mode = graph_ann.graph_beam_search_interactive(
+        q_scan, edges, emb_df, beam=6, rounds=5, **paths
     )
-    c = sorted(map(tuple, scan_fed.collect()))
-    assert c == a
+    path_mode = sorted(map(tuple, path_mode.collect()))
+    monkeypatch.setattr(graph_ann, "_KERNEL_MAX_BYTES", 0)
+    df_mode = graph_ann.graph_beam_search_interactive(
+        q_scan, edges, emb_df, beam=6, rounds=5, **paths
+    )
+    assert sorted(map(tuple, df_mode.collect())) == path_mode and len(path_mode) > 0
+
+
+def test_interactive_kernel_size_guard(spark, tmp_path, monkeypatch):
+    """Under the size bound the whole traversal is one kernel job; above
+    it (bound forced to 0) the BSP fallback serves the same frame."""
+    from vectordbfaiss_spark.operators import graph_ann
+
+    emb_df, edges, queries, paths = _toy_artifacts(spark, tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("kernel-size-guard", "kernel under the bound")
+    try:
+        kernel = graph_ann.graph_beam_search_interactive(
+            queries, edges, emb_df, beam=6, rounds=5, **paths
+        )
+        kernel = sorted(map(tuple, kernel.collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the request-block collect, then the one kernel job
+    assert len(sc.statusTracker().getJobIdsForGroup("kernel-size-guard")) == 2
+    monkeypatch.setattr(graph_ann, "_KERNEL_MAX_BYTES", 0)
+    fallback = graph_ann.graph_beam_search_interactive(
+        queries, edges, emb_df, beam=6, rounds=5, **paths
+    )
+    assert sorted(map(tuple, fallback.collect())) == kernel and len(kernel) > 0

@@ -41,3 +41,17 @@ def test_ladder_record_on_two_rungs(spark, tmp_path):
         "q3_shipping_priority_again.txt",
         "q3_shipping_priority_base.txt",
     ]
+
+
+def test_plan_histogram_reads_the_plan_that_ran(spark):
+    """The histogram is taken from the executed query's final adaptive
+    plan: AQE turns neardup_triangle_count's sort-merge joins into
+    broadcasts at runtime, and the graph kernel shows as a MapInArrow."""
+    from vectordbfaiss_spark import registry
+
+    q = registry.queries()
+    rows, hist = ladder.plan_histogram(q["neardup_triangle_count"](spark, SF_SMOKE))
+    assert rows > 0
+    assert "SortMergeJoin" not in hist and hist["BroadcastHashJoin"] >= 1
+    rows, hist = ladder.plan_histogram(q["graph_ann_topk_search"](spark, SF_SMOKE))
+    assert rows > 0 and hist["MapInArrow"] == 1

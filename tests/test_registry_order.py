@@ -28,7 +28,10 @@ def test_priority_is_the_registry_prefix():
 # and PQ-codebook query now locating, keying and publishing its artifacts
 # through artifacts.py; the MinHash kernel shingling the text itself, the
 # k-center oracle's materialized CTEs, the compacted graph build's delta
-# segment published through the store) — each needs a fresh gate row
+# segment published through the store; the graph family's one
+# published-traversal helper, one delete witness and one query block, and
+# the interactive kernel's single size-guarded path) — each needs a fresh
+# gate row
 _CHANGED: tuple[str, ...] = (
     "ivf_recall_report",
     "ivf_recall_bound",

@@ -49,20 +49,27 @@ from perfbench.probe import LayerTracer  # noqa: E402
 _NODE = re.compile(r"^[\s:+\-*(]*(\d+\)\s*)?([A-Za-z][A-Za-z0-9]+)")
 
 
-def plan_histogram(df) -> dict[str, int]:
-    """Operator-name histogram of the executed plan, normalized: expression
-    ids, paths, and stats vary across SFs — the NODE MIX is the shape."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def plan_histogram(df) -> tuple[int, dict[str, int]]:
+    """``(rows, histogram)``: run ``df``'s own QueryExecution (rows are
+    counted in the JVM) and histogram the plan that ran — AQE's final
+    plan, so joins it turned into broadcasts at runtime count as such.
+    Operator names only: expression ids, paths and stats vary across
+    SFs, the NODE MIX is the shape."""
+    qe = df._jdf.queryExecution()
+    rows = qe.toRdd().count()
+    plan = qe.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan, once executed
     keep = (
         "Scan", "Filter", "Project", "HashAggregate", "SortAggregate",
         "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
         "BroadcastNestedLoopJoin", "CartesianProduct", "Exchange",
         "BroadcastExchange", "Sort", "Window", "WindowGroupLimit",
         "TakeOrderedAndProject", "Expand", "Generate", "MapInPandas",
-        "ArrowEvalPython", "Union", "LocalLimit", "GlobalLimit",
+        "MapInArrow", "ArrowEvalPython", "Union", "LocalLimit", "GlobalLimit",
     )
     hist: Counter[str] = Counter()
-    for line in plan.splitlines():
+    for line in plan.toString().splitlines():
         m = _NODE.match(line)
         if not m:
             continue
@@ -71,7 +78,7 @@ def plan_histogram(df) -> dict[str, int]:
             if name == k or name.startswith(k):
                 hist[k] += 1
                 break
-    return dict(sorted(hist.items()))
+    return rows, dict(sorted(hist.items()))
 
 
 def run_ladder(
@@ -97,12 +104,8 @@ def run_ladder(
                 _, cold, _ = traced_run(tracer, spark, name, q[name], sf_dir)
                 drop_leaked_blocks(spark)
                 df, warm, _ = traced_run(tracer, spark, name, q[name], sf_dir)
-                result["runs"][key] = {
-                    "cold": cold,
-                    "warm": warm,
-                    "rows": df.count(),
-                    "plan": plan_histogram(df),
-                }
+                rows, plan = plan_histogram(df)
+                result["runs"][key] = {"cold": cold, "warm": warm, "rows": rows, "plan": plan}
                 if plans_dir:
                     os.makedirs(plans_dir, exist_ok=True)
                     with open(os.path.join(plans_dir, f"{name}_{rung}.txt"), "w") as fh:

@@ -319,16 +319,21 @@ def _seq_sum_cols(a):
 def _round_half_up6(raw):
     """Spark ``round(double, 6)``: HALF_UP on the decimal string
     representation (BigDecimal(Double.toString(d))), replicated with
-    ``decimal`` over ``repr``. Parity pinned by
+    ``decimal`` over ``repr``; NaN and +-Inf pass through unchanged, as
+    Spark's do (a zero-norm vector scores NaN). Parity pinned by
     test_round_half_up6_matches_spark."""
+    import math
+
     import numpy as np
     from decimal import ROUND_HALF_UP, Decimal
 
     q = Decimal("0.000001")
     return np.array(
         [
-            float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
-            for x in raw
+            float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+            if math.isfinite(x)
+            else x
+            for x in map(float, raw)
         ],
         dtype=np.float64,
     )
@@ -433,6 +438,43 @@ def _beam_search_visited(ids, mat, src, dst, q_ids, q_mat, beam, rounds, n_entri
 
 _VISITED_SCHEMA = "query_id long, vec_id long, score double"
 
+# Largest estimated index the request kernel may load into its one Python
+# worker. That worker lives outside the JVM heap, so no Spark memory
+# setting bounds or spills it, and it shares the host with the JVM and
+# every other task's worker. 1 GiB admits ~330k 64-d vectors at degree
+# 24, so the 200k-vector syn100 corpus that graph_serve_knobs is
+# calibrated on (estimate 616 MiB, measured peak-RSS growth 582 MiB)
+# still takes the one-job path; anything larger serves through the BSP
+# traversal, whose state stays distributed.
+_KERNEL_MAX_BYTES = 1 << 30
+
+
+def _kernel_index_bytes(emb_path: str, edges_path: str, vec_col: str):
+    """``(bytes, n_vectors)``: the kernel's estimated in-memory index,
+    read on the driver from the parquet footers of both artifacts (no
+    Spark job, no data page). The embedding column's leaf value count is
+    rows x dim. Per element the kernel holds the float32 Arrow column
+    and its float64 matrix (12 B); per vector the id arrays, the id->row
+    dict and the entry-sample keys (~160 B); per edge the id arrays and
+    the sorted adjacency (~96 B)."""
+    import pyarrow.dataset as ds
+
+    def footers(path):
+        return [f.metadata for f in ds.dataset(path, format="parquet").get_fragments()]
+
+    n_vec = n_elem = 0
+    for md in footers(emb_path):
+        n_vec += md.num_rows
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            n_elem += sum(
+                rg.column(c).num_values
+                for c in range(rg.num_columns)
+                if rg.column(c).path_in_schema.split(".")[0] == vec_col
+            )
+    n_edges = sum(md.num_rows for md in footers(edges_path))
+    return 12 * n_elem + 160 * n_vec + 96 * n_edges, n_vec
+
 
 def graph_beam_search_interactive(
     queries: DataFrame,
@@ -441,8 +483,9 @@ def graph_beam_search_interactive(
     beam: int = 24,
     rounds: int = 6,
     n_entries: int | None = None,
-    emb_path: str | None = None,
-    edges_path: str | None = None,
+    *,
+    emb_path: str,
+    edges_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -450,109 +493,80 @@ def graph_beam_search_interactive(
     algorithm (hash-sample entries, top-`beam` best-first expansion,
     fixed-point exit) producing a BIT-IDENTICAL visited frame (pinned by
     tests/test_graph_ann.py), with the ENTIRE traversal in ONE Spark
-    job — a per-request Arrow kernel (round 10; the round-9 form still
-    paid one job per round plus artifact pinning, ~12 scheduled actions
-    of mostly scheduler latency per request).
+    job — a per-request Arrow kernel instead of one job per round.
 
     Serving shape: ANN graph serving is RAM-resident by design (the
-    HNSW operating assumption) — a serving node loads the index once
-    and answers from memory. Here that is one ``mapInArrow`` task over
-    the Q-bounded query block that reads the published edge artifact
-    and the vector store (``edges_path`` / ``emb_path``, the traversal
-    columns only) straight from storage, replays all rounds in-kernel,
-    and emits the visited (query_id, vec_id, score) rows directly. The
-    kernel's scores are the doubles the BSP path's rounded JVM cosine
-    gives: it replays the same float64 operations in the same order (see
-    ``_beam_search_visited``), and tests/test_graph_ann.py compares the
-    two paths' full tuples, scores included. So no re-scoring join
-    follows the kernel. At 100 TB the index shard must fit the serving
-    node, which is the standard graph-ANN serving contract; for
-    corpus-sized query sets use :func:`graph_beam_search`, whose state
-    stays distributed.
+    HNSW operating assumption). Here that is one ``mapInArrow`` task
+    that reads the published edge artifact and vector store
+    (``edges_path`` / ``emb_path``, traversal columns only), replays
+    all rounds in-kernel for the collected Q-bounded query block, and
+    emits the visited (query_id, vec_id, score) rows. Its scores are the
+    doubles the BSP path's rounded JVM cosine gives (the same float64
+    operations in the same order, see ``_beam_search_visited``), so no
+    re-scoring join follows the kernel.
 
-    Without paths (tests, ad-hoc frames) the same kernel runs
-    driver-side on the collected frames — small-corpus mode only; every
-    registry caller passes the published artifact paths."""
-    spark = queries.sparkSession
-    if emb_path is not None and edges_path is not None:
-        import numpy as np
+    ``edges`` and ``emb`` are the same artifacts as frames (``emb``
+    with ``id_col``/``vec_col``). They feed the guard's fallback: when
+    the footers put the kernel's index above :data:`_KERNEL_MAX_BYTES`,
+    the traversal runs as :func:`graph_beam_search` on them instead,
+    whose state stays distributed."""
+    import numpy as np
 
-        _id, _vec, _beam, _rounds, _ne = id_col, vec_col, beam, rounds, n_entries
-        _emb_path, _edges_path = emb_path, edges_path
-        # collect the Q-bounded request block (the request-path contract)
-        # and ship it in the kernel closure over a 1-row range. Feeding
-        # the kernel through mapInArrow's own input was measured
-        # pathological whenever the query block is driver-local (a routed
-        # SQL literal, a hand-built request): the LocalTableScan /
-        # parallelized-RDD -> Python runner path cost ~5 s PER EXECUTION
-        # at Q=1, vs ~0.5 s for the range-fed form.
-        q_rows = queries.select("query_id", "query_vec").collect()
-        q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-        q_mat = (
-            np.array([[float(x) for x in r[1]] for r in q_rows])
-            if q_rows
-            else np.zeros((0, 0))
+    index_bytes, n_vec = _kernel_index_bytes(emb_path, edges_path, vec_col)
+    if n_entries is None:
+        n_entries = max(16, n_vec // 32)
+    if index_bytes > _KERNEL_MAX_BYTES:
+        return graph_beam_search(
+            queries,
+            edges,
+            emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+            beam=beam,
+            rounds=rounds,
+            n_entries=n_entries,
         )
 
-        def _run(batches):
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.parquet as pq
+    # collect the Q-bounded request block (the request-path contract)
+    # and ship it in the kernel closure over a 1-row range. Feeding
+    # the kernel through mapInArrow's own input was measured
+    # pathological whenever the query block is driver-local (a routed
+    # SQL literal, a hand-built request): the LocalTableScan /
+    # parallelized-RDD -> Python runner path cost ~5 s PER EXECUTION
+    # at Q=1, vs ~0.5 s for the range-fed form.
+    q_rows = queries.select("query_id", "query_vec").collect()
+    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    q_mat = (
+        np.array([[float(x) for x in r[1]] for r in q_rows])
+        if q_rows
+        else np.zeros((0, 0))
+    )
 
-            for _ in batches:
-                pass
-            if not len(q_ids):
-                return
-            et = pq.read_table(_emb_path, columns=[_id, _vec])
-            ids = et.column(_id).to_numpy(zero_copy_only=False).astype(np.int64)
-            mat = _list_col_to_mat(et.column(_vec))
-            gt = pq.read_table(_edges_path, columns=["src", "dst"])
-            src = gt.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-            dst = gt.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-            ne = _ne if _ne is not None else max(16, len(ids) // 32)
-            qarr, varr, sarr = _beam_search_visited(
-                ids, mat, src, dst, q_ids, q_mat, _beam, _rounds, ne
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qarr, pa.int64()),
-                    pa.array(varr, pa.int64()),
-                    pa.array(sarr, pa.float64()),
-                ],
-                ["query_id", "vec_id", "score"],
-            )
-
-        # single-partition 1-row driver: exactly ONE kernel task (a
-        # multi-partition input would run the closure once per task)
-        return spark.range(0, 1, 1, 1).mapInArrow(_run, _VISITED_SCHEMA)
-    else:
+    def _run(batches):
         import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        epdf = (
-            emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-            .toPandas()
-        )
-        gpdf = edges.select("src", "dst").toPandas()
-        qpdf = queries.select("query_id", "query_vec").toPandas()
-        ids = epdf["vec_id"].to_numpy(np.int64)
-        mat = np.stack([np.asarray(v, np.float64) for v in epdf["embedding"]])
-        ne = n_entries if n_entries is not None else max(16, len(ids) // 32)
+        for _ in batches:
+            pass
+        if not len(q_ids):
+            return
+        et = pq.read_table(emb_path, columns=[id_col, vec_col])
+        ids = et.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
+        mat = _list_col_to_mat(et.column(vec_col))
+        gt = pq.read_table(edges_path, columns=["src", "dst"])
+        src = gt.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
+        dst = gt.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
         qarr, varr, sarr = _beam_search_visited(
-            ids,
-            mat,
-            gpdf["src"].to_numpy(np.int64),
-            gpdf["dst"].to_numpy(np.int64),
-            qpdf["query_id"].to_numpy(np.int64),
-            np.stack([np.asarray(v, np.float64) for v in qpdf["query_vec"]])
-            if len(qpdf)
-            else np.zeros((0, 0)),
-            beam,
-            rounds,
-            ne,
+            ids, mat, src, dst, q_ids, q_mat, beam, rounds, n_entries
         )
-        import pandas as pd
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(qarr, pa.int64()),
+                pa.array(varr, pa.int64()),
+                pa.array(sarr, pa.float64()),
+            ],
+            ["query_id", "vec_id", "score"],
+        )
 
-        return spark.createDataFrame(
-            pd.DataFrame({"query_id": qarr, "vec_id": varr, "score": sarr}),
-            _VISITED_SCHEMA,
-        )
+    # single-partition 1-row driver: exactly ONE kernel task (a
+    # multi-partition input would run the closure once per task)
+    return queries.sparkSession.range(0, 1, 1, 1).mapInArrow(_run, _VISITED_SCHEMA)

@@ -23,6 +23,18 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from vectordbfaiss_spark import artifacts
 from vectordbfaiss_spark.operators.graph import connected_components
+from vectordbfaiss_spark.operators.graph_ann import (
+    graph_beam_search,
+    graph_beam_search_interactive,
+    hash_entry_pairs,
+    ivf_entry_pairs,
+)
+from vectordbfaiss_spark.operators.graph_ann_incremental import (
+    apply_tombstones,
+    compact_graph,
+    graph_index_append,
+    graph_insert_edges,
+)
 from vectordbfaiss_spark.operators.topk import score_topk_vectorized
 from vectordbfaiss_spark.registry import register
 from vectordbfaiss_spark.session import load_table
@@ -1201,16 +1213,11 @@ def _graph_ann_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(graph_ann_edges_published(spark, sf_dir))
 
 
-def _graph_ann_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 50).select(
+def _query_block(corpus: DataFrame, n: int = 50) -> DataFrame:
+    """The ANN family's canonical request block: the ``vec_id < n`` rows
+    of ``corpus`` as (query_id, query_vec)."""
+    return corpus.filter(F.col("vec_id") < n).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
-    return graph_beam_search(
-        queries, edges, emb, beam=_GRAPH_ANN_BEAM, rounds=_GRAPH_ANN_ROUNDS
     )
 
 
@@ -1220,8 +1227,6 @@ def _graph_family_params(sf_dir: str, **extra) -> dict:
     change to any of them (or a fixture regeneration) invalidates every
     downstream frame at once.
 
-    The frames are small (a beam traversal over the canonical query
-    set) and are written as two files each.
     Round 7 measured the cost of NOT sharing them: seven registry queries
     each re-ran a 10-round bulk-synchronous traversal, 75-114 s of bench
     wall at sf0.1 for identical results. `graph_ann_topk_search`
@@ -1243,19 +1248,36 @@ def _graph_family_params(sf_dir: str, **extra) -> dict:
     return params
 
 
-def graph_ann_visited_published(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical hash-entry traversal (queries vec_id<50, beam 24,
-    rounds 10, full published graph) as a build-once artifact — shared
-    by `graph_ann_recall_bound` and the beam-24 leg of
-    `graph_ann_beam_curve` (a per-query-independent traversal restricts
-    to any query subset by filter)."""
-    out = artifacts.path("graph_ann_visited", sf_dir)
+def _published_visited(
+    spark: SparkSession, sf_dir: str, kind: str, params: dict, compute
+) -> DataFrame:
+    """The ``kind`` traversal's visited frame as a build-once artifact:
+    ``compute()`` (the traversal) runs only when no complete artifact
+    with ``params`` is in place, and its query-bounded output is written
+    as two files."""
+    out = artifacts.path(kind, sf_dir)
     artifacts.publish(
-        out,
-        _graph_family_params(sf_dir, entries="hash"),
-        lambda tmp: _graph_ann_visited(spark, sf_dir).coalesce(2).write.parquet(tmp),
+        out, params, lambda tmp: compute().coalesce(2).write.parquet(tmp)
     )
     return spark.read.parquet(out)
+
+
+def graph_ann_visited_published(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The canonical hash-entry traversal (queries vec_id<50, beam
+    ``_GRAPH_ANN_BEAM``, rounds ``_GRAPH_ANN_ROUNDS``, full published
+    graph) as a build-once artifact — shared by `graph_ann_recall_bound`
+    and the beam-24 leg of `graph_ann_beam_curve` (a per-query-
+    independent traversal restricts to any query subset by filter)."""
+
+    def compute() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings")
+        edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
+        return graph_beam_search(
+            _query_block(emb), edges, emb, beam=_GRAPH_ANN_BEAM, rounds=_GRAPH_ANN_ROUNDS
+        )
+
+    params = _graph_family_params(sf_dir, entries="hash")
+    return _published_visited(spark, sf_dir, "graph_ann_visited", params, compute)
 
 
 def exact_top11(
@@ -1277,11 +1299,7 @@ def exact_top11(
     :func:`_exact_top10_without_self` is the ``exclude_self`` top-10."""
 
     def build(tmp: str) -> None:
-        queries = corpus.filter(F.col("vec_id") < 50).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-        score_topk_vectorized(queries, corpus, k=11).select(
+        score_topk_vectorized(_query_block(corpus), corpus, k=11).select(
             "query_id", "vec_id", "score", "rank"
         ).coalesce(2).write.parquet(tmp)
 
@@ -1382,17 +1400,10 @@ def q_graph_ann_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the BSP operator by test), because serving latency
     is exactly what that kernel exists for; the audit family's published
     frames keep the all-state-distributed BSP form."""
-    from vectordbfaiss_spark.operators.graph_ann import (
-        graph_beam_search_interactive,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     edges_path = graph_ann_edges_published(spark, sf_dir)
     visited = graph_beam_search_interactive(
-        queries,
+        _query_block(emb),
         spark.read.parquet(edges_path).select("src", "dst"),
         emb,
         beam=_GRAPH_ANN_BEAM,
@@ -1507,15 +1518,9 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeding starts the beam near the query, measured means >= the
     hash-entry form's)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _query_block(emb)
 
     def compute() -> DataFrame:
-        from vectordbfaiss_spark.operators.graph_ann import (
-            graph_beam_search,
-            ivf_entry_pairs,
-        )
         from vectordbfaiss_spark.plans.ivf import assign_clusters
 
         n = emb.count()
@@ -1538,15 +1543,15 @@ def q_graph_ann_ivf_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             entry_pairs=entries,
         )
 
-    out = artifacts.path("graph_ann_visited_ivf", sf_dir)
-    artifacts.publish(
-        out,
+    visited = _published_visited(
+        spark,
+        sf_dir,
+        "graph_ann_visited_ivf",
         _graph_family_params(
             sf_dir, entries="ivf", nprobe=2, cell_target=_SCALED_CELL_TARGET
         ),
-        lambda tmp: compute().coalesce(2).write.parquet(tmp),
+        compute,
     )
-    visited = spark.read.parquet(out)
     exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
     return _recall_bound(queries, exact, _visited_top10(visited), visited, min_hits=5)
 
@@ -1567,9 +1572,7 @@ def q_graph_ann_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001/0.01/0.1 with beam=24, rounds=10, entries=max(16, N/32)),
     so it fires on real traversal regressions, not fixture noise."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _query_block(emb)
     visited = graph_ann_visited_published(spark, sf_dir)
     exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
     return _recall_bound(queries, exact, _visited_top10(visited), visited, min_hits=5)
@@ -1601,19 +1604,9 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass)."""
     emb = load_table(spark, sf_dir, "embeddings")
     batch = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
-    queries = batch.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _query_block(batch)
 
     def compute() -> DataFrame:
-        from vectordbfaiss_spark.operators.graph_ann import (
-            graph_beam_search,
-            hash_entry_pairs,
-        )
-        from vectordbfaiss_spark.operators.graph_ann_incremental import (
-            graph_insert_edges,
-        )
-
         base_emb = emb.filter(F.col("vec_id") >= 50)
         base_edges = spark.read.parquet(
             graph_ann_edges_published(spark, sf_dir, subset_min_id=50)
@@ -1643,9 +1636,10 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             entry_pairs=entries,
         )
 
-    out = artifacts.path("graph_ann_visited_incr", sf_dir)
-    artifacts.publish(
-        out,
+    visited = _published_visited(
+        spark,
+        sf_dir,
+        "graph_ann_visited_incr",
         _graph_family_params(
             sf_dir,
             variant="incremental",
@@ -1654,14 +1648,72 @@ def q_graph_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             insert_k=_GRAPH_ANN_BUILD_K,
             subset_min_id=50,
         ),
-        lambda tmp: compute().coalesce(2).write.parquet(tmp),
+        compute,
     )
-    visited = spark.read.parquet(out)
     exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb))
     return _recall_bound(queries, exact, _visited_top10(visited), visited, min_hits=5)
 
 
 _DELETE_MOD = 40  # tombstone every 40th id (~2.5% of the corpus)
+
+
+def _tombstones(emb: DataFrame) -> DataFrame:
+    """The delete lifecycle's tombstoned ids: every ``_DELETE_MOD``-th."""
+    return emb.filter(F.col("vec_id") % _DELETE_MOD == 0).select("vec_id")
+
+
+def _delete_witness(
+    spark: SparkSession,
+    sf_dir: str,
+    emb: DataFrame,
+    kind: str,
+    params: dict,
+    serving,
+) -> DataFrame:
+    """The delete lifecycle's per-query witness ``(query_id,
+    no_deleted_hits, recall_ok)``. The surviving ``vec_id < 50`` block
+    beam-searches the edge frame ``serving(tombstones)`` against the
+    FULL store ``emb`` (deletes are logical), tombstoned ids excluded
+    from the entry seeds only; the visited frame is published as
+    ``kind`` with ``params``. ``no_deleted_hits``: no tombstoned id in
+    a query's top-10. ``recall_ok``: at least 5 of that top-10 are in
+    the exact top-10 over the survivors."""
+    tombstones = _tombstones(emb)
+    survivors = emb.filter(F.col("vec_id") % _DELETE_MOD != 0)
+    queries = _query_block(survivors)
+    visited = _published_visited(
+        spark,
+        sf_dir,
+        kind,
+        params,
+        lambda: graph_beam_search(
+            queries,
+            serving(tombstones),
+            emb,
+            beam=_GRAPH_ANN_BEAM,
+            rounds=_GRAPH_ANN_ROUNDS,
+            exclude_entry_ids=tombstones,
+        ),
+    )
+    approx = _visited_top10(visited).localCheckpoint(eager=True)
+    deleted_hits = (
+        approx.join(F.broadcast(tombstones), "vec_id", "left_semi")
+        .groupBy("query_id")
+        .agg(F.count("*").alias("n_del"))
+    )
+    exact = _exact_top10_without_self(
+        exact_top11(spark, sf_dir, survivors, "exact_top11_del", delete_mod=_DELETE_MOD)
+    )
+    return (
+        queries.select("query_id")
+        .join(F.broadcast(deleted_hits), "query_id", "left")
+        .join(F.broadcast(_hit_counts(exact, approx)), "query_id", "left")
+        .select(
+            "query_id",
+            (F.coalesce("n_del", F.lit(0)) == 0).alias("no_deleted_hits"),
+            (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
+        )
+    )
 
 _GRAPH_DELETE_ORACLE = f"""
 SELECT vec_id AS query_id, TRUE AS no_deleted_hits, TRUE AS recall_ok
@@ -1690,33 +1742,11 @@ def q_graph_ann_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op and ``no_deleted_hits`` now FAILS — round 7's form scored
     against a pre-filtered survivor frame, which made the bound
     insensitive to the operator it claimed to verify."""
-    from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
-    from vectordbfaiss_spark.operators.graph_ann_incremental import (
-        apply_tombstones,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    tombstones = emb.filter(F.col("vec_id") % _DELETE_MOD == 0).select("vec_id")
-    survivors = emb.filter(F.col("vec_id") % _DELETE_MOD != 0)
-    queries = survivors.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-    def compute() -> DataFrame:
-        edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
-        serving = apply_tombstones(edges, tombstones)
-        return graph_beam_search(
-            queries,
-            serving,
-            emb,
-            beam=_GRAPH_ANN_BEAM,
-            rounds=_GRAPH_ANN_ROUNDS,
-            exclude_entry_ids=tombstones,
-        )
-
-    out = artifacts.path("graph_ann_visited_del", sf_dir)
-    artifacts.publish(
-        out,
+    return _delete_witness(
+        spark,
+        sf_dir,
+        load_table(spark, sf_dir, "embeddings"),
+        "graph_ann_visited_del",
         _graph_family_params(
             sf_dir,
             variant="delete",
@@ -1724,26 +1754,9 @@ def q_graph_ann_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             delete_mod=_DELETE_MOD,
             store="full",
         ),
-        lambda tmp: compute().coalesce(2).write.parquet(tmp),
-    )
-    approx = _visited_top10(spark.read.parquet(out)).localCheckpoint(eager=True)
-    deleted_hits = (
-        approx.join(F.broadcast(tombstones), "vec_id", "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_del"))
-    )
-    exact = _exact_top10_without_self(
-        exact_top11(spark, sf_dir, survivors, "exact_top11_del", delete_mod=_DELETE_MOD)
-    )
-    return (
-        queries.select("query_id")
-        .join(F.broadcast(deleted_hits), "query_id", "left")
-        .join(F.broadcast(_hit_counts(exact, approx)), "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce("n_del", F.lit(0)) == 0).alias("no_deleted_hits"),
-            (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
-        )
+        lambda tombstones: apply_tombstones(
+            _graph_ann_edges(spark, sf_dir).select("src", "dst"), tombstones
+        ),
     )
 
 
@@ -1775,14 +1788,7 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     navigability; the inserted vectors stay first-class citizens), and
     ``degree_ok`` (max out-degree of the compacted artifact <= the
     publish cap — the growth bound compaction re-establishes)."""
-    from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
-
     emb = load_table(spark, sf_dir, "embeddings")
-    tombstones = emb.filter(F.col("vec_id") % _DELETE_MOD == 0).select("vec_id")
-    survivors = emb.filter(F.col("vec_id") % _DELETE_MOD != 0)
-    queries = survivors.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     params = _graph_family_params(
         sf_dir,
         variant="compact",
@@ -1795,11 +1801,6 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build_compacted(tmp: str) -> None:
-        from vectordbfaiss_spark.operators.graph_ann_incremental import (
-            compact_graph,
-            graph_index_append,
-        )
-
         base_path = graph_ann_edges_published(spark, sf_dir, subset_min_id=50)
         batch = emb.filter(F.col("vec_id") < 50).select("vec_id", "embedding")
         base_emb = emb.filter(F.col("vec_id") >= 50)
@@ -1827,55 +1828,25 @@ def q_graph_ann_compact_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             seg_root,
             tmp,
             degree_cap=_GRAPH_ANN_DEGREE_CAP,
-            tombstones=tombstones,
+            tombstones=_tombstones(emb),
         )
 
     compacted_path = artifacts.path("graph_ann_compacted", sf_dir)
     artifacts.publish(compacted_path, params, build_compacted)
     compacted = spark.read.parquet(compacted_path)
-
-    def compute_visited() -> DataFrame:
-        return graph_beam_search(
-            queries,
-            compacted.select("src", "dst"),
-            emb,
-            beam=_GRAPH_ANN_BEAM,
-            rounds=_GRAPH_ANN_ROUNDS,
-            exclude_entry_ids=tombstones,
-        )
-
-    out = artifacts.path("graph_ann_visited_compact", sf_dir)
-    artifacts.publish(
-        out,
-        params,
-        lambda tmp: compute_visited().coalesce(2).write.parquet(tmp),
-    )
-    approx = _visited_top10(spark.read.parquet(out)).localCheckpoint(eager=True)
-    deleted_hits = (
-        approx.join(F.broadcast(tombstones), "vec_id", "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_del"))
-    )
-    exact = _exact_top10_without_self(
-        exact_top11(spark, sf_dir, survivors, "exact_top11_del", delete_mod=_DELETE_MOD)
-    )
     degree_ok = (
         compacted.groupBy("src")
         .agg(F.count("*").alias("deg"))
         .agg((F.max("deg") <= F.lit(_GRAPH_ANN_DEGREE_CAP)).alias("degree_ok"))
     )
-    return (
-        queries.select("query_id")
-        .join(F.broadcast(deleted_hits), "query_id", "left")
-        .join(F.broadcast(_hit_counts(exact, approx)), "query_id", "left")
-        .crossJoin(F.broadcast(degree_ok))
-        .select(
-            "query_id",
-            (F.coalesce("n_del", F.lit(0)) == 0).alias("no_deleted_hits"),
-            (F.coalesce("n_hits", F.lit(0)) >= F.lit(5)).alias("recall_ok"),
-            "degree_ok",
-        )
-    )
+    return _delete_witness(
+        spark,
+        sf_dir,
+        emb,
+        "graph_ann_visited_compact",
+        params,
+        lambda _: compacted.select("src", "dst"),
+    ).crossJoin(F.broadcast(degree_ok))
 
 
 # wide leg MUST stay the serving beam: the curve's beam-24 traversal is
@@ -1900,38 +1871,34 @@ def q_graph_ann_beam_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     not below beam=4 minus noise slack 0.05: widening the beam must not
     LOSE recall, the regression a broken frontier introduces first)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _BEAM_CURVE_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    queries = _query_block(emb, _BEAM_CURVE_QUERIES)
     exact = _exact_top10_without_self(exact_top11(spark, sf_dir, emb)).filter(
         F.col("query_id") < _BEAM_CURVE_QUERIES
     )
 
-    def build_narrow(tmp: str) -> None:
-        from vectordbfaiss_spark.operators.graph_ann import graph_beam_search
-
+    def narrow() -> DataFrame:
         edges = _graph_ann_edges(spark, sf_dir).select("src", "dst")
-        graph_beam_search(
+        return graph_beam_search(
             queries, edges, emb, beam=_BEAM_CURVE_BEAMS[0], rounds=_GRAPH_ANN_ROUNDS
-        ).coalesce(2).write.parquet(tmp)
+        )
 
     # wide leg = the canonical shared traversal restricted to this
     # query prefix (per-query independence makes the filter exact);
     # narrow leg is its own published frame — round 7 ran BOTH searches
     # live on every bench pass (21.9 s at sf0.1)
-    narrow = artifacts.path(f"graph_ann_visited_beam{_BEAM_CURVE_BEAMS[0]}", sf_dir)
-    artifacts.publish(
-        narrow,
-        _graph_family_params(
-            sf_dir,
-            entries="hash",
-            beam=_BEAM_CURVE_BEAMS[0],
-            queries=f"vec_id<{_BEAM_CURVE_QUERIES}",
-        ),
-        build_narrow,
-    )
     visited_by_beam = {
-        _BEAM_CURVE_BEAMS[0]: spark.read.parquet(narrow),
+        _BEAM_CURVE_BEAMS[0]: _published_visited(
+            spark,
+            sf_dir,
+            f"graph_ann_visited_beam{_BEAM_CURVE_BEAMS[0]}",
+            _graph_family_params(
+                sf_dir,
+                entries="hash",
+                beam=_BEAM_CURVE_BEAMS[0],
+                queries=f"vec_id<{_BEAM_CURVE_QUERIES}",
+            ),
+            narrow,
+        ),
         _BEAM_CURVE_BEAMS[1]: graph_ann_visited_published(spark, sf_dir).filter(
             F.col("query_id") < _BEAM_CURVE_QUERIES
         ),

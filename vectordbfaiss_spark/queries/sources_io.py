@@ -378,14 +378,11 @@ def _canonical_block(spark: SparkSession, sf_dir: str):
     """The corpus, its canonical ``vec_id < 50`` query block, and the
     self-inclusive exact top-10 of that block (the ``rank <= 10`` view
     of the published truth, ``embedding_analysis.exact_top11``)."""
-    from vectordbfaiss_spark.queries.embedding_analysis import exact_top11
+    from vectordbfaiss_spark.queries.embedding_analysis import _query_block, exact_top11
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
     exact = exact_top11(spark, sf_dir, emb).filter(F.col("rank") <= 10)
-    return emb, queries, exact.select("query_id", "vec_id")
+    return emb, _query_block(emb), exact.select("query_id", "vec_id")
 
 
 @register("ivf_recall_report", rows_only=True)

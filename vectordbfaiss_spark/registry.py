@@ -93,7 +93,8 @@ _PRIORITY: tuple[str, ...] = (
     "ingest_index_build",
     # ---- changed queries (need fresh gate rows) ----
     # the ANN bound family reads one published exact truth (top-11 per
-    # corpus) through one witness helper
+    # corpus) through one witness helper; the graph family publishes its
+    # traversals through one helper and serves through one guarded kernel
     "ivf_recall_report",
     "ivf_recall_bound",
     "pq_recall_bound",

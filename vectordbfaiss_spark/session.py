@@ -17,6 +17,8 @@ import tempfile
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from vectordbfaiss_spark import artifacts
+
 # numpy >= 1.22 madvises MADV_HUGEPAGE for every allocation past ~4 MB.
 # On this container's VM a transparent-huge-page fault costs ~300 ms per
 # 2 MB (measured: a fresh 200 MB numpy buffer takes 35 s to first-touch
@@ -186,15 +188,26 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# Inferred table schemas by artifacts.corpus_fingerprint of the file:
+# inference is a Spark job (~100-170 ms at sf0.001-0.1), a read with a
+# schema runs none, and a file rewritten in place gets a new key.
+_SCHEMAS: dict = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver fixture table (TESTDATA.md load pattern).
 
+    The schema is inferred once per file version (:data:`_SCHEMAS`).
     ``events.ts`` is TIMESTAMP(NANOS) in parquet, surfaced as nanos-long via
     ``spark.sql.legacy.parquet.nanosAsLong``; convert to a microsecond
     timestamp (truncating, exactly what DuckDB does reading the same file).
     """
     _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = artifacts.corpus_fingerprint(path)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(_SCHEMAS[key]).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
